@@ -11,11 +11,12 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from parking_bigdata_spark import queries as Q
+from parking_bigdata_spark.queries.a_core import q1_pricing_summary
 
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query (TPC-H Q1-shaped pricing summary) on sf0.001."""
-    return Q.q1_pricing_summary(spark, "/root/testdata/sf0.001")
+    return q1_pricing_summary(spark, "/root/testdata/sf0.001")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

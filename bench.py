@@ -268,208 +268,13 @@ HEADLINE = [
 ]
 
 
-def _foreign_spark_drivers() -> list[str]:
-    """Other live Spark drivers / gate runs on this box (VERDICT r03
-    #6): two rounds running, in-bench outliers turned out to be
-    concurrency inflation from gate runs sharing the machine. Scan
-    /proc BEFORE our own JVM exists; anything matching a Spark driver
-    or a repo harness that owns one counts."""
-    import glob
-    # exclude the WHOLE ancestor chain, not just the parent: the build
-    # driver may invoke `sh -c '... python /path/bench.py'` through
-    # nested shells whose cmdline also ends in /bench.py — flagging an
-    # ancestor would stamp every driver run contended
-    me = {os.getpid()}
-    pid = os.getpid()
-    for _ in range(64):
-        try:
-            stat = open(f"/proc/{pid}/stat").read()
-            pid = int(stat.rsplit(")", 1)[1].split()[1])  # field 4: ppid
-        except (OSError, ValueError, IndexError):
-            break
-        if pid <= 1 or pid in me:
-            me.add(max(pid, 1))
-            break
-        me.add(pid)
-    hits = []
-    for p in glob.glob("/proc/[0-9]*/cmdline"):
-        try:
-            pid = int(p.split("/")[2])
-            if pid in me:
-                continue
-            argv = [a.decode("utf-8", "replace")
-                    for a in open(p, "rb").read().split(b"\0") if a]
-        except (OSError, ValueError):
-            continue
-        # EXACT argv-token matching only: substring scans false-positive
-        # on unrelated processes whose arguments merely mention these
-        # names (e.g. an orchestration prompt quoting "pytest")
-        spark_jvm = any(a == "org.apache.spark.deploy.SparkSubmit"
-                        or a == "pyspark-shell" for a in argv)
-        # the harness/pytest patterns only count when the process IS a
-        # python interpreter actually running that script — otherwise
-        # 'vim bench.py' / 'less bench.py' / a 'tail -f' on a gate log
-        # would stamp a genuinely solo run as contended (ADVICE r04)
-        argv0 = argv[0].rsplit("/", 1)[-1] if argv else ""
-        is_python = argv0.startswith(("python", "pypy")) or argv0 == "pytest"
-        harness = is_python and any(
-            a.endswith(("/driver_gate_local.py",
-                        "/gen_expected.py", "/check_expected.py",
-                        "/make_stress.py", "/bench.py"))
-            or a.rsplit("/", 1)[-1] in
-            ("driver_gate_local.py", "gen_expected.py",
-             "check_expected.py", "make_stress.py", "bench.py",
-             "pytest")
-            for a in argv)
-        pytest_mod = is_python and any(
-            argv[i] == "-m" and argv[i + 1] == "pytest"
-            for i in range(len(argv) - 1))
-        if spark_jvm or harness or pytest_mod:
-            cmd = " ".join(argv)
-            hits.append(f"pid {pid}: {cmd[:120]}")
-    return hits
-
-
-def _normalize(calibration: dict, prev: dict, timings: dict,
-               total: float, this_sf) -> dict | None:
-    """Build the `normalized` block for the bench record, or None when
-    no trustworthy comparison exists. Contract (VERDICT r08 #3 +
-    ADVICE r08): Spark walls are normalized by the SPARK probe ratio
-    only; the numpy ratio is published alongside; when the two ratios
-    diverge >1.5x the block carries probes_divergent=True and
-    normalized_wall_unreliable=True so the corrected number can never
-    be read as authoritative."""
-    pc = prev.get("calibration") or {}
-    # SAME-SF guard (code-review r08): the committed reference is
-    # the solo sf0.1 record — normalizing a smoke run at another
-    # SF against it would print an apples-to-oranges "normalized
-    # wall vs ref" in the exact output built to be trustworthy.
-    # Only the SPARK probe is REQUIRED on both sides (second review
-    # pass r09): it is the sole normalizer, so a run whose numpy GEMM
-    # failed must not silently lose the whole normalized block — the
-    # numpy ratio is an optional guard on either side.
-    if not (calibration.get("spark_hash_agg_sec")
-            and prev.get("sf") == this_sf
-            and pc.get("spark_hash_agg_sec")):
-        return None
-    r_spark = calibration["spark_hash_agg_sec"] / pc["spark_hash_agg_sec"]
-    r_numpy = (calibration["numpy_gemm_sec"] / pc["numpy_gemm_sec"]
-               if calibration.get("numpy_gemm_sec")
-               and pc.get("numpy_gemm_sec") else None)
-    speed_ratio = r_spark  # spark walls ← spark probe only
-    # the numpy probe's own intra-run spread (either side) gates its
-    # use in the divergence verdict (third review pass r09): a
-    # one-off least-contended numpy min would otherwise poison the
-    # cross-probe comparison in either direction
-    numpy_unstable = bool(
-        calibration.get("numpy_probe_spread", 1.0) > 1.5
-        or pc.get("numpy_probe_spread", 1.0) > 1.5)
-    divergent = bool(
-        r_numpy and not numpy_unstable
-        and max(r_spark, r_numpy) / min(r_spark, r_numpy) > 1.5)
-    # intra-probe spread (second review pass r09): the code's own
-    # comment says a large spread means host speed CHANGED during the
-    # bench — so a correction built on the probe MIN (the single
-    # least-contended moment) is suspect even when the two probes
-    # agree. Consult the published spread on BOTH sides.
-    spread_high = bool(
-        calibration.get("spark_probe_spread", 1.0) > 1.5
-        or pc.get("spark_probe_spread", 1.0) > 1.5)
-    shared = [q for q in timings if q in prev.get("queries", {})]
-    shared_now = sum(timings[q] for q in shared)
-    shared_ref = sum(prev["queries"][q] for q in shared)
-    normalized = {
-        "speed_ratio_vs_ref": round(speed_ratio, 3),
-        "normalizer": "spark_probe",
-        "speed_ratio_spark_probe": round(r_spark, 3),
-        "speed_ratio_numpy_probe": round(r_numpy, 3) if r_numpy else None,
-        "probes_divergent": divergent,
-        "numpy_probe_unstable": numpy_unstable,
-        "probe_spread_high": spread_high,
-        "normalized_wall": round(total / speed_ratio, 3),
-        "ref_wall": prev.get("value"),
-        "ref_n_queries": len(prev.get("queries", {})),
-        "shared_n": len(shared),
-        "shared_wall_now": round(shared_now, 3),
-        "shared_wall_ref": round(shared_ref, 3),
-        "shared_wall_now_normalized": round(shared_now / speed_ratio, 3),
-    }
-    if divergent or spread_high:
-        normalized["normalized_wall_unreliable"] = True
-    return normalized
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    # load-honesty gate (VERDICT r03 #6): bench numbers are only
-    # meaningful solo. When another Spark driver / gate / test run is
-    # alive the output is STAMPED "contended" (and the canonical
-    # BENCH_DETAIL.json sidecar is NOT overwritten) so an inflated run
-    # can never masquerade as solo; SPARK_GRAFT_BENCH_STRICT=1 turns
-    # the stamp into a refusal (exit 2) for local discipline. The
-    # default stays stamp-not-refuse so the build driver's per-round
-    # bench can never be lost to a stray process.
-    foreign = _foreign_spark_drivers()
-    if foreign:
-        print("# WARNING bench contended — other Spark drivers alive:",
-              file=sys.stderr)
-        for h in foreign:
-            print(f"#   {h}", file=sys.stderr)
-        if os.environ.get("SPARK_GRAFT_BENCH_STRICT"):
-            print("# refusing (SPARK_GRAFT_BENCH_STRICT=1)", file=sys.stderr)
-            sys.exit(2)
     spark = get_spark("bench")
     registry = Q.queries()
 
     # Warm up the JVM / parquet footer cache with a trivial action.
     spark.read.parquet(f"{sf_dir}/region.parquet").count()
-
-    # Machine-speed calibration (round 7, reworked round 9 per VERDICT
-    # r08 #3): identical code measured 216 s vs 307 s solo on the SAME
-    # day because the host slows over hours (proven by an A/B of the
-    # unchanged previous-round tree — VERIFICATION_r07.md). Two
-    # fixed-work probes give every record its own speed context: one
-    # pure-JVM Spark aggregate (codegen + 32-way parallelism) and one
-    # single-process numpy GEMM. The r08 driver window showed the two
-    # probes can DISAGREE (spark 1.60x vs numpy 1.24x — they measure
-    # different resources: JVM/thread-pool contention vs BLAS/memory
-    # bandwidth), so since round 9 each probe is sampled at THREE
-    # points across the bench (post-warmup / mid-loop / end), the
-    # record publishes per-probe min + spread, and normalization of
-    # Spark walls uses the SPARK probe only (the numpy probe stays as
-    # a guard for mapInPandas/GEMM paths).
-    probe_samples: dict[str, list[float]] = {"spark": [], "numpy": []}
-
-    def _run_probes() -> None:
-        # min-of-2 per sampling point: the first rep of a probe can
-        # pay one-time codegen/JIT compile (measured 0.77 s vs 0.19 s
-        # steady) — taking the min keeps each SAMPLE a host-speed
-        # reading, so the published spread measures host drift across
-        # the bench, not compiler warmup.
-        try:
-            import numpy as _np
-            import pyspark.sql.functions as _F
-            best = None
-            for _ in range(2):
-                t0 = time.perf_counter()
-                # pmod keeps the running sum far from long overflow
-                # (ANSI would abort on a raw 50M-hash sum)
-                spark.range(0, 50_000_000, 1, 32).agg(
-                    _F.sum(_F.pmod(_F.xxhash64("id"),
-                                   _F.lit(1024)))).collect()
-                best = min(best or 9e9, time.perf_counter() - t0)
-            probe_samples["spark"].append(best)
-            a = _np.ones((1024, 1024))
-            best = None
-            for _ in range(2):
-                t0 = time.perf_counter()
-                for _i in range(8):
-                    a = a @ a % 7 + 1.0
-                best = min(best or 9e9, time.perf_counter() - t0)
-            probe_samples["numpy"].append(best)
-        except Exception:  # noqa: BLE001 — calibration must never kill bench
-            pass
-
 
     # Steady-state warmup: execute every headline query once at the
     # smallest SF (untimed). The plans generate the same whole-stage
@@ -501,46 +306,24 @@ def main() -> None:
         print(f"# warmup incl. target-SF iteratives: "
               f"{time.perf_counter() - t0:.1f}s", file=sys.stderr)
 
-    # Drop caches persisted by warmup queries (several operators persist
-    # intermediates; leaked blocks from 59 queries distort later timings
-    # via heap pressure) and let each timed query pay for its own cache.
-    spark.catalog.clearCache()
-    # The fitted-forest memo is a driver-side Python dict that
-    # clearCache() cannot evict — the target-SF warmup above trained
-    # and cached the forest, so without a reset the timed forest query
-    # would measure scoring only and the training cube scan (the
-    # dominant cost) would vanish from the headline wall-clock. Since
-    # round 11 the reset happens before EVERY rep (_run_once below):
-    # rf_holdout_metrics is the only headline consumer, so this is
-    # timing-neutral for everything else while keeping its best-of-2
-    # re-run honest (a memo hit would time scoring only). The warmup
-    # still serves its codegen purpose: the re-trained forest is
-    # deterministic, so the scoring projection compiles to the
-    # identical whole-stage source and hits the Janino cache.
-    from parking_bigdata_spark.queries import a_stats as _a_stats
-
-    # De-noising (optimization round 11, VERDICT r10 #3 — the host
-    # shows random multi-second single-query spikes every round
-    # [probe_spread_high in most committed records], and the driver's
-    # top-5 PERF comparison keeps turning one spike into a false
-    # "regressed" row):
+    # De-noising (VERDICT r10 #3 — the host shows random multi-second
+    # single-query spikes):
     # 1. the execution ORDER is a seeded random permutation — a fixed
     #    registry order pins each query to the same host-moment slot
-    #    every round, correlating its noise round-over-round. The seed
+    #    every run, correlating its noise run-over-run. The seed
     #    (env SPARK_GRAFT_BENCH_SEED, else wall-clock derived) is
     #    printed in the record as "order_seed" so any run can be
     #    reproduced exactly.
     # 2. a query whose first rep exceeds SLOW_REP_SEC gets ONE re-run
     #    and publishes the min — a spike is a property of the host
-    #    moment, not the plan, and min-of-2 suppresses it at ~2%
-    #    added suite cost. The first-rep walls are kept in the detail
-    #    sidecar ("first_rep_sec") so the old single-rep methodology's
-    #    numbers remain available alongside.
+    #    moment, not the plan. The first-rep walls are kept in the
+    #    detail sidecar ("first_rep_sec"). The record's "reps" tag
+    #    names this methodology, so records are compared only with
+    #    records taken the same way.
     # Neither measure changes WHAT is computed: every rep re-runs the
-    # full query from the parquet inputs with caches cleared (incl.
-    # the rf forest memo — without that reset a second rep would time
-    # scoring only).
+    # full query from the parquet inputs with caches cleared.
     SLOW_REP_SEC = 2.0
+    REPS = "min2_over_2s"
     seed_raw = os.environ.get("SPARK_GRAFT_BENCH_SEED")
     try:
         order_seed = int(seed_raw) if seed_raw is not None else None
@@ -561,7 +344,6 @@ def main() -> None:
 
     def _run_once(name: str) -> float:
         spark.catalog.clearCache()
-        _a_stats._RF_HOLDOUT_CACHE.clear()
         t0 = time.perf_counter()
         df = registry[name](spark, sf_dir)
         # noop sink, not count(): count() lets Catalyst elide windows
@@ -573,98 +355,26 @@ def main() -> None:
 
     timings: dict[str, float] = {}
     first_rep: dict[str, float] = {}
-    _run_probes()  # sample 1: immediately before the timed loop
-    for i, name in enumerate(order):
-        if i == len(order) // 2:
-            _run_probes()  # sample 2: mid-loop (probe time untimed)
+    for name in order:
         t1 = _run_once(name)
         if t1 > SLOW_REP_SEC:
             first_rep[name] = t1
             t1 = min(t1, _run_once(name))
         timings[name] = t1
         print(f"# {name}: {timings[name]:.3f}s", file=sys.stderr)
-    _run_probes()  # sample 3: end of loop
 
     total = round(sum(timings.values()), 3)
-
-    # Per-probe min is the speed estimate (least-contended moment);
-    # spread = max/min over the 3 samples is the honesty signal — a
-    # large spread means the host speed CHANGED during the bench and
-    # any single correction factor is suspect.
-    calibration = {}
-    if probe_samples["spark"]:
-        calibration["spark_hash_agg_sec"] = round(
-            min(probe_samples["spark"]), 3)
-        calibration["spark_probe_spread"] = round(
-            max(probe_samples["spark"]) / min(probe_samples["spark"]), 3)
-        calibration["spark_probe_samples"] = [
-            round(s, 3) for s in probe_samples["spark"]]
-    if probe_samples["numpy"]:
-        calibration["numpy_gemm_sec"] = round(
-            min(probe_samples["numpy"]), 3)
-        calibration["numpy_probe_spread"] = round(
-            max(probe_samples["numpy"]) / min(probe_samples["numpy"]), 3)
-        calibration["numpy_probe_samples"] = [
-            round(s, 3) for s in probe_samples["numpy"]]
-
-    # Calibration APPLIED (VERDICT r07 #3, reworked r09 per VERDICT
-    # r08 #3 + ADVICE r08): normalize this wall against the previous
-    # committed record so a host-slowdown episode is self-diagnosing.
-    # HONEST-READING RULE: Spark walls are normalized by the SPARK
-    # probe ratio ONLY — the probes measure different resources, and
-    # the r08 window proved averaging them over-corrects when they
-    # disagree. The numpy ratio is still published as the guard for
-    # mapInPandas/GEMM-heavy paths. When the two ratios diverge by
-    # >1.5x (either direction), `probes_divergent` is set and
-    # `normalized_wall` carries an explicit `_unreliable` marker: read
-    # the RAW wall plus the per-probe ratios instead of trusting one
-    # corrected number. speed_ratio > 1 means THIS host-moment is
-    # slower than the reference run; normalized_wall =
-    # wall * probe_ref/probe_now expresses this round's work in
-    # reference-machine seconds.
-    normalized = None
-    here = os.path.dirname(os.path.abspath(__file__))
     sf_tag = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    this_sf = float(sf_tag) if sf_tag.replace(".", "").isdigit() else sf_tag
-    try:
-        with open(os.path.join(here, "BENCH_DETAIL.json")) as f:
-            prev = json.load(f)
-        normalized = _normalize(calibration, prev, timings, total, this_sf)
-        if normalized:
-            r_spark = normalized["speed_ratio_spark_probe"]
-            r_numpy = normalized["speed_ratio_numpy_probe"]
-            if normalized["probes_divergent"]:
-                flag = (" [UNRELIABLE: probes diverge "
-                        f"{r_spark:.2f}x vs {r_numpy:.2f}x — "
-                        "read raw wall]")
-            elif normalized.get("probe_spread_high"):
-                flag = (" [UNRELIABLE: probe spread >1.5x within a "
-                        "run — host speed changed mid-bench, read "
-                        "raw wall]")
-            else:
-                flag = ""
-            print(f"# calibration: spark probe "
-                  f"{normalized['speed_ratio_vs_ref']:.3f}x the "
-                  f"reference run's speed-context; normalized wall "
-                  f"{normalized['normalized_wall']}s{flag} vs ref "
-                  f"{prev.get('value')}s "
-                  f"({normalized['shared_n']} shared queries: "
-                  f"{normalized['shared_wall_now_normalized']}s "
-                  f"normalized vs {normalized['shared_wall_ref']}s)",
-                  file=sys.stderr)
-    except (OSError, json.JSONDecodeError, ZeroDivisionError, KeyError):
-        pass
-
-    sf_val = this_sf
+    sf_val = float(sf_tag) if sf_tag.replace(".", "").isdigit() else sf_tag
     # Full per-query detail goes to stderr and a sidecar file; the ONE
     # stdout JSON line stays compact (the driver captures a bounded tail
     # of stdout — an 83-entry dict pushed "value" out of the r01 capture
     # window and left "parsed": null). The compact line keeps the
     # contract keys and the 5 slowest queries.
     # record dicts in fixed HEADLINE order regardless of the shuffled
-    # execution order, so round-over-round BENCH_DETAIL diffs show
-    # value changes, not a fresh 232-key permutation; order_seed is
-    # the provenance of the actual execution order
+    # execution order, so run-over-run BENCH_DETAIL diffs show value
+    # changes, not a fresh 232-key permutation; order_seed is the
+    # provenance of the actual execution order
     detail = {
         "metric": "headline_queries_total_wall",
         "value": total,
@@ -672,24 +382,17 @@ def main() -> None:
         "queries": {k: timings[k] for k in HEADLINE},
         "sf": sf_val,
         "order_seed": order_seed,
+        "reps": REPS,
     }
     if first_rep:
-        # single-rep walls of the re-run (>SLOW_REP_SEC) queries — the
-        # pre-round-11 methodology's numbers, kept alongside the
-        # published min-of-2
+        # single-rep walls of the re-run (>SLOW_REP_SEC) queries, kept
+        # alongside the published min-of-2
         detail["first_rep_sec"] = {k: first_rep[k] for k in HEADLINE
                                    if k in first_rep}
-    if foreign:
-        detail["contended"] = foreign
-    if calibration:
-        detail["calibration"] = calibration
-    if normalized:
-        detail["normalized"] = normalized
     print(json.dumps(detail), file=sys.stderr)
-    # sidecar detail is the committed record of the driver's default
-    # tier — only overwrite it for SOLO sf0.1 runs, so neither a smoke
-    # at another SF nor a contended run can clobber canonical numbers
-    if sf_val == 0.1 and not foreign:
+    # sidecar detail is the committed record of the default sf0.1
+    # tier — a smoke at another SF must not clobber it
+    if sf_val == 0.1:
         try:
             here = os.path.dirname(os.path.abspath(__file__))
             with open(os.path.join(here, "BENCH_DETAIL.json"), "w") as f:
@@ -705,13 +408,8 @@ def main() -> None:
         "n_queries": len(timings),
         "sf": sf_val,
         "order_seed": order_seed,
+        "reps": REPS,
     }
-    if foreign:
-        compact["contended"] = True
-    if calibration:
-        compact["calibration"] = calibration
-    if normalized:
-        compact["normalized"] = normalized
     print(json.dumps(compact, separators=(",", ":")))
 
 

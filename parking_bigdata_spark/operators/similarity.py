@@ -120,8 +120,8 @@ def _cosine_score_udf(round_to: int):
                     # fast path runs, so a row's score cannot depend on
                     # which batch/group it landed in
                     q2, c2 = q1[None, :], c1[None, :]
-                    d1 = float(np.sqrt(np.einsum("ij,ij->i", q2, q2))
-                               * np.sqrt(np.einsum("ij,ij->i", c2, c2)))
+                    d1 = float((np.sqrt(np.einsum("ij,ij->i", q2, q2))
+                                * np.sqrt(np.einsum("ij,ij->i", c2, c2)))[0])
                     if d1 != 0.0:
                         dot1 = float(np.einsum("ij,ij->i", q2, c2)[0])
                         out[i] = float(np.round(dot1 / d1, round_to))

@@ -7,1868 +7,36 @@ Column names/aliases are kept identical on both sides (the driver's
 compare sorts columns by name before hashing). All floating aggregates
 are explicitly rounded so results are order-insensitive.
 
+Each submodule ends with one ``QUERIES = {name: (fn, oracle_sql)}``
+dict, keyed by the builder's ``__name__``; this package merges them
+into ``REGISTRY``. Adding a query means adding its entry to the
+``QUERIES`` of the module that defines its builder.
+
 Reference parity cites (R script = /root/reference/20210803_이승하.R) are
 in the wrapped operator docstrings under ``operators/``.
 """
 
-
 from __future__ import annotations
-
-import os
 
 from collections.abc import Callable
 
-import pandas as pd  # noqa: F401 — resolves pandas-UDF type hints under
-                     # postponed annotation evaluation
+from pyspark.sql import DataFrame, SparkSession
 
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
+from . import (a_core, a_scale_twins, a_stats, a_stats2, a_stats_ext, b_llm,
+               b_llm_ext, c_temporal, c_temporal_ext)
 
-from .. import oracles
-from ..io import clean_sentinel_numeric, load_table
-from ..operators import clean, features, ml, profile, stats, temporal
-from ..operators import dedup as dedup_ops
-from ..operators import trees as trees_ops
-from ..operators import similarity as sim_ops
-from ..operators import text as text_ops
+MODULES = (a_core, a_stats, a_stats2, a_stats_ext, a_scale_twins, b_llm,
+           b_llm_ext, c_temporal, c_temporal_ext)
 
-from itertools import combinations as _combos
-from .a_core import (  # noqa: E501,F401
-    RANK_STABILITY_SQL,
-    rank_stability_nations,
-    ABOVE_AVG_SQL,
-    ANOVA_SQL,
-    ANTI_JOIN_SQL,
-    BINNED_SQL,
-    CHEAPEST_SUPPLIER_SQL,
-    CHISQ_SQL,
-    CLEAN_SENTINEL_SQL,
-    CORR_SQL,
-    CORR_TEST_SQL,
-    CUSTDIST_SQL,
-    DECILES_SQL,
-    DESCRIBE_SQL,
-    DET_SAMPLE_SQL,
-    DISTINCT_PER_GROUP_SQL,
-    DISTINCT_SQL,
-    DQ_LINEITEM_SQL,
-    EVAL_SQL,
-    FK_ORPHANS_SQL,
-    FREQ_SQL,
-    FUZZY_NAMES_SQL,
-    HEAVY_HITTERS_SQL,
-    HISTOGRAM_SQL,
-    IDLE_RICH_SQL,
-    IMPUTE_CONST_SQL,
-    IMPUTE_GROUP_SQL,
-    IMPUTE_MEDIAN_SQL,
-    KRUSKAL_SQL,
-    LARGE_VOLUME_SQL,
-    LINREG_SQL,
-    MARKET_SHARE_SQL,
-    NULLSAFE_SQL,
-    OUTLIER_FENCES_SQL,
-    PIVOT_SQL,
-    PRIORITY_HISTORY_SQL,
-    Q1_SQL,
-    RATIO_SQL,
-    RELATIVE_RANK_SQL,
-    RESIDUAL_DIAG_SQL,
-    REVENUE_NATION_SQL,
-    ROLLUP_SQL,
-    SCD2_SQL,
-    SEMI_JOIN_SQL,
-    SETOP_EXCEPT_SQL,
-    SETOP_INTERSECT_SQL,
-    SHIPPING_PRIORITY_SQL,
-    SHIP_LATENCY_SQL,
-    SNAPSHOT_DIFF_SQL,
-    SOLE_LATE_SQL,
-    SPEARMAN_SQL,
-    SPLIT_SQL,
-    SQL_TOP_NATIONS_SQL,
-    TOPK_SQL,
-    TTEST_SQL,
-    WEEKLY_WOW_SQL,
-    WEIGHTED_AVG_SQL,
-    ZSCORE_SQL,
-    _DESCRIBE_COLS,
-    acctbal_deciles,
-    acctbal_relative_rank,
-    active_suppliers,
-    anova_mktsegment,
-    binned_part_sizes,
-    cheapest_supplier_per_part,
-    chisq_status_priority,
-    clean_sentinel_cast,
-    corr_matrix,
-    corr_test,
-    custdist_order_counts,
-    customer_priority_history,
-    customer_value_ratios,
-    customers_without_urgent_orders,
-    describe_lineitem,
-    deterministic_sample_orders,
-    distinct_order_status,
-    distinct_per_group,
-    dq_lineitem_checks,
-    eval_metrics,
-    fk_orphan_counts,
-    freq_table,
-    fuzzy_part_names,
-    heavy_hitter_custkeys,
-    histogram_quantity,
-    idle_rich_customers,
-    impute_constant,
-    impute_group_mean,
-    impute_median,
-    kmeans_embeddings,
-    kruskal_acctbal_by_segment,
-    large_volume_customers,
-    lasso_path,
-    LATE_PRIORITY_SQL,
-    late_order_priority_counts,
-    LOCAL_SUPPLIER_SQL,
-    local_supplier_volume,
-    logreg_returnflag,
-    market_share_by_year,
-    mode_quantity_by_flag,
-    nullsafe_segment_match,
-    ols_normal_eq,
-    orders_above_customer_avg,
-    outlier_fences,
-    pca_explained_variance,
-    pca_projection,
-    pivot_status_by_priority,
-    q1_pricing_summary,
-    residual_diagnostics,
-    revenue_by_nation,
-    rf_feature_importance,
-    rollup_revenue,
-    scd2_user_event_state,
-    setop_lapsed_customers,
-    setop_repeat_customers,
-    ship_latency_by_priority,
-    SHIP_SPEED_SQL,
-    ship_speed_priority_mix,
-    shipping_priority,
-    simple_linreg,
-    SUPPLIER_COUNT_SQL,
-    supplier_count_by_part,
-    sketch_distinct_parts,
-    snapshot_diff_orders,
-    sole_late_supplier,
-    spearman_qty_price,
-    sql_top_nations_by_year,
-    stepwise_aic_selection,
-    stratified_split,
-    topk_orders_per_customer,
-    ttest_returnflag,
-    vif_scores,
-    weekly_revenue_wow,
-    weighted_avg_price,
-    zscore_by_segment,
-)
-from .a_stats import (  # noqa: E501,F401
-    BASKET_LIFT_SQL,
-    BENFORD_SQL,
-    BOOTSTRAP_SQL,
-    CHISQ_CELLS_SQL,
-    CV_METRICS_SQL,
-    DISCOUNTED_BUNDLES_SQL,
-    EXCESS_SHIP_SQL,
-    FORECAST_DELTA_SQL,
-    GENERALIZED_MEANS_SQL,
-    GINI_SQL,
-    GROUPED_LINREG_SQL,
-    HHI_SQL,
-    HUBER_SQL,
-    INFO_GAIN_SQL,
-    KM_SQL,
-    KNN_IMPUTE_SQL,
-    KS_SQL,
-    KS_APPROX_SQL,
-    LEVENE_SQL,
-    LOESS_SQL,
-    MAD_SQL,
-    MANNWHITNEY_SQL,
-    MERGE_UPSERT_SQL,
-    MICE_SQL,
-    MISS_PATTERNS_SQL,
-    MISS_PROFILE_SQL,
-    MODE_SQL,
-    NATION_TRADE_SQL,
-    NATION_VALUE_SHARE_SQL,
-    OLS_CATEGORICAL_SQL,
-    POISSON_RATE_SQL,
-    PROFIT_SQL,
-    PROMO_PCT_SQL,
-    PROP_ZTEST_SQL,
-    REPEATED_CV_SQL,
-    RETURNED_ITEMS_SQL,
-    RFM_SQL,
-    SCORE_HOLDOUT_SQL,
-    SMALL_QTY_SQL,
-    TOP_SUPPLIER_SQL,
-    TRIMMED_MEAN_SQL,
-    WEIGHTED_SAMPLE_SQL,
-    WINSORIZED_SQL,
-    _expected_sql,
-    bagged_trees_importance,
-    basket_brand_lift,
-    benford_order_totals,
-    bootstrap_ci_order_value,
-    chisq_cell_residuals,
-    cv_metrics_by_fold,
-    discounted_revenue_bundles,
-    excess_shipment_suppliers,
-    forecast_revenue_delta,
-    gbt_feature_importance,
-    generalized_means_by_flag,
-    gini_acctbal_by_segment,
-    grouped_linreg_by_flag,
-    hhi_supplier_concentration,
-    huber_lineitem,
-    info_gain_features,
-    kaplan_meier_retention,
-    knn_impute_labels,
-    ks_order_value_priority,
-    ks_approx_order_value_priority,
-    levene_acctbal_by_segment,
-    loess_qty_price,
-    mad_price_by_flag,
-    mannwhitney_order_value,
-    merge_upsert_orders,
-    mice_impute_chained,
-    missingness_patterns,
-    missingness_profile,
-    nation_trade_volume,
-    nation_value_share,
-    ols_categorical,
-    poisson_rate_ratio,
-    profit_by_nation_year,
-    promo_revenue_pct,
-    prop_ztest_order_status,
-    repeated_cv_metrics,
-    returned_item_customers,
-    rf_score_holdout,
-    rf_holdout_metrics,
-    RF_HOLDOUT_METRICS_SQL_TEMPLATE,
-    rfm_customer_segments,
-    ridge_lineitem,
-    score_holdout,
-    small_qty_order_revenue,
-    top_revenue_suppliers,
-    trimmed_mean_price,
-    weighted_sample_orders,
-    winsorized_price_stats,
-    trimmed_mean_price_pandas,
-)
-from .a_stats2 import (  # noqa: E501,F401
-    CALIBRATION_SQL,
-    CATALOG_PROFILE_SQL,
-    COCHRAN_ARMITAGE_SQL,
-    CONFORMAL_SQL,
-    COOKS_SQL,
-    DID_SQL,
-    GMM_SQL,
-    BOXCOX_SQL,
-    FISHER_SQL,
-    KENDALL_SQL,
-    PR_AUC_SQL,
-    PARTIAL_CORR_SQL,
-    BARTLETT_B_SQL,
-    CRONBACH_SQL,
-    HIGHER_MOMENTS_SQL,
-    KAPPA_SQL,
-    MAHALANOBIS_SQL,
-    CHOW_SQL,
-    EFFECT_SIZES_SQL,
-    GAMMA_MOM_SQL,
-    WILCOXON_SQL,
-    ORDINAL_ASSOC_SQL,
-    wilcoxon_signed_rank,
-    ordinal_assoc_qty_discount,
-    MCNEMAR_SQL,
-    QQ_DECILES_SQL,
-    THEIL_SQL,
-    TUKEY_SQL,
-    INCREMENTAL_AGG_SQL,
-    ISOTONIC_SQL,
-    K_ANON_SQL,
-    LAD_SQL,
-    LORENZ_SQL,
-    PARETO_SQL,
-    ROC_AUC_SQL,
-    TARGET_ENCODE_SQL,
-    WOE_IV_SQL,
-    boxcox_lambda_scan,
-    bartlett_acctbal_by_segment,
-    cohen_kappa_orders,
-    cooks_distance_outliers,
-    higher_moments_by_flag,
-    chow_test_by_flag,
-    effect_sizes_segments,
-    gamma_mom_fit,
-    mahalanobis_outliers,
-    mcnemar_orders,
-    qq_deciles_priority,
-    cronbach_alpha,
-    fisher_exact_2x2,
-    partial_corr_matrix,
-    theil_index_by_segment,
-    kendall_tau_qty_discount,
-    pr_auc_order_status,
-    tukey_hsd_segments,
-    calibration_order_status,
-    catalog_profile,
-    catalog_profile_approx,
-    catalog_profile_approx_detail,
-    CATALOG_PROFILE_APPROX_SQL,
-    cochran_armitage_trend,
-    conformal_interval_coverage,
-    diff_in_diff_revenue,
-    gmm_order_value,
-    incremental_agg_refresh,
-    isotonic_price_by_qty,
-    k_anonymity_audit,
-    lad_lineitem,
-    lorenz_curve_spend,
-    pareto_frontier_parts,
-    roc_auc_order_status,
-    target_encode_mktsegment,
-    woe_iv_mktsegment,
-)
-from .a_stats_ext import (  # noqa: E501,F401
-    COHENS_H_SQL,
-    cohens_h_priority,
-    DAGOSTINO_SQL,
-    DUNN_SQL,
-    JONCKHEERE_SQL,
-    LOGRANK_SQL,
-    AD_KSAMPLE_SQL,
-    AD_KSAMPLE_APPROX_SQL,
-    WHITE_TEST_SQL,
-    LDA_SQL,
-    ad_ksample_priority,
-    ad_ksample_approx_priority,
-    white_test_hetero,
-    lda_returnflag,
-    pcr_holdout,
-    QUANTILE_REG_SQL,
-    PIVOT_MULTI_SQL,
-    quantile_reg_90,
-    pivot_multi_metrics,
-    HOSMER_LEMESHOW_SQL,
-    HELLINGER_SQL,
-    hosmer_lemeshow_status,
-    hellinger_order_value,
-    DEMING_SQL,
-    EPI_2X2_SQL,
-    deming_regression,
-    epi_2x2_measures,
-    WEIGHTED_KAPPA_SQL,
-    weighted_kappa_orders,
-    GEHAN_SQL,
-    BRIER_DECOMP_SQL,
-    gehan_wilcoxon_churn,
-    brier_decomposition,
-    SIGN_TEST_SQL,
-    CMH_SQL,
-    sign_test_price,
-    cmh_orders,
-    ANOVA_EFFECT_SQL,
-    anova_effect_sizes,
-    HT_ESTIMATE_SQL,
-    MEDIAN_CI_SQL,
-    stratified_ht_estimate,
-    median_ci_order_value,
-    median_ci_approx_order_value,
-    median_ci_approx_order_value_detail,
-    MEDIAN_CI_APPROX_SQL,
-    LEVERAGE_SQL,
-    leverage_audit,
-    dagostino_k2_price,
-    dunn_posthoc_segments,
-    jonckheere_trend_qty,
-    logrank_churn_ab,
-)
-from .a_scale_twins import (  # noqa: E501,F401
-    DUNN_APPROX_SQL,
-    GINI_APPROX_SQL,
-    KRUSKAL_APPROX_SQL,
-    MANNWHITNEY_APPROX_SQL,
-    PR_AUC_APPROX_SQL,
-    ROC_AUC_APPROX_SQL,
-    SPEARMAN_APPROX_SQL,
-    WILCOXON_APPROX_SQL,
-    MAD_APPROX_SQL,
-    TRIMMED_MEAN_APPROX_SQL,
-    WINSORIZED_APPROX_SQL,
-    OUTLIER_FENCES_APPROX_SQL,
-    QUANTILE_SUMMARY_APPROX_SQL,
-    RFM_BOUNDS_APPROX_SQL,
-    FUNNEL_LATENCY_APPROX_SQL,
-    dunn_approx_segments,
-    funnel_latency_approx_quantiles,
-    funnel_latency_approx_quantiles_detail,
-    gini_approx_acctbal_by_segment,
-    kruskal_approx_acctbal_by_segment,
-    mad_approx_price_by_flag,
-    mad_approx_price_by_flag_detail,
-    mannwhitney_approx_order_value,
-    outlier_fences_approx,
-    outlier_fences_approx_detail,
-    pr_auc_approx_order_status,
-    quantile_summary_approx,
-    quantile_summary_approx_detail,
-    rfm_bounds_approx,
-    rfm_bounds_approx_detail,
-    roc_auc_approx_order_status,
-    spearman_approx_qty_price,
-    trimmed_mean_approx_price,
-    trimmed_mean_approx_price_detail,
-    wilcoxon_approx_signed_rank,
-    winsorized_approx_price_stats,
-    winsorized_approx_price_stats_detail,
-)
-from .b_llm import (  # noqa: E501,F401
-    CLUSTER_KEEP_BEST_SQL,
-    DECONTAM_BLOOM_SQL,
-    DSIR_SQL,
-    DUP_RATE_SQL,
-    FERTILITY_SQL,
-    BIGRAM_ENTROPY_SQL,
-    JS_DIVERGENCE_SQL,
-    NEAR_DUP_RATE_SQL,
-    near_dup_rate_by_source,
-    QUALITY_LIFT_SQL,
-    bigram_entropy_by_source,
-    js_divergence_by_source,
-    quality_lift_table,
-    VOCAB_OVERLAP_SQL,
-    dup_rate_by_source,
-    cluster_keep_best,
-    vocab_overlap_by_source,
-    quality_classifier_coeffs,
-    tokenizer_fertility_by_lang,
-    decontam_bloom,
-    dsir_importance_weights,
-    ANN_LSH_SQL,
-    BASKET_TRIPLES_SQL,
-    BFS_SQL,
-    BM25_SQL,
-    CAPPED_DOCS_SQL,
-    CHUNK_SQL,
-    CMS_SQL,
-    COLLOCATION_SQL,
-    COSINE_TOPK_SQL,
-    DECONTAM_SQL,
-    DEDUP_CLUSTERS_SQL,
-    DEDUP_EMBEDDING_SQL,
-    DEDUP_EXACT_SQL,
-    DEDUP_KEEP_BEST_SQL,
-    DOC_FINGERPRINT_SQL,
-    DUPLICATE_CHUNKS_SQL,
-    EMB_CENTROID_SQL,
-    EVENTS_WINDOW_SQL,
-    GOPHER_SQL,
-    HASHED_VECTORS_SQL,
-    HEAPS_SQL,
-    INVERTED_INDEX_SQL,
-    ITEM_COSINE_SQL,
-    KL_DIVERGENCE_SQL,
-    LENGTH_FILTER_SQL,
-    NAIVE_BAYES_SQL,
-    NGRAM_JACCARD_SQL,
-    PAGERANK_SQL,
-    PII_REDACTION_SQL,
-    PIPELINE_CLEAN_SQL,
-    PSI_DRIFT_SQL,
-    QUALITY_FUNNEL_SQL,
-    READABILITY_SQL,
-    SESSIONS_SQL,
-    SKETCH_TOPK_SQL,
-    STREAM_INTERVAL_JOIN_SQL,
-    STREAM_SESSION_WINDOWS_SQL,
-    STREAM_HOPPING_WINDOWS_SQL,
-    SURPRISAL_SQL,
-    TEXT_LANGID_SQL,
-    TEXT_QUALITY_SQL,
-    TEXT_REPETITION_SQL,
-    TFIDF_SQL,
-    TOKEN_COUNT_SQL,
-    TOKEN_ENTROPY_SQL,
-    TRIANGLE_SQL,
-    TRIGRAM_SIM_SQL,
-    YULE_K_SQL,
-    ZIPF_SQL,
-    ann_ivf,
-    ann_lsh,
-    basket_triples,
-    bfs_hops_brands,
-    bm25_scoring,
-    capped_docs_per_source,
-    chunk_documents,
-    cms_event_counts,
-    collocation_pmi,
-    cosine_topk,
-    decontam_overlap,
-    dedup_clusters,
-    dedup_embedding,
-    dedup_exact,
-    dedup_keep_best,
-    dedup_minhash,
-    dedup_simhash,
-    doc_fingerprint,
-    duplicate_chunks,
-    embedding_centroids,
-    events_sessions,
-    events_windowed,
-    gopher_quality_flags,
-    hashed_token_vectors,
-    heaps_law_fit,
-    inverted_index_sample,
-    item_cosine_similarity,
-    kl_divergence_by_source,
-    length_filter_by_lang,
-    lsa_singular_values,
-    multimodal_features,
-    naive_bayes_langid,
-    ngram_jaccard,
-    pagerank_suppliers,
-    pii_redaction,
-    pipeline_clean_corpus,
-    psi_drift_by_source,
-    quality_funnel_by_source,
-    semdedup_embeddings,
-    SKETCH_HLL_UNION_SQL,
-    sketch_hll_union,
-    sketch_top_event_types,
-    stream_interval_join_batch,
-    stream_session_windows_batch,
-    stream_hopping_windows_batch,
-    surprisal_by_source,
-    text_langid,
-    text_quality,
-    text_readability,
-    text_repetition,
-    tfidf_top_terms,
-    token_count,
-    token_entropy_by_source,
-    triangle_count_brands,
-    trigram_name_similarity,
-    winnow_overlap,
-    yule_k_by_source,
-    zipf_token_slope,
-)
-from .b_llm_ext import (  # noqa: E501,F401
-    GRAM_NOVELTY_SQL,
-    BOILERPLATE_PREFIX_SQL,
-    CHARSET_PROFILE_SQL,
-    TOKEN_PACKING_SQL,
-    gram_novelty_by_source,
-    boilerplate_prefix_by_source,
-    charset_profile_by_source,
-    token_packing_stats,
-    BIGRAM_PPL_SQL,
-    EMB_ISOTROPY_SQL,
-    VOCAB_COVERAGE_SQL,
-    bigram_ppl_by_source,
-    embedding_isotropy,
-    vocab_coverage_topk,
-    CROSS_SOURCE_DUP_SQL,
-    CHAR_ENTROPY_SQL,
-    cross_source_duplication,
-    char_entropy_by_source,
-    DEDUP_SAVINGS_SQL,
-    dedup_savings_by_source,
-    CONTAM_PROFILE_SQL,
-    contamination_profile,
-    LANGID_CONFUSION_SQL,
-    langid_confusion,
-    EFFECTIVE_RANK_SQL,
-    embedding_effective_rank,
-    SOURCE_JS_MATRIX_SQL,
-    LABEL_COHESION_SQL,
-    source_js_matrix,
-    label_cohesion_embeddings,
-    DEDUP_CURVE_SQL,
-    dedup_threshold_curve,
-    DUP_SIZE_HIST_SQL,
-    dup_cluster_size_histogram,
-    SOURCE_MIXTURE_SQL,
-    PADDING_WASTE_SQL,
-    SOURCE_DIVERSITY_SQL,
-    ANN_TRUNCATION_SQL,
-    source_mixture_weights,
-    padding_waste_by_bucket,
-    source_diversity,
-    ann_truncation_recall,
-    GRAM_NOVELTY_BLOOM_SQL,
-    DUPLICATE_CHUNKS_BLOOM_SQL,
-    gram_novelty_bloom_by_source,
-    duplicate_chunks_bloom,
-)
-from .c_temporal import (  # noqa: E501,F401
-    BINSEG_SQL,
-    DOW_STRENGTH_SQL,
-    HOLT_SQL,
-    FRIEDMAN_SQL,
-    LJUNG_BOX_SQL,
-    NEGBIN_MOM_SQL,
-    ljung_box_daily,
-    negbin_mom_daily,
-    PEAK_LOAD_SQL,
-    SEASONAL_NAIVE_SQL,
-    friedman_dow_test,
-    peak_load_window,
-    seasonal_naive_error_daily,
-    INTERVAL_COVERAGE_SQL,
-    changepoint_binseg_daily,
-    dow_seasonality_strength,
-    holt_linear_daily,
-    interval_union_coverage,
-    ACF_SQL,
-    ATTRIBUTION_SQL,
-    BOUNCE_SQL,
-    BURSTINESS_SQL,
-    COHORT_LTV_SQL,
-    COHORT_SQL,
-    CUBE_SQL,
-    CUMSUM_SQL,
-    CUPED_SQL,
-    CUSUM_SQL,
-    DECAYED_SQL,
-    DOW_HOUR_SQL,
-    EVENTS_ASOF_SQL,
-    EWMA_SQL,
-    FIRST_LAST_SQL,
-    FUNNEL_LATENCY_SQL,
-    FUNNEL_SQL,
-    GAPFILL_SQL,
-    GROUPING_SETS_SQL,
-    GRUBBS_SQL,
-    HARMONIC_SQL,
-    HOPPING_SQL,
-    JSON_SQL,
-    MANN_KENDALL_SQL,
-    MAX_CONCURRENT_SQL,
-    MELT_SQL,
-    MIX_SHIFT_SQL,
-    NELSON_AALEN_SQL,
-    OVERDISPERSION_SQL,
-    PATH_PATTERNS_SQL,
-    POISSON_GLM_SQL,
-    QUANTILE_SQL,
-    RANGE_JOIN_SQL,
-    ROBUST_OUTLIER_SQL,
-    ROLLING_ACTIVE_SQL,
-    ROLLING_SQL,
-    RUNS_TEST_SQL,
-    SEASONAL_SQL,
-    STREAKS_SQL,
-    THEILSEN_SQL,
-    TRAILING_7D_SQL,
-    TRANSITIONS_SQL,
-    VARIANT_SQL,
-    acf_daily_events,
-    burstiness_by_type,
-    cohort_ltv,
-    cohort_retention,
-    cube_revenue,
-    cuped_experiment_events,
-    customer_cumulative_spend,
-    cusum_changepoint_events,
-    daily_bounce_rate,
-    decayed_engagement,
-    event_transitions,
-    events_asof_purchase,
-    events_attribution_join,
-    events_dow_hour_heatmap,
-    events_gapfill_daily,
-    events_hopping_windows,
-    events_json_extract,
-    events_rolling_avg,
-    events_variant_extract,
-    ewma_smoothed_daily,
-    first_last_touch,
-    funnel_conversion,
-    funnel_latency_quantiles,
-    grouping_sets_revenue,
-    grubbs_daily_outlier,
-    harmonic_weekly_fit,
-    mann_kendall_daily,
-    max_concurrent_sessions,
-    melt_segment_metrics,
-    nelson_aalen_hazard,
-    orders_trailing_7d,
-    overdispersion_daily,
-    poisson_glm_daily,
-    priority_mix_shift,
-    quantile_summary,
-    range_join_value_bins,
-    robust_outlier_days,
-    rolling_active_users,
-    runs_test_daily,
-    seasonal_trend_events,
-    theilsen_daily_trend,
-    user_activity_streaks,
-    user_path_patterns,
-)
-from .c_temporal_ext import (  # noqa: E501,F401
-    NEWEY_WEST_SQL,
-    newey_west_trend,
-    AR2_SQL,
-    ar2_yule_walker_daily,
-    WEEKEND_LIFT_SQL,
-    weekend_lift_daily,
-    SESSION_LOGNORM_SQL,
-    session_lognormal_fit,
-    WAVELET_SQL,
-    wavelet_energy_daily,
-    PACF_SQL,
-    pacf_daily,
-    BREUSCH_GODFREY_SQL,
-    breusch_godfrey_daily,
-    SPECTRAL_ENTROPY_SQL,
-    spectral_entropy_daily,
-    ARCH_LM_SQL,
-    arch_lm_daily,
-    PSI_MONTHLY_SQL,
-    psi_monthly_orders,
-    RECORDS_SQL,
-    records_trend_daily,
-    SESSION_COOC_SQL,
-    session_event_cooccurrence,
-    HOURLY_ENTROPY_SQL,
-    hourly_entropy_by_type,
-    PURCHASE_CADENCE_SQL,
-    purchase_cadence,
-    KENDALLS_W_SQL,
-    kendalls_w_dow,
-    CONVERSION_DEPTH_SQL,
-    conversion_by_session_depth,
-    ESD_SQL,
-    generalized_esd_daily,
-    RETENTION_HL_SQL,
-    retention_half_life,
-    WILSON_CI_SQL,
-    wilson_ci_event_reach,
-    CCF_SQL,
-    GRANGER_SQL,
-    PETTITT_SQL,
-    PERIODOGRAM_SQL,
-    INTERARRIVAL_SQL,
-    ccf_count_value,
-    granger_count_to_value,
-    pettitt_changepoint_daily,
-    periodogram_daily,
-    interarrival_exp_ks,
-)
-
-
-
-# --------------------------------------------------------------------------
-# Registry
-# --------------------------------------------------------------------------
-
-REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] = {
-    "q1_pricing_summary": (q1_pricing_summary, Q1_SQL),
-    "clean_sentinel_cast": (clean_sentinel_cast, CLEAN_SENTINEL_SQL),
-    "distinct_order_status": (distinct_order_status, DISTINCT_SQL),
-    "distinct_per_group": (distinct_per_group, DISTINCT_PER_GROUP_SQL),
-    "freq_table": (freq_table, FREQ_SQL),
-    "histogram_quantity": (histogram_quantity, HISTOGRAM_SQL),
-    "describe_lineitem": (describe_lineitem, DESCRIBE_SQL),
-    "pivot_status_by_priority": (pivot_status_by_priority, PIVOT_SQL),
-    "binned_part_sizes": (binned_part_sizes, BINNED_SQL),
-    "customer_value_ratios": (customer_value_ratios, RATIO_SQL),
-    "revenue_by_nation": (revenue_by_nation, REVENUE_NATION_SQL),
-    "shipping_priority": (shipping_priority, SHIPPING_PRIORITY_SQL),
-    "customers_without_urgent_orders": (customers_without_urgent_orders,
-                                        ANTI_JOIN_SQL),
-    "active_suppliers": (active_suppliers, SEMI_JOIN_SQL),
-    "ship_latency_by_priority": (ship_latency_by_priority, SHIP_LATENCY_SQL),
-    "market_share_by_year": (market_share_by_year, MARKET_SHARE_SQL),
-    "weighted_avg_price": (weighted_avg_price, WEIGHTED_AVG_SQL),
-    "impute_constant": (impute_constant, IMPUTE_CONST_SQL),
-    "impute_median": (impute_median, IMPUTE_MEDIAN_SQL),
-    "impute_group_mean": (impute_group_mean, IMPUTE_GROUP_SQL),
-    "corr_matrix": (corr_matrix, CORR_SQL),
-    "ttest_returnflag": (ttest_returnflag, TTEST_SQL),
-    "anova_mktsegment": (anova_mktsegment, ANOVA_SQL),
-    "residual_diagnostics": (residual_diagnostics, RESIDUAL_DIAG_SQL),
-    "chisq_status_priority": (chisq_status_priority, CHISQ_SQL),
-    "zscore_by_segment": (zscore_by_segment, ZSCORE_SQL),
-    "stratified_split": (stratified_split, SPLIT_SQL),
-    "simple_linreg": (simple_linreg, LINREG_SQL),
-    "ols_normal_eq": (ols_normal_eq, oracles.normal_eq_sql(
-        ["l_quantity", "l_discount"], "l_extendedprice")),
-    "lasso_path": (lasso_path, _expected_sql("lasso_path")),
-    "stepwise_aic_selection": (stepwise_aic_selection, _expected_sql("stepwise_aic_selection")),
-    "rf_feature_importance": (rf_feature_importance,
-                              _expected_sql("rf_feature_importance")),
-    "corr_test": (corr_test, CORR_TEST_SQL),
-    "pca_explained_variance": (pca_explained_variance, _expected_sql("pca_explained_variance")),
-    "pca_projection": (pca_projection, _expected_sql("pca_projection")),
-    "eval_metrics": (eval_metrics, EVAL_SQL),
-    "topk_orders_per_customer": (topk_orders_per_customer, TOPK_SQL),
-    "rollup_revenue": (rollup_revenue, ROLLUP_SQL),
-    "vif_scores": (vif_scores, oracles.vif_sql(_DESCRIBE_COLS)),
-    "events_windowed": (events_windowed, EVENTS_WINDOW_SQL),
-    "events_sessions": (events_sessions, SESSIONS_SQL),
-    "stream_interval_join_batch": (stream_interval_join_batch,
-                                   STREAM_INTERVAL_JOIN_SQL),
-    "stream_session_windows_batch": (stream_session_windows_batch,
-                                     STREAM_SESSION_WINDOWS_SQL),
-    "stream_hopping_windows_batch": (stream_hopping_windows_batch,
-                                     STREAM_HOPPING_WINDOWS_SQL),
-    "dedup_exact": (dedup_exact, DEDUP_EXACT_SQL),
-    "dedup_minhash": (dedup_minhash, _expected_sql("dedup_minhash")),
-    "dedup_simhash": (dedup_simhash, _expected_sql("dedup_simhash")),
-    "ngram_jaccard": (ngram_jaccard, NGRAM_JACCARD_SQL),
-    "cosine_topk": (cosine_topk, COSINE_TOPK_SQL),
-    "ann_lsh": (ann_lsh, ANN_LSH_SQL),
-    "ann_ivf": (ann_ivf, _expected_sql("ann_ivf")),
-    "dedup_embedding": (dedup_embedding, DEDUP_EMBEDDING_SQL),
-    "text_langid": (text_langid, TEXT_LANGID_SQL),
-    "text_quality": (text_quality, TEXT_QUALITY_SQL),
-    "token_count": (token_count, TOKEN_COUNT_SQL),
-    "doc_fingerprint": (doc_fingerprint, DOC_FINGERPRINT_SQL),
-    "text_repetition": (text_repetition, TEXT_REPETITION_SQL),
-    "pii_redaction": (pii_redaction, PII_REDACTION_SQL),
-    "quality_funnel_by_source": (quality_funnel_by_source, QUALITY_FUNNEL_SQL),
-    "length_filter_by_lang": (length_filter_by_lang, LENGTH_FILTER_SQL),
-    "dedup_keep_best": (dedup_keep_best, DEDUP_KEEP_BEST_SQL),
-    "funnel_conversion": (funnel_conversion, FUNNEL_SQL),
-    "cohort_retention": (cohort_retention, COHORT_SQL),
-    "winnow_overlap": (winnow_overlap, _expected_sql("winnow_overlap")),
-    "pipeline_clean_corpus": (pipeline_clean_corpus, PIPELINE_CLEAN_SQL),
-    "sketch_distinct_parts": (sketch_distinct_parts, _expected_sql("sketch_distinct_parts")),
-    "events_asof_purchase": (events_asof_purchase, EVENTS_ASOF_SQL),
-    "quantile_summary": (quantile_summary, QUANTILE_SQL),
-    "cube_revenue": (cube_revenue, CUBE_SQL),
-    "melt_segment_metrics": (melt_segment_metrics, MELT_SQL),
-    "events_rolling_avg": (events_rolling_avg, ROLLING_SQL),
-    "customer_cumulative_spend": (customer_cumulative_spend, CUMSUM_SQL),
-    "events_json_extract": (events_json_extract, JSON_SQL),
-    "custdist_order_counts": (custdist_order_counts, CUSTDIST_SQL),
-    "large_volume_customers": (large_volume_customers, LARGE_VOLUME_SQL),
-    "late_order_priority_counts": (late_order_priority_counts,
-                                   LATE_PRIORITY_SQL),
-    "local_supplier_volume": (local_supplier_volume, LOCAL_SUPPLIER_SQL),
-    "ship_speed_priority_mix": (ship_speed_priority_mix, SHIP_SPEED_SQL),
-    "supplier_count_by_part": (supplier_count_by_part, SUPPLIER_COUNT_SQL),
-    "fisher_exact_2x2": (fisher_exact_2x2, FISHER_SQL),
-    "kendall_tau_qty_discount": (kendall_tau_qty_discount, KENDALL_SQL),
-    "tukey_hsd_segments": (tukey_hsd_segments, TUKEY_SQL),
-    "cooks_distance_outliers": (cooks_distance_outliers, COOKS_SQL),
-    "boxcox_lambda_scan": (boxcox_lambda_scan, BOXCOX_SQL),
-    "pr_auc_order_status": (pr_auc_order_status, PR_AUC_SQL),
-    "dsir_importance_weights": (dsir_importance_weights, DSIR_SQL),
-    "decontam_bloom": (decontam_bloom, DECONTAM_BLOOM_SQL),
-    "changepoint_binseg_daily": (changepoint_binseg_daily, BINSEG_SQL),
-    "partial_corr_matrix": (partial_corr_matrix, PARTIAL_CORR_SQL),
-    "cronbach_alpha": (cronbach_alpha, CRONBACH_SQL),
-    "cohen_kappa_orders": (cohen_kappa_orders, KAPPA_SQL),
-    "theil_index_by_segment": (theil_index_by_segment, THEIL_SQL),
-    "cluster_keep_best": (cluster_keep_best, CLUSTER_KEEP_BEST_SQL),
-    "holt_linear_daily": (holt_linear_daily, HOLT_SQL),
-    "interval_union_coverage": (interval_union_coverage,
-                                INTERVAL_COVERAGE_SQL),
-    "mcnemar_orders": (mcnemar_orders, MCNEMAR_SQL),
-    "tokenizer_fertility_by_lang": (tokenizer_fertility_by_lang,
-                                    FERTILITY_SQL),
-    "quality_classifier_coeffs": (quality_classifier_coeffs,
-                                  _expected_sql("quality_classifier_coeffs")),
-    "bartlett_acctbal_by_segment": (bartlett_acctbal_by_segment,
-                                    BARTLETT_B_SQL),
-    "higher_moments_by_flag": (higher_moments_by_flag,
-                               HIGHER_MOMENTS_SQL),
-    "mahalanobis_outliers": (mahalanobis_outliers, MAHALANOBIS_SQL),
-    "vocab_overlap_by_source": (vocab_overlap_by_source,
-                                VOCAB_OVERLAP_SQL),
-    "dow_seasonality_strength": (dow_seasonality_strength,
-                                 DOW_STRENGTH_SQL),
-    "qq_deciles_priority": (qq_deciles_priority, QQ_DECILES_SQL),
-    "seasonal_naive_error_daily": (seasonal_naive_error_daily,
-                                   SEASONAL_NAIVE_SQL),
-    "dup_rate_by_source": (dup_rate_by_source, DUP_RATE_SQL),
-    "chow_test_by_flag": (chow_test_by_flag, CHOW_SQL),
-    "quality_lift_table": (quality_lift_table, QUALITY_LIFT_SQL),
-    "peak_load_window": (peak_load_window, PEAK_LOAD_SQL),
-    "friedman_dow_test": (friedman_dow_test, FRIEDMAN_SQL),
-    "js_divergence_by_source": (js_divergence_by_source,
-                                JS_DIVERGENCE_SQL),
-    "effect_sizes_segments": (effect_sizes_segments, EFFECT_SIZES_SQL),
-    "bigram_entropy_by_source": (bigram_entropy_by_source,
-                                 BIGRAM_ENTROPY_SQL),
-    "gamma_mom_fit": (gamma_mom_fit, GAMMA_MOM_SQL),
-    "wilcoxon_signed_rank": (wilcoxon_signed_rank, WILCOXON_SQL),
-    "dagostino_k2_price": (dagostino_k2_price, DAGOSTINO_SQL),
-    "dunn_posthoc_segments": (dunn_posthoc_segments, DUNN_SQL),
-    "jonckheere_trend_qty": (jonckheere_trend_qty, JONCKHEERE_SQL),
-    "logrank_churn_ab": (logrank_churn_ab, LOGRANK_SQL),
-    "ad_ksample_priority": (ad_ksample_priority, AD_KSAMPLE_SQL),
-    "ad_ksample_approx_priority": (ad_ksample_approx_priority,
-                                   AD_KSAMPLE_APPROX_SQL),
-    "white_test_hetero": (white_test_hetero, WHITE_TEST_SQL),
-    "lda_returnflag": (lda_returnflag, LDA_SQL),
-    "ar2_yule_walker_daily": (ar2_yule_walker_daily, AR2_SQL),
-    "ordinal_assoc_qty_discount": (ordinal_assoc_qty_discount,
-                                   ORDINAL_ASSOC_SQL),
-    "ljung_box_daily": (ljung_box_daily, LJUNG_BOX_SQL),
-    "negbin_mom_daily": (negbin_mom_daily, NEGBIN_MOM_SQL),
-    "ccf_count_value": (ccf_count_value, CCF_SQL),
-    "granger_count_to_value": (granger_count_to_value, GRANGER_SQL),
-    "pettitt_changepoint_daily": (pettitt_changepoint_daily, PETTITT_SQL),
-    "periodogram_daily": (periodogram_daily, PERIODOGRAM_SQL),
-    "interarrival_exp_ks": (interarrival_exp_ks, INTERARRIVAL_SQL),
-    "near_dup_rate_by_source": (near_dup_rate_by_source,
-                                NEAR_DUP_RATE_SQL),
-    "gram_novelty_by_source": (gram_novelty_by_source, GRAM_NOVELTY_SQL),
-    "boilerplate_prefix_by_source": (boilerplate_prefix_by_source,
-                                     BOILERPLATE_PREFIX_SQL),
-    "charset_profile_by_source": (charset_profile_by_source,
-                                  CHARSET_PROFILE_SQL),
-    "token_packing_stats": (token_packing_stats, TOKEN_PACKING_SQL),
-    "source_mixture_weights": (source_mixture_weights, SOURCE_MIXTURE_SQL),
-    "padding_waste_by_bucket": (padding_waste_by_bucket,
-                                PADDING_WASTE_SQL),
-    "source_diversity": (source_diversity, SOURCE_DIVERSITY_SQL),
-    "ann_truncation_recall": (ann_truncation_recall, ANN_TRUNCATION_SQL),
-    "bigram_ppl_by_source": (bigram_ppl_by_source, BIGRAM_PPL_SQL),
-    "embedding_isotropy": (embedding_isotropy, EMB_ISOTROPY_SQL),
-    "vocab_coverage_topk": (vocab_coverage_topk, VOCAB_COVERAGE_SQL),
-    "weekend_lift_daily": (weekend_lift_daily, WEEKEND_LIFT_SQL),
-    "quantile_reg_90": (quantile_reg_90, QUANTILE_REG_SQL),
-    "pivot_multi_metrics": (pivot_multi_metrics, PIVOT_MULTI_SQL),
-    "cross_source_duplication": (cross_source_duplication,
-                                 CROSS_SOURCE_DUP_SQL),
-    "char_entropy_by_source": (char_entropy_by_source, CHAR_ENTROPY_SQL),
-    "session_lognormal_fit": (session_lognormal_fit, SESSION_LOGNORM_SQL),
-    "hosmer_lemeshow_status": (hosmer_lemeshow_status,
-                               HOSMER_LEMESHOW_SQL),
-    "hellinger_order_value": (hellinger_order_value, HELLINGER_SQL),
-    "wavelet_energy_daily": (wavelet_energy_daily, WAVELET_SQL),
-    "dedup_savings_by_source": (dedup_savings_by_source,
-                                DEDUP_SAVINGS_SQL),
-    "contamination_profile": (contamination_profile, CONTAM_PROFILE_SQL),
-    "pacf_daily": (pacf_daily, PACF_SQL),
-    "breusch_godfrey_daily": (breusch_godfrey_daily,
-                              BREUSCH_GODFREY_SQL),
-    "spectral_entropy_daily": (spectral_entropy_daily,
-                               SPECTRAL_ENTROPY_SQL),
-    "deming_regression": (deming_regression, DEMING_SQL),
-    "epi_2x2_measures": (epi_2x2_measures, EPI_2X2_SQL),
-    "arch_lm_daily": (arch_lm_daily, ARCH_LM_SQL),
-    "langid_confusion": (langid_confusion, LANGID_CONFUSION_SQL),
-    "weighted_kappa_orders": (weighted_kappa_orders, WEIGHTED_KAPPA_SQL),
-    "psi_monthly_orders": (psi_monthly_orders, PSI_MONTHLY_SQL),
-    "embedding_effective_rank": (embedding_effective_rank,
-                                 EFFECTIVE_RANK_SQL),
-    "gehan_wilcoxon_churn": (gehan_wilcoxon_churn, GEHAN_SQL),
-    "brier_decomposition": (brier_decomposition, BRIER_DECOMP_SQL),
-    "records_trend_daily": (records_trend_daily, RECORDS_SQL),
-    "source_js_matrix": (source_js_matrix, SOURCE_JS_MATRIX_SQL),
-    "label_cohesion_embeddings": (label_cohesion_embeddings,
-                                  LABEL_COHESION_SQL),
-    "sign_test_price": (sign_test_price, SIGN_TEST_SQL),
-    "cmh_orders": (cmh_orders, CMH_SQL),
-    "session_event_cooccurrence": (session_event_cooccurrence,
-                                   SESSION_COOC_SQL),
-    "rank_stability_nations": (rank_stability_nations,
-                               RANK_STABILITY_SQL),
-    "dedup_threshold_curve": (dedup_threshold_curve, DEDUP_CURVE_SQL),
-    "hourly_entropy_by_type": (hourly_entropy_by_type,
-                               HOURLY_ENTROPY_SQL),
-    "anova_effect_sizes": (anova_effect_sizes, ANOVA_EFFECT_SQL),
-    "dup_cluster_size_histogram": (dup_cluster_size_histogram,
-                                   DUP_SIZE_HIST_SQL),
-    "purchase_cadence": (purchase_cadence, PURCHASE_CADENCE_SQL),
-    "stratified_ht_estimate": (stratified_ht_estimate, HT_ESTIMATE_SQL),
-    "median_ci_order_value": (median_ci_order_value, MEDIAN_CI_SQL),
-    # r08 bound-as-oracle upgrade (VERDICT r07 #1): exact A159 audit
-    # columns + in-band booleans, DuckDB-hash-checked
-    "median_ci_approx_order_value": (median_ci_approx_order_value,
-                                     MEDIAN_CI_APPROX_SQL),
-    "kendalls_w_dow": (kendalls_w_dow, KENDALLS_W_SQL),
-    "conversion_by_session_depth": (conversion_by_session_depth,
-                                    CONVERSION_DEPTH_SQL),
-    "generalized_esd_daily": (generalized_esd_daily, ESD_SQL),
-    "leverage_audit": (leverage_audit, LEVERAGE_SQL),
-    "retention_half_life": (retention_half_life, RETENTION_HL_SQL),
-    "wilson_ci_event_reach": (wilson_ci_event_reach, WILSON_CI_SQL),
-    "cohens_h_priority": (cohens_h_priority, COHENS_H_SQL),
-    "newey_west_trend": (newey_west_trend, NEWEY_WEST_SQL),
-    "weekly_revenue_wow": (weekly_revenue_wow, WEEKLY_WOW_SQL),
-    "setop_repeat_customers": (setop_repeat_customers, SETOP_INTERSECT_SQL),
-    "setop_lapsed_customers": (setop_lapsed_customers, SETOP_EXCEPT_SQL),
-    "range_join_value_bins": (range_join_value_bins, RANGE_JOIN_SQL),
-    "events_gapfill_daily": (events_gapfill_daily, GAPFILL_SQL),
-    "tfidf_top_terms": (tfidf_top_terms, TFIDF_SQL),
-    "embedding_centroids": (embedding_centroids, EMB_CENTROID_SQL),
-    "events_hopping_windows": (events_hopping_windows, HOPPING_SQL),
-    "grouping_sets_revenue": (grouping_sets_revenue, GROUPING_SETS_SQL),
-    "multimodal_features": (multimodal_features, _expected_sql("multimodal_features")),
-    "orders_above_customer_avg": (orders_above_customer_avg, ABOVE_AVG_SQL),
-    "acctbal_deciles": (acctbal_deciles, DECILES_SQL),
-    "customer_priority_history": (customer_priority_history,
-                                  PRIORITY_HISTORY_SQL),
-    "kruskal_acctbal_by_segment": (kruskal_acctbal_by_segment, KRUSKAL_SQL),
-    "dedup_clusters": (dedup_clusters, DEDUP_CLUSTERS_SQL),
-    "decontam_overlap": (decontam_overlap, DECONTAM_SQL),
-    "collocation_pmi": (collocation_pmi, COLLOCATION_SQL),
-    "cheapest_supplier_per_part": (cheapest_supplier_per_part,
-                                   CHEAPEST_SUPPLIER_SQL),
-    "sole_late_supplier": (sole_late_supplier, SOLE_LATE_SQL),
-    "idle_rich_customers": (idle_rich_customers, IDLE_RICH_SQL),
-    "orders_trailing_7d": (orders_trailing_7d, TRAILING_7D_SQL),
-    "outlier_fences": (outlier_fences, OUTLIER_FENCES_SQL),
-    "fuzzy_part_names": (fuzzy_part_names, FUZZY_NAMES_SQL),
-    "logreg_returnflag": (logreg_returnflag, _expected_sql("logreg_returnflag")),
-    "kmeans_embeddings": (kmeans_embeddings, _expected_sql("kmeans_embeddings")),
-    "events_attribution_join": (events_attribution_join, ATTRIBUTION_SQL),
-    "nullsafe_segment_match": (nullsafe_segment_match, NULLSAFE_SQL),
-    "dq_lineitem_checks": (dq_lineitem_checks, DQ_LINEITEM_SQL),
-    "fk_orphan_counts": (fk_orphan_counts, FK_ORPHANS_SQL),
-    "sql_top_nations_by_year": (sql_top_nations_by_year, SQL_TOP_NATIONS_SQL),
-    "token_entropy_by_source": (token_entropy_by_source, TOKEN_ENTROPY_SQL),
-    "acctbal_relative_rank": (acctbal_relative_rank, RELATIVE_RANK_SQL),
-    "heavy_hitter_custkeys": (heavy_hitter_custkeys, HEAVY_HITTERS_SQL),
-    "psi_drift_by_source": (psi_drift_by_source, PSI_DRIFT_SQL),
-    "spearman_qty_price": (spearman_qty_price, SPEARMAN_SQL),
-    "deterministic_sample_orders": (deterministic_sample_orders, DET_SAMPLE_SQL),
-    "snapshot_diff_orders": (snapshot_diff_orders, SNAPSHOT_DIFF_SQL),
-    "scd2_user_event_state": (scd2_user_event_state, SCD2_SQL),
-    "ridge_lineitem": (ridge_lineitem, oracles.normal_eq_sql(
-        ["l_quantity", "l_discount", "l_tax"], "l_extendedprice",
-        lam=10.0)),
-    "decayed_engagement": (decayed_engagement, DECAYED_SQL),
-    "mode_quantity_by_flag": (mode_quantity_by_flag, MODE_SQL),
-    "mad_price_by_flag": (mad_price_by_flag, MAD_SQL),
-    "pagerank_suppliers": (pagerank_suppliers, PAGERANK_SQL),
-    "trimmed_mean_price": (trimmed_mean_price, TRIMMED_MEAN_SQL),
-    "chunk_documents": (chunk_documents, CHUNK_SQL),
-    "surprisal_by_source": (surprisal_by_source, SURPRISAL_SQL),
-    "capped_docs_per_source": (capped_docs_per_source, CAPPED_DOCS_SQL),
-    "events_variant_extract": (events_variant_extract, VARIANT_SQL),
-    "forecast_revenue_delta": (forecast_revenue_delta, FORECAST_DELTA_SQL),
-    "nation_trade_volume": (nation_trade_volume, NATION_TRADE_SQL),
-    "profit_by_nation_year": (profit_by_nation_year, PROFIT_SQL),
-    "returned_item_customers": (returned_item_customers, RETURNED_ITEMS_SQL),
-    "nation_value_share": (nation_value_share, NATION_VALUE_SHARE_SQL),
-    "promo_revenue_pct": (promo_revenue_pct, PROMO_PCT_SQL),
-    "small_qty_order_revenue": (small_qty_order_revenue, SMALL_QTY_SQL),
-    "discounted_revenue_bundles": (discounted_revenue_bundles,
-                                   DISCOUNTED_BUNDLES_SQL),
-    "excess_shipment_suppliers": (excess_shipment_suppliers, EXCESS_SHIP_SQL),
-    "sketch_hll_union": (sketch_hll_union, SKETCH_HLL_UNION_SQL),
-    "user_activity_streaks": (user_activity_streaks, STREAKS_SQL),
-    "first_last_touch": (first_last_touch, FIRST_LAST_SQL),
-    "merge_upsert_orders": (merge_upsert_orders, MERGE_UPSERT_SQL),
-    "levene_acctbal_by_segment": (levene_acctbal_by_segment, LEVENE_SQL),
-    "mannwhitney_order_value": (mannwhitney_order_value, MANNWHITNEY_SQL),
-    "seasonal_trend_events": (seasonal_trend_events, SEASONAL_SQL),
-    "rolling_active_users": (rolling_active_users, ROLLING_ACTIVE_SQL),
-    "cuped_experiment_events": (cuped_experiment_events, CUPED_SQL),
-    "hhi_supplier_concentration": (hhi_supplier_concentration, HHI_SQL),
-    "benford_order_totals": (benford_order_totals, BENFORD_SQL),
-    "acf_daily_events": (acf_daily_events, ACF_SQL),
-    "event_transitions": (event_transitions, TRANSITIONS_SQL),
-    "basket_brand_lift": (basket_brand_lift, BASKET_LIFT_SQL),
-    "gini_acctbal_by_segment": (gini_acctbal_by_segment, GINI_SQL),
-    "cusum_changepoint_events": (cusum_changepoint_events, CUSUM_SQL),
-    "zipf_token_slope": (zipf_token_slope, ZIPF_SQL),
-    "ks_order_value_priority": (ks_order_value_priority, KS_SQL),
-    "ks_approx_order_value_priority": (ks_approx_order_value_priority,
-                                       KS_APPROX_SQL),
-    "rfm_customer_segments": (rfm_customer_segments, RFM_SQL),
-    "text_readability": (text_readability, READABILITY_SQL),
-    "ewma_smoothed_daily": (ewma_smoothed_daily, EWMA_SQL),
-    "kaplan_meier_retention": (kaplan_meier_retention, KM_SQL),
-    "bootstrap_ci_order_value": (bootstrap_ci_order_value, BOOTSTRAP_SQL),
-    "user_path_patterns": (user_path_patterns, PATH_PATTERNS_SQL),
-    "prop_ztest_order_status": (prop_ztest_order_status, PROP_ZTEST_SQL),
-    "info_gain_features": (info_gain_features, INFO_GAIN_SQL),
-    "sketch_top_event_types": (sketch_top_event_types, SKETCH_TOPK_SQL),
-    "chisq_cell_residuals": (chisq_cell_residuals, CHISQ_CELLS_SQL),
-    "weighted_sample_orders": (weighted_sample_orders, WEIGHTED_SAMPLE_SQL),
-    "inverted_index_sample": (inverted_index_sample, INVERTED_INDEX_SQL),
-    "grouped_linreg_by_flag": (grouped_linreg_by_flag, GROUPED_LINREG_SQL),
-    "generalized_means_by_flag": (generalized_means_by_flag,
-                                  GENERALIZED_MEANS_SQL),
-    "events_dow_hour_heatmap": (events_dow_hour_heatmap, DOW_HOUR_SQL),
-    "priority_mix_shift": (priority_mix_shift, MIX_SHIFT_SQL),
-    "cv_metrics_by_fold": (cv_metrics_by_fold, CV_METRICS_SQL),
-    "score_holdout": (score_holdout, SCORE_HOLDOUT_SQL),
-    "rf_score_holdout": (rf_score_holdout,
-                         _expected_sql("rf_score_holdout")),
-    "rf_holdout_metrics": (rf_holdout_metrics,
-                           RF_HOLDOUT_METRICS_SQL_TEMPLATE.format(
-                               expected=_expected_sql("rf_score_holdout"))),
-    "gbt_feature_importance": (gbt_feature_importance,
-                               _expected_sql("gbt_feature_importance")),
-    "knn_impute_labels": (knn_impute_labels, KNN_IMPUTE_SQL),
-    "repeated_cv_metrics": (repeated_cv_metrics, REPEATED_CV_SQL),
-    "ols_categorical": (ols_categorical, OLS_CATEGORICAL_SQL),
-    "top_revenue_suppliers": (top_revenue_suppliers, TOP_SUPPLIER_SQL),
-    "winsorized_price_stats": (winsorized_price_stats, WINSORIZED_SQL),
-    "loess_qty_price": (loess_qty_price, LOESS_SQL),
-    "mice_impute_chained": (mice_impute_chained, MICE_SQL),
-    "bagged_trees_importance": (bagged_trees_importance,
-                                _expected_sql("bagged_trees_importance")),
-    "missingness_profile": (missingness_profile, MISS_PROFILE_SQL),
-    "missingness_patterns": (missingness_patterns, MISS_PATTERNS_SQL),
-    "hashed_token_vectors": (hashed_token_vectors, HASHED_VECTORS_SQL),
-    "max_concurrent_sessions": (max_concurrent_sessions, MAX_CONCURRENT_SQL),
-    "theilsen_daily_trend": (theilsen_daily_trend, THEILSEN_SQL),
-    "harmonic_weekly_fit": (harmonic_weekly_fit, HARMONIC_SQL),
-    "grubbs_daily_outlier": (grubbs_daily_outlier, GRUBBS_SQL),
-    "runs_test_daily": (runs_test_daily, RUNS_TEST_SQL),
-    "poisson_rate_ratio": (poisson_rate_ratio, POISSON_RATE_SQL),
-    "huber_lineitem": (huber_lineitem, HUBER_SQL),
-    "gopher_quality_flags": (gopher_quality_flags, GOPHER_SQL),
-    "heaps_law_fit": (heaps_law_fit, HEAPS_SQL),
-    "bm25_scoring": (bm25_scoring, BM25_SQL),
-    "naive_bayes_langid": (naive_bayes_langid, NAIVE_BAYES_SQL),
-    "semdedup_embeddings": (semdedup_embeddings,
-                            _expected_sql("semdedup_embeddings")),
-    "duplicate_chunks": (duplicate_chunks, DUPLICATE_CHUNKS_SQL),
-    "cochran_armitage_trend": (cochran_armitage_trend,
-                               COCHRAN_ARMITAGE_SQL),
-    "triangle_count_brands": (triangle_count_brands, TRIANGLE_SQL),
-    "kl_divergence_by_source": (kl_divergence_by_source, KL_DIVERGENCE_SQL),
-    "poisson_glm_daily": (poisson_glm_daily, POISSON_GLM_SQL),
-    "pareto_frontier_parts": (pareto_frontier_parts, PARETO_SQL),
-    "item_cosine_similarity": (item_cosine_similarity, ITEM_COSINE_SQL),
-    "incremental_agg_refresh": (incremental_agg_refresh,
-                                INCREMENTAL_AGG_SQL),
-    "bfs_hops_brands": (bfs_hops_brands, BFS_SQL),
-    "overdispersion_daily": (overdispersion_daily, OVERDISPERSION_SQL),
-    "lsa_singular_values": (lsa_singular_values,
-                            _expected_sql("lsa_singular_values")),
-    "isotonic_price_by_qty": (isotonic_price_by_qty, ISOTONIC_SQL),
-    "lad_lineitem": (lad_lineitem, LAD_SQL),
-    "roc_auc_order_status": (roc_auc_order_status, ROC_AUC_SQL),
-    "target_encode_mktsegment": (target_encode_mktsegment,
-                                 TARGET_ENCODE_SQL),
-    "funnel_latency_quantiles": (funnel_latency_quantiles,
-                                 FUNNEL_LATENCY_SQL),
-    "basket_triples": (basket_triples, BASKET_TRIPLES_SQL),
-    "trigram_name_similarity": (trigram_name_similarity, TRIGRAM_SIM_SQL),
-    "robust_outlier_days": (robust_outlier_days, ROBUST_OUTLIER_SQL),
-    "cohort_ltv": (cohort_ltv, COHORT_LTV_SQL),
-    "daily_bounce_rate": (daily_bounce_rate, BOUNCE_SQL),
-    "yule_k_by_source": (yule_k_by_source, YULE_K_SQL),
-    "burstiness_by_type": (burstiness_by_type, BURSTINESS_SQL),
-    "catalog_profile": (catalog_profile, CATALOG_PROFILE_SQL),
-    # r08 bound-as-oracle upgrade (VERDICT r07 #1): exact distinct
-    # audit + the 5%-band boolean, DuckDB-hash-checked
-    "catalog_profile_approx": (catalog_profile_approx,
-                               CATALOG_PROFILE_APPROX_SQL),
-    "cms_event_counts": (cms_event_counts, CMS_SQL),
-    "k_anonymity_audit": (k_anonymity_audit, K_ANON_SQL),
-    "nelson_aalen_hazard": (nelson_aalen_hazard, NELSON_AALEN_SQL),
-    "diff_in_diff_revenue": (diff_in_diff_revenue, DID_SQL),
-    "woe_iv_mktsegment": (woe_iv_mktsegment, WOE_IV_SQL),
-    "calibration_order_status": (calibration_order_status,
-                                 CALIBRATION_SQL),
-    "conformal_interval_coverage": (conformal_interval_coverage,
-                                    CONFORMAL_SQL),
-    "gmm_order_value": (gmm_order_value, GMM_SQL),
-    "lorenz_curve_spend": (lorenz_curve_spend, LORENZ_SQL),
-    "mann_kendall_daily": (mann_kendall_daily, MANN_KENDALL_SQL),
-    # round-5 approx scale twins for the rank-statistic family
-    # (VERDICT r04 #2/#3 — the A18gb bounded-grid recipe)
-    "spearman_approx_qty_price": (spearman_approx_qty_price,
-                                  SPEARMAN_APPROX_SQL),
-    "roc_auc_approx_order_status": (roc_auc_approx_order_status,
-                                    ROC_AUC_APPROX_SQL),
-    "kruskal_approx_acctbal_by_segment": (kruskal_approx_acctbal_by_segment,
-                                          KRUSKAL_APPROX_SQL),
-    "mannwhitney_approx_order_value": (mannwhitney_approx_order_value,
-                                       MANNWHITNEY_APPROX_SQL),
-    "gini_approx_acctbal_by_segment": (gini_approx_acctbal_by_segment,
-                                       GINI_APPROX_SQL),
-    # r08 bound-as-oracle upgrades (VERDICT r07 #1, the B31 pattern):
-    # each GK twin emits the exact quantile audits + the in-query
-    # bracket-containment booleans; DuckDB recomputes the exact side
-    # (quantile_cont) and asserts TRUE — the former rows-only list is
-    # now EMPTY. The engine-specific GK estimates live on in the
-    # `*_detail` forms (the 100 TB product shape), which
-    # tests/test_round5-7.py keep bound-checking at three SFs.
-    "mad_approx_price_by_flag": (mad_approx_price_by_flag,
-                                 MAD_APPROX_SQL),
-    "trimmed_mean_approx_price": (trimmed_mean_approx_price,
-                                  TRIMMED_MEAN_APPROX_SQL),
-    "winsorized_approx_price_stats": (winsorized_approx_price_stats,
-                                      WINSORIZED_APPROX_SQL),
-    "outlier_fences_approx": (outlier_fences_approx,
-                              OUTLIER_FENCES_APPROX_SQL),
-    "quantile_summary_approx": (quantile_summary_approx,
-                                QUANTILE_SUMMARY_APPROX_SQL),
-    "rfm_bounds_approx": (rfm_bounds_approx, RFM_BOUNDS_APPROX_SQL),
-    "funnel_latency_approx_quantiles": (funnel_latency_approx_quantiles,
-                                        FUNNEL_LATENCY_APPROX_SQL),
-    # round-5 CMS-prefilter twins for the gram-shuffle family
-    # (VERDICT r04 #7 — lossless two-pass, oracle = the exact SQL)
-    "gram_novelty_bloom_by_source": (gram_novelty_bloom_by_source,
-                                     GRAM_NOVELTY_BLOOM_SQL),
-    "duplicate_chunks_bloom": (duplicate_chunks_bloom,
-                               DUPLICATE_CHUNKS_BLOOM_SQL),
-    # round-6 grid twins for the last exact-rank operators (VERDICT
-    # r05 #2 — the A18gb bounded-grid recipe) + the PCR composition
-    # (VERDICT r05 #5, reference R:575-621)
-    "pr_auc_approx_order_status": (pr_auc_approx_order_status,
-                                   PR_AUC_APPROX_SQL),
-    "dunn_approx_segments": (dunn_approx_segments, DUNN_APPROX_SQL),
-    "wilcoxon_approx_signed_rank": (wilcoxon_approx_signed_rank,
-                                    WILCOXON_APPROX_SQL),
-    "pcr_holdout": (pcr_holdout, _expected_sql("pcr_holdout")),
-}
-
-
-# --------------------------------------------------------------------------
-# Driver-gate rotation (VERDICT r01 next-round #1): the build driver
-# samples a bounded PREFIX of the registry each round, so insertion
-# order decides which queries get a hard correctness row. The registry
-# is therefore rotated at import time: queries never yet hash-verified
-# by a driver round come first (original relative order preserved),
-# verified-and-unchanged ones sink to the back. Queries whose
-# implementation or oracle changed since their last verification are
-# force-fronted via _CHANGED_THIS_ROUND.
-# --------------------------------------------------------------------------
-
-#: impl/oracle changes by round: verification rows from CORRECTNESS
-#: files of EARLIER rounds are stale for these names and ignored, so a
-#: changed query re-fronts automatically until a later round's driver
-#: row re-verifies it — no manual cleanup between rounds. When changing
-#: a query in round N, set its entry to N.
-_CHANGED_IN_ROUND = {name: 2 for name in [
-    "dedup_embedding", "ann_lsh", "trimmed_mean_price",
-    "residual_diagnostics", "impute_group_mean", "capped_docs_per_source",
-    "ols_normal_eq", "vif_scores", "ridge_lineitem",
-    "dedup_minhash", "dedup_simhash", "winnow_overlap",
-    "pca_explained_variance", "pca_projection", "multimodal_features",
-    "sketch_distinct_parts", "logreg_returnflag", "kmeans_embeddings",
-    "lasso_path", "stepwise_aic_selection", "ann_ivf",
-    "cv_metrics_by_fold", "score_holdout", "knn_impute_labels",
-    "gbt_feature_importance", "cosine_topk",
-    # new in round 2 (never driver-verified) — front-load with the rest
-    "repeated_cv_metrics", "ols_categorical", "top_revenue_suppliers",
-    "winsorized_price_stats", "loess_qty_price", "mice_impute_chained",
-    "bagged_trees_importance", "missingness_profile",
-    "missingness_patterns", "hashed_token_vectors",
-    "max_concurrent_sessions", "embedding_centroids",
-    # round-2 late additions (never driver-verified)
-    "theilsen_daily_trend", "harmonic_weekly_fit", "grubbs_daily_outlier",
-    "runs_test_daily", "poisson_rate_ratio", "huber_lineitem",
-    "gopher_quality_flags", "heaps_law_fit", "bm25_scoring",
-    "naive_bayes_langid", "semdedup_embeddings", "duplicate_chunks",
-    "cochran_armitage_trend", "triangle_count_brands",
-    "kl_divergence_by_source", "poisson_glm_daily",
-    "pareto_frontier_parts", "item_cosine_similarity",
-    "incremental_agg_refresh", "bfs_hops_brands", "overdispersion_daily",
-    "lsa_singular_values", "isotonic_price_by_qty", "lad_lineitem",
-    "roc_auc_order_status", "target_encode_mktsegment",
-    "funnel_latency_quantiles", "basket_triples",
-    "trigram_name_similarity", "robust_outlier_days", "cohort_ltv",
-    "daily_bounce_rate", "yule_k_by_source", "burstiness_by_type",
-    "catalog_profile", "cms_event_counts", "k_anonymity_audit",
-    "nelson_aalen_hazard", "diff_in_diff_revenue", "woe_iv_mktsegment",
-    "calibration_order_status", "conformal_interval_coverage",
-    "gmm_order_value", "lorenz_curve_spend", "mann_kendall_daily",
-]}
-
-#: round-3 changes: tree ensembles moved to the deterministic engine
-#: (outputs AND oracle kind changed), catalog_profile was re-planned,
-#: and two queries are new — any older driver row is stale for these.
-_CHANGED_IN_ROUND.update({name: 3 for name in [
-    "rf_feature_importance", "gbt_feature_importance",
-    "bagged_trees_importance", "rf_score_holdout",
-    "catalog_profile", "catalog_profile_approx",
-    "describe_lineitem",  # gained p25/p50/p75 columns
-    "stream_interval_join_batch",  # new: streaming join's batch twin
-    # new TPC-H join-idiom shapes (A114-A117)
-    "late_order_priority_counts", "local_supplier_volume",
-    "ship_speed_priority_mix", "supplier_count_by_part",
-    # r03 batch 2: exact-test / influence / selection / changepoint ops
-    "fisher_exact_2x2", "kendall_tau_qty_discount", "tukey_hsd_segments",
-    "cooks_distance_outliers", "boxcox_lambda_scan", "pr_auc_order_status",
-    "dsir_importance_weights", "decontam_bloom", "changepoint_binseg_daily",
-    # r03 batch 3
-    "partial_corr_matrix", "cronbach_alpha", "cohen_kappa_orders",
-    "theil_index_by_segment", "cluster_keep_best", "holt_linear_daily",
-    "interval_union_coverage", "mcnemar_orders",
-    "tokenizer_fertility_by_lang", "quality_classifier_coeffs",
-    "bartlett_acctbal_by_segment", "higher_moments_by_flag",
-    "mahalanobis_outliers", "vocab_overlap_by_source",
-    "dow_seasonality_strength", "qq_deciles_priority",
-    "seasonal_naive_error_daily", "dup_rate_by_source",
-    "chow_test_by_flag", "quality_lift_table", "peak_load_window",
-    "friedman_dow_test", "js_divergence_by_source",
-    "effect_sizes_segments", "bigram_entropy_by_source",
-    "gamma_mom_fit", "near_dup_rate_by_source",
-    "wilcoxon_signed_rank", "ordinal_assoc_qty_discount",
-    "ljung_box_daily", "negbin_mom_daily",
-    "gram_novelty_by_source", "boilerplate_prefix_by_source",
-    "charset_profile_by_source", "token_packing_stats",
-    "dagostino_k2_price", "dunn_posthoc_segments",
-    "jonckheere_trend_qty", "logrank_churn_ab",
-    "ccf_count_value", "granger_count_to_value",
-    "pettitt_changepoint_daily", "periodogram_daily",
-    "interarrival_exp_ks",
-    "source_mixture_weights", "padding_waste_by_bucket",
-    "source_diversity", "ann_truncation_recall",
-    "ad_ksample_priority", "white_test_hetero",
-    "lda_returnflag", "ar2_yule_walker_daily",
-    "bigram_ppl_by_source", "embedding_isotropy",
-    "vocab_coverage_topk", "weekend_lift_daily",
-    "quantile_reg_90", "pivot_multi_metrics",
-    "cross_source_duplication", "char_entropy_by_source",
-    "session_lognormal_fit",
-    "hosmer_lemeshow_status", "hellinger_order_value",
-    "wavelet_energy_daily", "dedup_savings_by_source",
-    "contamination_profile", "pacf_daily",
-    "breusch_godfrey_daily", "spectral_entropy_daily",
-    "deming_regression", "epi_2x2_measures",
-    "arch_lm_daily", "langid_confusion",
-    "weighted_kappa_orders", "psi_monthly_orders",
-    "embedding_effective_rank",
-    "gehan_wilcoxon_churn", "brier_decomposition",
-    "records_trend_daily",
-    "source_js_matrix", "label_cohesion_embeddings",
-    "sign_test_price", "cmh_orders", "session_event_cooccurrence",
-    "rank_stability_nations", "dedup_threshold_curve",
-    "hourly_entropy_by_type",
-    "anova_effect_sizes", "dup_cluster_size_histogram",
-    "purchase_cadence",
-    "stratified_ht_estimate", "median_ci_order_value",
-    "kendalls_w_dow",
-    "conversion_by_session_depth", "generalized_esd_daily",
-    "leverage_audit",
-    "retention_half_life", "wilson_ci_event_reach",
-    "cohens_h_priority", "newey_west_trend",
-]})
-
-#: round-4 changes: ONLY the queries the r03 verdict explicitly asked
-#: for (streaming batch twins #5, approx-ECDF twins #4, the bounded
-#: rf-holdout metrics #7). Registry growth is otherwise frozen and no
-#: verified query was re-fronted — the pagerank auto-state and
-#: quantile-bracket guards of this round keep outputs bit-identical at
-#: driver SFs (asserted by the local full gate), so their r03 driver
-#: rows stay valid and the remaining sample slots drain the
-#: never-checked backlog in deterministic registry order.
-_CHANGED_IN_ROUND.update({name: 4 for name in [
-    "stream_session_windows_batch", "stream_hopping_windows_batch",
-    "rf_holdout_metrics",
-    "ks_approx_order_value_priority", "median_ci_approx_order_value",
-    "ad_ksample_approx_priority",
-]})
-
-#: round-5 changes: ONLY the queries the r04 verdict explicitly asked
-#: for — the rank-statistic approx twins (#2) and the MAD sketch twin
-#: (#3). Registry growth stays frozen otherwise; no verified query is
-#: re-fronted (this round's perf work keeps outputs bit-identical at
-#: driver SFs, asserted by the local full gate), so the remaining
-#: sample slots keep draining the never-checked backlog.
-_CHANGED_IN_ROUND.update({name: 5 for name in [
-    "spearman_approx_qty_price", "roc_auc_approx_order_status",
-    "kruskal_approx_acctbal_by_segment", "mannwhitney_approx_order_value",
-    "gini_approx_acctbal_by_segment", "mad_approx_price_by_flag",
-    "gram_novelty_bloom_by_source", "duplicate_chunks_bloom",
-    # sf0.1 full-gate findings (VERDICT r04 #4): negative-zero
-    # normalization changed impl+oracle for these — old driver rows
-    # are stale
-    "customer_value_ratios", "priority_mix_shift", "heaps_law_fit",
-]})
-
-#: round-6 changes: ONLY the queries the r05 verdict explicitly asked
-#: for — grid twins for the last exact-rank operators (#2), the PCR
-#: composition (#5), and the GK MAD twin's new proof-bracket columns
-#: (#7: output schema changed, so its r05 rows-only row is stale).
-#: Registry growth stays frozen otherwise; the CMS cell-space scaling
-#: of this round keeps outputs bit-identical (lossless by theorem,
-#: asserted by the local full gate), so those driver rows stay valid.
-_CHANGED_IN_ROUND.update({name: 6 for name in [
-    "pr_auc_approx_order_status", "dunn_approx_segments",
-    "wilcoxon_approx_signed_rank", "pcr_holdout",
-    "mad_approx_price_by_flag",
-]})
-
-#: round-7 changes: ONLY the queries the r06 verdict explicitly asked
-#: for — the GK proof-bracket twins for the exact-quantile family (#2)
-#: and the sketch_hll_union redesign (#3: output schema + oracle kind
-#: changed, so its old rows-only rows are stale). The relative
-#: noise-floor guards of this round keep every other output
-#: bit-identical at driver SFs (they engage only on near-constant
-#: inputs; asserted by the local full gate), so those driver rows stay
-#: valid and the remaining sample slots keep draining the backlog.
-_CHANGED_IN_ROUND.update({name: 7 for name in [
-    "trimmed_mean_approx_price", "winsorized_approx_price_stats",
-    "outlier_fences_approx", "quantile_summary_approx",
-    "rfm_bounds_approx", "funnel_latency_approx_quantiles",
-    "sketch_hll_union",
-    # the r06 MAD twin also changed (its ±4/acc probe offset gained
-    # the small-n floor): identical outputs at sf0.01+ (3/n < 4/acc
-    # there), but the bookkeeping must not depend on that data-size
-    # coincidence — re-front it for a fresh driver row
-    "mad_approx_price_by_flag",
-]})
-
-
-#: round-8 changes: ONLY the nine former rows-only keys the r07
-#: verdict asked to upgrade (#1) — output schema AND oracle kind
-#: changed (exact audits + containment booleans, value-hash-checked),
-#: so every older rows-only driver row is stale. Registry growth stays
-#: frozen otherwise; no other query's output changed (asserted by the
-#: local full gate), so their driver rows stay valid and the remaining
-#: sample slots drain the last never-checked backlog.
-_CHANGED_IN_ROUND.update({name: 8 for name in [
-    "mad_approx_price_by_flag", "trimmed_mean_approx_price",
-    "winsorized_approx_price_stats", "outlier_fences_approx",
-    "quantile_summary_approx", "rfm_bounds_approx",
-    "funnel_latency_approx_quantiles", "median_ci_approx_order_value",
-    "catalog_profile_approx",
-]})
-
-
-# --------------------------------------------------------------------------
-# Diff-derived row invalidation (VERDICT r08 #1). The per-round hand
-# lists above are FROZEN HISTORY as of round 8 (they record output /
-# oracle-kind changes of earlier rounds and cannot rot). From round 9
-# on, staleness is COMPUTED: a driver row for key K recorded in round
-# N is stale when `git diff` between the commit that recorded
-# CORRECTNESS_rN.json and the CURRENT WORKING TREE touches any module
-# in K's dependency set — the file defining K's builder plus the
-# transitive closure of its package imports (operators/*, functions/*,
-# io.py, session.py, ...). Module granularity deliberately
-# OVER-approximates (touching operators/stats.py re-fronts every key
-# whose query module imports it): a helper-only change can never leave
-# a dependent's old driver row standing as false assurance. The
-# queries package __init__ (this file) is excluded from dependency
-# sets — it is registry wiring and rotation bookkeeping, not builder
-# behavior, and is edited every round by the rotation machinery
-# itself. Fail-safe: without git (or for rounds whose CORRECTNESS
-# file was never committed) the diff term degrades to "not stale",
-# leaving exactly the pre-round-9 legacy behavior.
-# --------------------------------------------------------------------------
-
-_PKG_DIR = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-_REPO_DIR = os.path.dirname(_PKG_DIR)
-
-
-def _pkg_module_files() -> list[str]:
-    """All .py files under parking_bigdata_spark/, repo-relative."""
-    import glob as _glob
-    out = []
-    for path in _glob.glob(os.path.join(_PKG_DIR, "**", "*.py"),
-                           recursive=True):
-        out.append(os.path.relpath(path, _REPO_DIR))
-    return sorted(out)
-
-
-_MODULE_IMPORTS_CACHE: dict[str, tuple] = {}
-
-
-def _module_ast_walk(relpath: str) -> tuple[set, dict]:
-    """ONE AST walk per module (second code-review pass r09 — the
-    previous twin walkers duplicated the relative-import level
-    arithmetic and could desynchronize): returns
-
-    * deps — repo-relative package files imported by ``relpath``
-      (both the parent module of a ``from ..operators import stats``
-      and the named submodule), and
-    * bindings — imported NAME -> providing repo-relative file
-      (``{"load_table": ".../io.py", "stats": ".../operators/stats.py"}``)
-      so the function-level walk can attribute referenced names
-      (functions, classes, plain constants) to their defining module.
-    """
-    if relpath in _MODULE_IMPORTS_CACHE:
-        return _MODULE_IMPORTS_CACHE[relpath]
-    import ast as _ast
-    full = os.path.join(_REPO_DIR, relpath)
-    try:
-        tree = _ast.parse(open(full, encoding="utf-8").read())
-    except (OSError, SyntaxError):
-        # do NOT cache the failure (third review pass r09): pinning an
-        # empty dependency set for the process lifetime on a transient
-        # read error would silently disable staleness detection for
-        # every key that reaches this module — fail safe, never silent
-        return (set(), {})
-    pkg_name = os.path.basename(_PKG_DIR)
-    base_parts = tuple(relpath.split(os.sep)[1:-1])
-
-    def resolve(parts: tuple) -> str | None:
-        pth = os.path.join(_PKG_DIR, *parts)
-        if os.path.isfile(pth + ".py"):
-            return os.path.relpath(pth + ".py", _REPO_DIR)
-        if os.path.isfile(os.path.join(pth, "__init__.py")):
-            return os.path.relpath(os.path.join(pth, "__init__.py"),
-                                   _REPO_DIR)
-        return None
-
-    deps: set[str] = set()
-    bindings: dict[str, str] = {}
-    for node in _ast.walk(tree):
-        if isinstance(node, _ast.Import):
-            for alias in node.names:
-                bits = alias.name.split(".")
-                if bits[0] == pkg_name:
-                    r = resolve(tuple(bits[1:]))
-                    if r:
-                        deps.add(r)
-                        bindings[alias.asname or bits[-1]] = r
-        elif isinstance(node, _ast.ImportFrom):
-            if node.level == 0:
-                bits = (node.module or "").split(".")
-                if not bits or bits[0] != pkg_name:
-                    continue
-                target = tuple(bits[1:])
-            elif node.level - 1 <= len(base_parts):
-                # level 1 = containing package, 2 = its parent, ...
-                base = (base_parts[:len(base_parts) - (node.level - 1)]
-                        if node.level > 1 else base_parts)
-                target = base + tuple(
-                    b for b in (node.module or "").split(".") if b)
-            else:
-                continue
-            parent = resolve(target)
-            if parent:
-                deps.add(parent)
-            for alias in node.names:
-                if alias.name == "*":
-                    continue
-                sub = resolve(target + (alias.name,))
-                if sub:
-                    deps.add(sub)
-                src = sub or parent
-                if src:
-                    bindings[alias.asname or alias.name] = src
-    _MODULE_IMPORTS_CACHE[relpath] = (deps, bindings)
-    return _MODULE_IMPORTS_CACHE[relpath]
-
-
-def _module_imports(relpath: str) -> set[str]:
-    """Repo-relative package modules imported by ``relpath`` (one
-    hop) — the deps half of :func:`_module_ast_walk`."""
-    return _module_ast_walk(relpath)[0]
-
-
-def _module_import_bindings(relpath: str) -> dict[str, str]:
-    """Imported name -> providing file — the bindings half of
-    :func:`_module_ast_walk`."""
-    return _module_ast_walk(relpath)[1]
-
-
-_IMPORT_CLOSURE_CACHE: dict[str, frozenset] = {}
-
-
-def _import_closure(relpath: str) -> frozenset:
-    """Transitive package-import closure of a module (includes
-    itself), with the queries-package __init__ excluded (wiring)."""
-    if relpath in _IMPORT_CLOSURE_CACHE:
-        return _IMPORT_CLOSURE_CACHE[relpath]
-    self_file = os.path.relpath(os.path.abspath(__file__), _REPO_DIR)
-    seen: set[str] = set()
-    todo = [relpath]
-    while todo:
-        cur = todo.pop()
-        if cur in seen or cur == self_file:
-            continue
-        seen.add(cur)
-        todo.extend(_module_imports(cur) - seen)
-    out = frozenset(seen)
-    _IMPORT_CLOSURE_CACHE[relpath] = out
-    return out
-
-
-def _code_names(code) -> set[str]:
-    """Global names referenced by a code object, including nested
-    functions / lambdas / comprehensions."""
-    names = set(code.co_names)
-    for const in code.co_consts:
-        if hasattr(const, "co_names"):
-            names |= _code_names(const)
-    return names
-
-
-_KEY_DEPS_CACHE: dict[str, frozenset] | None = None
-
-
-def _key_deps() -> dict[str, frozenset]:
-    """Registry key -> repo-relative dependency file set: the file
-    DEFINING the builder (any edit to it invalidates the key — the
-    "queries module" term), plus the import closure of every package
-    module whose bindings the builder transitively references —
-    following same-module helper calls, so ``mad_price_by_flag`` ->
-    ``stats.grouped_median`` -> operators/stats.py even though the
-    reference sits two helpers deep. Function-level first hop keeps a
-    stats.py edit from invalidating keys that never touch stats, while
-    still re-fronting every actual dependent."""
-    global _KEY_DEPS_CACHE
-    if _KEY_DEPS_CACHE is not None:
-        return _KEY_DEPS_CACHE
-    import sys as _sys
-    import types as _types
-    deps: dict[str, frozenset] = {}
-    for name, (fn, _sql) in REGISTRY.items():
-        code = getattr(fn, "__code__", None)
-        f = getattr(code, "co_filename", None)
-        if not (f and os.path.isabs(f)
-                and f.startswith(_REPO_DIR + os.sep)):
-            # unknown provenance: depend on everything (always stale
-            # when anything changed) — fail safe, never fail silent
-            deps[name] = frozenset(_pkg_module_files())
-            continue
-        own_file = os.path.relpath(f, _REPO_DIR)
-        # per-module memoization lives in _MODULE_IMPORTS_CACHE
-        bindings = _module_import_bindings(own_file)
-        mod = _sys.modules.get(fn.__module__)
-        out: set[str] = {own_file}
-        seen_fns: set = set()
-        todo = [fn]
-        while todo:
-            cur = todo.pop()
-            if cur in seen_fns or not hasattr(cur, "__code__"):
-                continue
-            seen_fns.add(cur)
-            for ref in _code_names(cur.__code__):
-                if ref in bindings:
-                    out |= _import_closure(bindings[ref])
-                val = getattr(mod, ref, None) if mod else None
-                if (isinstance(val, _types.FunctionType)
-                        and val.__module__ == fn.__module__):
-                    todo.append(val)
-                elif (mod is not None and ref not in bindings
-                      and ref in vars(mod)):
-                    # module-level value that is neither an import
-                    # binding nor a same-module function (ADVICE r09
-                    # #1): a constant aliasing another module's symbol
-                    # (`_X = stats.Y`), a cross-module function alias,
-                    # or a dict/list of functions. Its provenance is
-                    # invisible to the name walk, so over-approximate:
-                    # a function/module value resolves to its defining
-                    # module's closure; anything else falls back to
-                    # the WHOLE defining module's import closure —
-                    # wider staleness, never a silently-stale green
-                    # row.
-                    if isinstance(val, _types.FunctionType):
-                        src = _sys.modules.get(val.__module__)
-                        f2 = getattr(src, "__file__", None)
-                        if (f2 and os.path.isabs(f2)
-                                and f2.startswith(_REPO_DIR + os.sep)):
-                            out |= _import_closure(
-                                os.path.relpath(f2, _REPO_DIR))
-                    elif isinstance(val, _types.ModuleType):
-                        f2 = getattr(val, "__file__", None)
-                        if (f2 and os.path.isabs(f2)
-                                and f2.startswith(_REPO_DIR + os.sep)):
-                            out |= _import_closure(
-                                os.path.relpath(f2, _REPO_DIR))
-                    else:
-                        out |= _import_closure(own_file)
-        deps[name] = frozenset(out)
-    _KEY_DEPS_CACHE = deps
-    return deps
-
-
-def _git(args: list[str]) -> str | None:
-    import subprocess
-    try:
-        r = subprocess.run(["git", "-C", _REPO_DIR] + args,
-                           capture_output=True, text=True, timeout=30)
-    except (OSError, subprocess.TimeoutExpired):
-        return None
-    return r.stdout if r.returncode == 0 else None
-
-
-_CHANGED_SINCE_CACHE: dict[int, frozenset] | None = None
-
-
-def _changed_since_round() -> dict[int, frozenset]:
-    """Round N -> package files touched between the commit that
-    recorded CORRECTNESS_rN.json and the current WORKING TREE
-    (uncommitted edits count). Missing git / uncommitted round file ->
-    round absent from the map (degrades to legacy behavior)."""
-    global _CHANGED_SINCE_CACHE
-    if _CHANGED_SINCE_CACHE is not None:
-        return _CHANGED_SINCE_CACHE
-    import glob as _glob
-    import re as _re
-    out: dict[int, frozenset] = {}
-    for path in _glob.glob(os.path.join(_REPO_DIR,
-                                        "CORRECTNESS_r*.json")):
-        m = _re.search(r"CORRECTNESS_r(\d+)", os.path.basename(path))
-        if not m:
-            continue
-        n = int(m.group(1))
-        commit = _git(["log", "-n1", "--format=%H", "--diff-filter=A",
-                       "--", os.path.basename(path)])
-        if not commit or not commit.strip():
-            # ADVICE r09 #3: an on-disk record with no recording
-            # commit is EXEMPT from diff-derived invalidation (its
-            # round has no diff baseline) — surface that loudly so a
-            # round-close never forgets to commit the record
-            import sys as _s
-            print(f"# WARNING {os.path.basename(path)} exists on disk "
-                  "but has no recording commit — its green rows are "
-                  "exempt from diff-derived staleness until it is "
-                  "committed", file=_s.stderr)
-            continue
-        # diff from the PARENT of the record commit (code-review r09):
-        # the driver measured on the tree BEFORE that commit, so any
-        # source edit committed together with the record must count as
-        # changed-since. The record commit itself only adds record
-        # JSONs, so the parent baseline over-approximates at most by
-        # files genuinely changed in it. Root commit -> fall back.
-        # ASSUMPTION (documented, second review pass r09): the driver
-        # measures and immediately commits the record, so the record
-        # commit's parent IS the measured tree (true of every round in
-        # this history: e.g. b28f77f's parent e72ce5e is round 8's
-        # final builder commit). If an out-of-band flow ever slips a
-        # source commit between measurement and record, those edits
-        # would be missed here for that round only — and the per-round
-        # seeded backlog rotation still re-verifies every key over
-        # subsequent rounds, bounding the exposure.
-        base = commit.strip() + "^"
-        diff = _git(["diff", "--name-only", base, "--",
-                     os.path.basename(_PKG_DIR)])
-        if diff is None:
-            diff = _git(["diff", "--name-only", commit.strip(), "--",
-                         os.path.basename(_PKG_DIR)])
-        if diff is None:
-            continue
-        out[n] = frozenset(line for line in diff.splitlines() if line)
-    _CHANGED_SINCE_CACHE = out
-    return out
-
-
-def _verification_status(changed_since: dict[int, frozenset]
-                         | None = None):
-    """(valid, stale, never): keys with a currently-valid green driver
-    row; keys whose green rows ALL predate an invalidating change
-    (legacy hand-list or diff-derived); keys with no green row at all.
-    ``changed_since`` is injectable for tests."""
-    import glob
-    import json
-    import re
-    if changed_since is None:
-        changed_since = _changed_since_round()
-    deps = _key_deps()
-    root = _REPO_DIR
-    green_rounds: dict[str, list[int]] = {}
-    red_rounds: dict[str, int] = {}
-    had_row: set[str] = set()
-    for path in sorted(glob.glob(os.path.join(root,
-                                              "CORRECTNESS_r*.json"))):
-        m = re.search(r"CORRECTNESS_r(\d+)", os.path.basename(path))
-        file_round = int(m.group(1)) if m else 0
-        try:
-            with open(path) as f:
-                rec = json.load(f)
-        except (OSError, json.JSONDecodeError):
-            continue
-        for name, row in rec.items():
-            if not isinstance(row, dict) or name not in REGISTRY:
-                continue
-            has_oracle_now = REGISTRY[name][1] is not None
-            green = (row.get("hash_match") is True
-                     or (row.get("err") == "no_oracle"
-                         and not has_oracle_now))
-            if green:
-                had_row.add(name)
-                green_rounds.setdefault(name, []).append(file_round)
-            elif (row.get("hash_match") is False
-                  or row.get("err") not in (None, "no_oracle")):
-                # a RECORDED FAILURE is the strongest invalidation
-                # signal (code-review r09): any green row from an
-                # EARLIER round cannot outvote it — if no dependency
-                # changed in between, the disagreement itself
-                # (nondeterminism, oracle drift) demands a re-front.
-                # A red row also counts as "had a row": a key whose
-                # only rows are failures must surface as STALE (top
-                # re-front priority), never as merely-new (second
-                # code-review pass r09)
-                had_row.add(name)
-                red_rounds[name] = max(red_rounds.get(name, 0),
-                                       file_round)
-    valid: set[str] = set()
-    for name, rounds in green_rounds.items():
-        for file_round in rounds:
-            if file_round < _CHANGED_IN_ROUND.get(name, 0):
-                continue  # legacy: row predates a recorded change
-            if file_round < red_rounds.get(name, 0):
-                continue  # a later round recorded a failure
-            touched = changed_since.get(file_round)
-            if touched is not None and (deps[name] & touched):
-                continue  # diff-derived: a dependency changed since
-            valid.add(name)
-            break
-    stale = had_row - valid
-    never = set(REGISTRY) - had_row
-    return valid, stale, never
-
-
-def _current_round() -> int:
-    """1 + the highest recorded CORRECTNESS round (the round whose
-    driver gate will consume this rotation)."""
-    import glob
-    import re
-    rounds = [0]
-    for path in glob.glob(os.path.join(_REPO_DIR,
-                                       "CORRECTNESS_r*.json")):
-        m = re.search(r"CORRECTNESS_r(\d+)", os.path.basename(path))
-        if m:
-            rounds.append(int(m.group(1)))
-    return max(rounds) + 1
-
-
-def _rotated(reg, changed_since=None):
-    """Rotation priority (VERDICT r08 #1 + #5):
-
-    1. STALE keys — had a green driver row, now invalidated (legacy
-       hand-list or diff-derived dependency change): re-verify first.
-    2. NEVER-verified keys (new registrations) in registry order.
-    3. The verified backlog, permuted by sha256(f"r{round}:{name}") —
-       a deterministic per-round seeded sample so every round keeps
-       producing fresh driver evidence across the whole registry
-       instead of re-checking the same front.
-    """
-    import hashlib
-    valid, stale, never = _verification_status(changed_since)
-    front = sorted((n for n in reg if n in stale),
-                   key=lambda n: (-_CHANGED_IN_ROUND.get(n, 0), n))
-    fresh = [n for n in reg if n in never]
-    seed = f"r{_current_round()}"
-    back = sorted((n for n in reg if n in valid),
-                  key=lambda n: hashlib.sha256(
-                      f"{seed}:{n}".encode()).hexdigest())
-    return {n: reg[n] for n in front + fresh + back}
-
-
-#: Rotation is LAZY (code-review r09): computing it costs ~1 s of git
-#: + AST work that only the driver-facing entry points need — paying
-#: it at import time would tax every pytest session and every executor
-#: Python worker that happens to import a queries submodule (package
-#: __init__ runs on any submodule import). REGISTRY itself stays the
-#: raw registration-order dict.
-_ROTATED_CACHE: dict | None = None
-
-
-def _registry_rotated() -> dict:
-    global _ROTATED_CACHE
-    if _ROTATED_CACHE is None:
-        _ROTATED_CACHE = _rotated(REGISTRY)
-    return _ROTATED_CACHE
+REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame],
+                          str | None]] = {
+    name: entry for mod in MODULES for name, entry in mod.QUERIES.items()}
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {name: fn for name, (fn, _) in _registry_rotated().items()}
+    return {name: fn for name, (fn, _) in REGISTRY.items()}
 
 
 def oracle_sql() -> dict[str, str]:
-    return {name: sql for name, (_, sql) in _registry_rotated().items()
+    return {name: sql for name, (_, sql) in REGISTRY.items()
             if sql is not None}

@@ -28,6 +28,9 @@ Reference parity: these formalize the scale path for R's
 ``cor(method="spearman")`` companion to L388 and the nonparametric
 tests around L700-775 (20210803_이승하.R), per the r04 verdict's #2/#3
 next-round asks.
+
+The ``QUERIES`` dict at the end pairs every registered twin with its
+DuckDB oracle.
 """
 
 from __future__ import annotations
@@ -1683,3 +1686,53 @@ HAVING count(*) > 0
 # 0 rows, while a bare global aggregate here would emit one — the
 # clause makes the oracle 0-row on that degenerate input too (the
 # exact FUNNEL_LATENCY_SQL carries the same fix).
+
+
+# --------------------------------------------------------------------------
+# Registry entries: key -> (builder, DuckDB oracle SQL). The package
+# __init__ merges every module's QUERIES into REGISTRY; a new query is
+# added here, next to its builder.
+# --------------------------------------------------------------------------
+
+QUERIES = {
+    # round-5 approx scale twins for the rank-statistic family
+    # (VERDICT r04 #2/#3 — the A18gb bounded-grid recipe)
+    "spearman_approx_qty_price": (spearman_approx_qty_price,
+                                  SPEARMAN_APPROX_SQL),
+    "roc_auc_approx_order_status": (roc_auc_approx_order_status,
+                                    ROC_AUC_APPROX_SQL),
+    "kruskal_approx_acctbal_by_segment": (kruskal_approx_acctbal_by_segment,
+                                          KRUSKAL_APPROX_SQL),
+    "mannwhitney_approx_order_value": (mannwhitney_approx_order_value,
+                                       MANNWHITNEY_APPROX_SQL),
+    "gini_approx_acctbal_by_segment": (gini_approx_acctbal_by_segment,
+                                       GINI_APPROX_SQL),
+    # r08 bound-as-oracle upgrades (VERDICT r07 #1, the B31 pattern):
+    # each GK twin emits the exact quantile audits + the in-query
+    # bracket-containment booleans; DuckDB recomputes the exact side
+    # (quantile_cont) and asserts TRUE — the former rows-only list is
+    # now EMPTY. The engine-specific GK estimates live on in the
+    # `*_detail` forms (the 100 TB product shape), which
+    # tests/test_round5-7.py keep bound-checking at three SFs.
+    "mad_approx_price_by_flag": (mad_approx_price_by_flag,
+                                 MAD_APPROX_SQL),
+    "trimmed_mean_approx_price": (trimmed_mean_approx_price,
+                                  TRIMMED_MEAN_APPROX_SQL),
+    "winsorized_approx_price_stats": (winsorized_approx_price_stats,
+                                      WINSORIZED_APPROX_SQL),
+    "outlier_fences_approx": (outlier_fences_approx,
+                              OUTLIER_FENCES_APPROX_SQL),
+    "quantile_summary_approx": (quantile_summary_approx,
+                                QUANTILE_SUMMARY_APPROX_SQL),
+    "rfm_bounds_approx": (rfm_bounds_approx, RFM_BOUNDS_APPROX_SQL),
+    "funnel_latency_approx_quantiles": (funnel_latency_approx_quantiles,
+                                        FUNNEL_LATENCY_APPROX_SQL),
+    # round-6 grid twins for the last exact-rank operators (VERDICT
+    # r05 #2 — the A18gb bounded-grid recipe) + the PCR composition
+    # (VERDICT r05 #5, reference R:575-621)
+    "pr_auc_approx_order_status": (pr_auc_approx_order_status,
+                                   PR_AUC_APPROX_SQL),
+    "dunn_approx_segments": (dunn_approx_segments, DUNN_APPROX_SQL),
+    "wilcoxon_approx_signed_rank": (wilcoxon_approx_signed_rank,
+                                    WILCOXON_APPROX_SQL),
+}

@@ -1,5 +1,6 @@
-"""Query registry — a_stats2 module (mechanically split from
-a_stats.py to keep modules under the 3k-line bar; A97+ sections)."""
+"""Query registry — a_stats2 module (split from a_stats.py to keep
+modules under the 3k-line bar; A97+ sections). The ``QUERIES`` dict
+at the end pairs every builder here with its DuckDB oracle."""
 
 
 from __future__ import annotations
@@ -2328,3 +2329,60 @@ SELECT CAST(n AS BIGINT) AS n,
          AS stuart_tau_c
 FROM pairs CROSS JOIN margins CROSS JOIN rx CROSS JOIN cy
 """
+
+
+# --------------------------------------------------------------------------
+# Registry entries: key -> (builder, DuckDB oracle SQL). The package
+# __init__ merges every module's QUERIES into REGISTRY; a new query is
+# added here, next to its builder.
+# --------------------------------------------------------------------------
+
+QUERIES = {
+    "fisher_exact_2x2": (fisher_exact_2x2, FISHER_SQL),
+    "kendall_tau_qty_discount": (kendall_tau_qty_discount, KENDALL_SQL),
+    "tukey_hsd_segments": (tukey_hsd_segments, TUKEY_SQL),
+    "cooks_distance_outliers": (cooks_distance_outliers, COOKS_SQL),
+    "boxcox_lambda_scan": (boxcox_lambda_scan, BOXCOX_SQL),
+    "pr_auc_order_status": (pr_auc_order_status, PR_AUC_SQL),
+    "partial_corr_matrix": (partial_corr_matrix, PARTIAL_CORR_SQL),
+    "cronbach_alpha": (cronbach_alpha, CRONBACH_SQL),
+    "cohen_kappa_orders": (cohen_kappa_orders, KAPPA_SQL),
+    "theil_index_by_segment": (theil_index_by_segment, THEIL_SQL),
+    "mcnemar_orders": (mcnemar_orders, MCNEMAR_SQL),
+    "bartlett_acctbal_by_segment": (bartlett_acctbal_by_segment,
+                                    BARTLETT_B_SQL),
+    "higher_moments_by_flag": (higher_moments_by_flag,
+                               HIGHER_MOMENTS_SQL),
+    "mahalanobis_outliers": (mahalanobis_outliers, MAHALANOBIS_SQL),
+    "qq_deciles_priority": (qq_deciles_priority, QQ_DECILES_SQL),
+    "chow_test_by_flag": (chow_test_by_flag, CHOW_SQL),
+    "effect_sizes_segments": (effect_sizes_segments, EFFECT_SIZES_SQL),
+    "gamma_mom_fit": (gamma_mom_fit, GAMMA_MOM_SQL),
+    "wilcoxon_signed_rank": (wilcoxon_signed_rank, WILCOXON_SQL),
+    "ordinal_assoc_qty_discount": (ordinal_assoc_qty_discount,
+                                   ORDINAL_ASSOC_SQL),
+    "cochran_armitage_trend": (cochran_armitage_trend,
+                               COCHRAN_ARMITAGE_SQL),
+    "pareto_frontier_parts": (pareto_frontier_parts, PARETO_SQL),
+    "incremental_agg_refresh": (incremental_agg_refresh,
+                                INCREMENTAL_AGG_SQL),
+    "isotonic_price_by_qty": (isotonic_price_by_qty, ISOTONIC_SQL),
+    "lad_lineitem": (lad_lineitem, LAD_SQL),
+    "roc_auc_order_status": (roc_auc_order_status, ROC_AUC_SQL),
+    "target_encode_mktsegment": (target_encode_mktsegment,
+                                 TARGET_ENCODE_SQL),
+    "catalog_profile": (catalog_profile, CATALOG_PROFILE_SQL),
+    # r08 bound-as-oracle upgrade (VERDICT r07 #1): exact distinct
+    # audit + the 5%-band boolean, DuckDB-hash-checked
+    "catalog_profile_approx": (catalog_profile_approx,
+                               CATALOG_PROFILE_APPROX_SQL),
+    "k_anonymity_audit": (k_anonymity_audit, K_ANON_SQL),
+    "diff_in_diff_revenue": (diff_in_diff_revenue, DID_SQL),
+    "woe_iv_mktsegment": (woe_iv_mktsegment, WOE_IV_SQL),
+    "calibration_order_status": (calibration_order_status,
+                                 CALIBRATION_SQL),
+    "conformal_interval_coverage": (conformal_interval_coverage,
+                                    CONFORMAL_SQL),
+    "gmm_order_value": (gmm_order_value, GMM_SQL),
+    "lorenz_curve_spend": (lorenz_curve_spend, LORENZ_SQL),
+}

@@ -1,7 +1,8 @@
 """Query registry — a_stats_ext module: round-3 late additions
 (batches 13+), mechanically split out of a_stats.py to keep modules
 under the 3k-line maintainability bar. Same conventions: every query
-has a DuckDB oracle next to it."""
+has a DuckDB oracle, paired with it in the ``QUERIES`` dict at the
+end."""
 
 
 from __future__ import annotations
@@ -12,6 +13,7 @@ from pyspark.sql import functions as F
 from .. import oracles
 from ..io import load_table
 from ..operators import ml, stats
+from .a_core import _expected_sql
 
 
 # --------------------------------------------------------------------------
@@ -2106,3 +2108,44 @@ def pcr_holdout(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.lit(round(explained, 4)).alias("explained_ratio"),
                     "rmse", "mape",
                     (F.col("r2") + F.lit(0.0)).alias("r2"))
+
+
+# --------------------------------------------------------------------------
+# Registry entries: key -> (builder, DuckDB oracle SQL). The package
+# __init__ merges every module's QUERIES into REGISTRY; a new query is
+# added here, next to its builder.
+# --------------------------------------------------------------------------
+
+QUERIES = {
+    "dagostino_k2_price": (dagostino_k2_price, DAGOSTINO_SQL),
+    "dunn_posthoc_segments": (dunn_posthoc_segments, DUNN_SQL),
+    "jonckheere_trend_qty": (jonckheere_trend_qty, JONCKHEERE_SQL),
+    "logrank_churn_ab": (logrank_churn_ab, LOGRANK_SQL),
+    "ad_ksample_priority": (ad_ksample_priority, AD_KSAMPLE_SQL),
+    "ad_ksample_approx_priority": (ad_ksample_approx_priority,
+                                   AD_KSAMPLE_APPROX_SQL),
+    "white_test_hetero": (white_test_hetero, WHITE_TEST_SQL),
+    "lda_returnflag": (lda_returnflag, LDA_SQL),
+    "quantile_reg_90": (quantile_reg_90, QUANTILE_REG_SQL),
+    "pivot_multi_metrics": (pivot_multi_metrics, PIVOT_MULTI_SQL),
+    "hosmer_lemeshow_status": (hosmer_lemeshow_status,
+                               HOSMER_LEMESHOW_SQL),
+    "hellinger_order_value": (hellinger_order_value, HELLINGER_SQL),
+    "deming_regression": (deming_regression, DEMING_SQL),
+    "epi_2x2_measures": (epi_2x2_measures, EPI_2X2_SQL),
+    "weighted_kappa_orders": (weighted_kappa_orders, WEIGHTED_KAPPA_SQL),
+    "gehan_wilcoxon_churn": (gehan_wilcoxon_churn, GEHAN_SQL),
+    "brier_decomposition": (brier_decomposition, BRIER_DECOMP_SQL),
+    "sign_test_price": (sign_test_price, SIGN_TEST_SQL),
+    "cmh_orders": (cmh_orders, CMH_SQL),
+    "anova_effect_sizes": (anova_effect_sizes, ANOVA_EFFECT_SQL),
+    "stratified_ht_estimate": (stratified_ht_estimate, HT_ESTIMATE_SQL),
+    "median_ci_order_value": (median_ci_order_value, MEDIAN_CI_SQL),
+    # r08 bound-as-oracle upgrade (VERDICT r07 #1): exact A159 audit
+    # columns + in-band booleans, DuckDB-hash-checked
+    "median_ci_approx_order_value": (median_ci_approx_order_value,
+                                     MEDIAN_CI_APPROX_SQL),
+    "leverage_audit": (leverage_audit, LEVERAGE_SQL),
+    "cohens_h_priority": (cohens_h_priority, COHENS_H_SQL),
+    "pcr_holdout": (pcr_holdout, _expected_sql("pcr_holdout")),
+}

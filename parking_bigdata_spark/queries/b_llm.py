@@ -1,4 +1,7 @@
-"""Query registry — b_llm module (mechanically split from queries.py in r03; the REGISTRY and driver rotation live in the package __init__)."""
+"""Query registry — b_llm module: LLM-data operators (dedup,
+similarity, text quality, language ID, multimodal), event windows and
+basket-graph queries. The ``QUERIES`` dict at the end pairs every
+builder here with its DuckDB oracle."""
 
 
 from __future__ import annotations
@@ -22,6 +25,7 @@ from ..operators import text as text_ops
 from itertools import combinations as _combos
 from .a_core import (  # noqa: E501
     _basket_pair_counts,
+    _expected_sql,
     _order_brands,
     _per_order_brand_sets,
 )
@@ -3117,3 +3121,92 @@ GROUP BY d.source
 """
 
 NEAR_DUP_RATE_SQL = _near_dup_rate_sql()
+
+
+# --------------------------------------------------------------------------
+# Registry entries: key -> (builder, DuckDB oracle SQL). The package
+# __init__ merges every module's QUERIES into REGISTRY; a new query is
+# added here, next to its builder.
+# --------------------------------------------------------------------------
+
+QUERIES = {
+    "events_windowed": (events_windowed, EVENTS_WINDOW_SQL),
+    "events_sessions": (events_sessions, SESSIONS_SQL),
+    "stream_interval_join_batch": (stream_interval_join_batch,
+                                   STREAM_INTERVAL_JOIN_SQL),
+    "stream_session_windows_batch": (stream_session_windows_batch,
+                                     STREAM_SESSION_WINDOWS_SQL),
+    "stream_hopping_windows_batch": (stream_hopping_windows_batch,
+                                     STREAM_HOPPING_WINDOWS_SQL),
+    "dedup_exact": (dedup_exact, DEDUP_EXACT_SQL),
+    "dedup_minhash": (dedup_minhash, _expected_sql("dedup_minhash")),
+    "dedup_simhash": (dedup_simhash, _expected_sql("dedup_simhash")),
+    "ngram_jaccard": (ngram_jaccard, NGRAM_JACCARD_SQL),
+    "cosine_topk": (cosine_topk, COSINE_TOPK_SQL),
+    "ann_lsh": (ann_lsh, ANN_LSH_SQL),
+    "ann_ivf": (ann_ivf, _expected_sql("ann_ivf")),
+    "dedup_embedding": (dedup_embedding, DEDUP_EMBEDDING_SQL),
+    "text_langid": (text_langid, TEXT_LANGID_SQL),
+    "text_quality": (text_quality, TEXT_QUALITY_SQL),
+    "token_count": (token_count, TOKEN_COUNT_SQL),
+    "doc_fingerprint": (doc_fingerprint, DOC_FINGERPRINT_SQL),
+    "text_repetition": (text_repetition, TEXT_REPETITION_SQL),
+    "pii_redaction": (pii_redaction, PII_REDACTION_SQL),
+    "quality_funnel_by_source": (quality_funnel_by_source, QUALITY_FUNNEL_SQL),
+    "length_filter_by_lang": (length_filter_by_lang, LENGTH_FILTER_SQL),
+    "dedup_keep_best": (dedup_keep_best, DEDUP_KEEP_BEST_SQL),
+    "winnow_overlap": (winnow_overlap, _expected_sql("winnow_overlap")),
+    "pipeline_clean_corpus": (pipeline_clean_corpus, PIPELINE_CLEAN_SQL),
+    "dsir_importance_weights": (dsir_importance_weights, DSIR_SQL),
+    "decontam_bloom": (decontam_bloom, DECONTAM_BLOOM_SQL),
+    "cluster_keep_best": (cluster_keep_best, CLUSTER_KEEP_BEST_SQL),
+    "tokenizer_fertility_by_lang": (tokenizer_fertility_by_lang,
+                                    FERTILITY_SQL),
+    "quality_classifier_coeffs": (quality_classifier_coeffs,
+                                  _expected_sql("quality_classifier_coeffs")),
+    "vocab_overlap_by_source": (vocab_overlap_by_source,
+                                VOCAB_OVERLAP_SQL),
+    "dup_rate_by_source": (dup_rate_by_source, DUP_RATE_SQL),
+    "quality_lift_table": (quality_lift_table, QUALITY_LIFT_SQL),
+    "js_divergence_by_source": (js_divergence_by_source,
+                                JS_DIVERGENCE_SQL),
+    "bigram_entropy_by_source": (bigram_entropy_by_source,
+                                 BIGRAM_ENTROPY_SQL),
+    "near_dup_rate_by_source": (near_dup_rate_by_source,
+                                NEAR_DUP_RATE_SQL),
+    "tfidf_top_terms": (tfidf_top_terms, TFIDF_SQL),
+    "embedding_centroids": (embedding_centroids, EMB_CENTROID_SQL),
+    "multimodal_features": (multimodal_features, _expected_sql("multimodal_features")),
+    "dedup_clusters": (dedup_clusters, DEDUP_CLUSTERS_SQL),
+    "decontam_overlap": (decontam_overlap, DECONTAM_SQL),
+    "collocation_pmi": (collocation_pmi, COLLOCATION_SQL),
+    "token_entropy_by_source": (token_entropy_by_source, TOKEN_ENTROPY_SQL),
+    "psi_drift_by_source": (psi_drift_by_source, PSI_DRIFT_SQL),
+    "pagerank_suppliers": (pagerank_suppliers, PAGERANK_SQL),
+    "chunk_documents": (chunk_documents, CHUNK_SQL),
+    "surprisal_by_source": (surprisal_by_source, SURPRISAL_SQL),
+    "capped_docs_per_source": (capped_docs_per_source, CAPPED_DOCS_SQL),
+    "sketch_hll_union": (sketch_hll_union, SKETCH_HLL_UNION_SQL),
+    "zipf_token_slope": (zipf_token_slope, ZIPF_SQL),
+    "text_readability": (text_readability, READABILITY_SQL),
+    "sketch_top_event_types": (sketch_top_event_types, SKETCH_TOPK_SQL),
+    "inverted_index_sample": (inverted_index_sample, INVERTED_INDEX_SQL),
+    "hashed_token_vectors": (hashed_token_vectors, HASHED_VECTORS_SQL),
+    "gopher_quality_flags": (gopher_quality_flags, GOPHER_SQL),
+    "heaps_law_fit": (heaps_law_fit, HEAPS_SQL),
+    "bm25_scoring": (bm25_scoring, BM25_SQL),
+    "naive_bayes_langid": (naive_bayes_langid, NAIVE_BAYES_SQL),
+    "semdedup_embeddings": (semdedup_embeddings,
+                            _expected_sql("semdedup_embeddings")),
+    "duplicate_chunks": (duplicate_chunks, DUPLICATE_CHUNKS_SQL),
+    "triangle_count_brands": (triangle_count_brands, TRIANGLE_SQL),
+    "kl_divergence_by_source": (kl_divergence_by_source, KL_DIVERGENCE_SQL),
+    "item_cosine_similarity": (item_cosine_similarity, ITEM_COSINE_SQL),
+    "bfs_hops_brands": (bfs_hops_brands, BFS_SQL),
+    "lsa_singular_values": (lsa_singular_values,
+                            _expected_sql("lsa_singular_values")),
+    "basket_triples": (basket_triples, BASKET_TRIPLES_SQL),
+    "trigram_name_similarity": (trigram_name_similarity, TRIGRAM_SIM_SQL),
+    "yule_k_by_source": (yule_k_by_source, YULE_K_SQL),
+    "cms_event_counts": (cms_event_counts, CMS_SQL),
+}

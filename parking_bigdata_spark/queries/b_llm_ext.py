@@ -1,5 +1,6 @@
 """Query registry — b_llm_ext module: round-3 late additions
-(batches 12+), mechanically split out of b_llm.py."""
+(batches 12+), split out of b_llm.py. The ``QUERIES`` dict at the end
+pairs every builder here with its DuckDB oracle."""
 
 
 from __future__ import annotations
@@ -1637,3 +1638,48 @@ def duplicate_chunks_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 DUPLICATE_CHUNKS_BLOOM_SQL = DUPLICATE_CHUNKS_SQL
+
+
+# --------------------------------------------------------------------------
+# Registry entries: key -> (builder, DuckDB oracle SQL). The package
+# __init__ merges every module's QUERIES into REGISTRY; a new query is
+# added here, next to its builder.
+# --------------------------------------------------------------------------
+
+QUERIES = {
+    "gram_novelty_by_source": (gram_novelty_by_source, GRAM_NOVELTY_SQL),
+    "boilerplate_prefix_by_source": (boilerplate_prefix_by_source,
+                                     BOILERPLATE_PREFIX_SQL),
+    "charset_profile_by_source": (charset_profile_by_source,
+                                  CHARSET_PROFILE_SQL),
+    "token_packing_stats": (token_packing_stats, TOKEN_PACKING_SQL),
+    "source_mixture_weights": (source_mixture_weights, SOURCE_MIXTURE_SQL),
+    "padding_waste_by_bucket": (padding_waste_by_bucket,
+                                PADDING_WASTE_SQL),
+    "source_diversity": (source_diversity, SOURCE_DIVERSITY_SQL),
+    "ann_truncation_recall": (ann_truncation_recall, ANN_TRUNCATION_SQL),
+    "bigram_ppl_by_source": (bigram_ppl_by_source, BIGRAM_PPL_SQL),
+    "embedding_isotropy": (embedding_isotropy, EMB_ISOTROPY_SQL),
+    "vocab_coverage_topk": (vocab_coverage_topk, VOCAB_COVERAGE_SQL),
+    "cross_source_duplication": (cross_source_duplication,
+                                 CROSS_SOURCE_DUP_SQL),
+    "char_entropy_by_source": (char_entropy_by_source, CHAR_ENTROPY_SQL),
+    "dedup_savings_by_source": (dedup_savings_by_source,
+                                DEDUP_SAVINGS_SQL),
+    "contamination_profile": (contamination_profile, CONTAM_PROFILE_SQL),
+    "langid_confusion": (langid_confusion, LANGID_CONFUSION_SQL),
+    "embedding_effective_rank": (embedding_effective_rank,
+                                 EFFECTIVE_RANK_SQL),
+    "source_js_matrix": (source_js_matrix, SOURCE_JS_MATRIX_SQL),
+    "label_cohesion_embeddings": (label_cohesion_embeddings,
+                                  LABEL_COHESION_SQL),
+    "dedup_threshold_curve": (dedup_threshold_curve, DEDUP_CURVE_SQL),
+    "dup_cluster_size_histogram": (dup_cluster_size_histogram,
+                                   DUP_SIZE_HIST_SQL),
+    # round-5 CMS-prefilter twins for the gram-shuffle family
+    # (VERDICT r04 #7 — lossless two-pass, oracle = the exact SQL)
+    "gram_novelty_bloom_by_source": (gram_novelty_bloom_by_source,
+                                     GRAM_NOVELTY_BLOOM_SQL),
+    "duplicate_chunks_bloom": (duplicate_chunks_bloom,
+                               DUPLICATE_CHUNKS_BLOOM_SQL),
+}

@@ -1,4 +1,6 @@
-"""Query registry — c_temporal module (mechanically split from queries.py in r03; the REGISTRY and driver rotation live in the package __init__)."""
+"""Query registry — c_temporal module: event, session, streaming-batch
+and time-series queries. The ``QUERIES`` dict at the end pairs every
+builder here with its DuckDB oracle."""
 
 
 from __future__ import annotations
@@ -2327,3 +2329,69 @@ SELECT CAST(n AS BIGINT) AS n_days,
               FROM daily) / n, 6) AS mean_loglik
 FROM fit
 """
+
+
+# --------------------------------------------------------------------------
+# Registry entries: key -> (builder, DuckDB oracle SQL). The package
+# __init__ merges every module's QUERIES into REGISTRY; a new query is
+# added here, next to its builder.
+# --------------------------------------------------------------------------
+
+QUERIES = {
+    "funnel_conversion": (funnel_conversion, FUNNEL_SQL),
+    "cohort_retention": (cohort_retention, COHORT_SQL),
+    "events_asof_purchase": (events_asof_purchase, EVENTS_ASOF_SQL),
+    "quantile_summary": (quantile_summary, QUANTILE_SQL),
+    "cube_revenue": (cube_revenue, CUBE_SQL),
+    "melt_segment_metrics": (melt_segment_metrics, MELT_SQL),
+    "events_rolling_avg": (events_rolling_avg, ROLLING_SQL),
+    "customer_cumulative_spend": (customer_cumulative_spend, CUMSUM_SQL),
+    "events_json_extract": (events_json_extract, JSON_SQL),
+    "changepoint_binseg_daily": (changepoint_binseg_daily, BINSEG_SQL),
+    "holt_linear_daily": (holt_linear_daily, HOLT_SQL),
+    "interval_union_coverage": (interval_union_coverage,
+                                INTERVAL_COVERAGE_SQL),
+    "dow_seasonality_strength": (dow_seasonality_strength,
+                                 DOW_STRENGTH_SQL),
+    "seasonal_naive_error_daily": (seasonal_naive_error_daily,
+                                   SEASONAL_NAIVE_SQL),
+    "peak_load_window": (peak_load_window, PEAK_LOAD_SQL),
+    "friedman_dow_test": (friedman_dow_test, FRIEDMAN_SQL),
+    "ljung_box_daily": (ljung_box_daily, LJUNG_BOX_SQL),
+    "negbin_mom_daily": (negbin_mom_daily, NEGBIN_MOM_SQL),
+    "range_join_value_bins": (range_join_value_bins, RANGE_JOIN_SQL),
+    "events_gapfill_daily": (events_gapfill_daily, GAPFILL_SQL),
+    "events_hopping_windows": (events_hopping_windows, HOPPING_SQL),
+    "grouping_sets_revenue": (grouping_sets_revenue, GROUPING_SETS_SQL),
+    "orders_trailing_7d": (orders_trailing_7d, TRAILING_7D_SQL),
+    "events_attribution_join": (events_attribution_join, ATTRIBUTION_SQL),
+    "decayed_engagement": (decayed_engagement, DECAYED_SQL),
+    "events_variant_extract": (events_variant_extract, VARIANT_SQL),
+    "user_activity_streaks": (user_activity_streaks, STREAKS_SQL),
+    "first_last_touch": (first_last_touch, FIRST_LAST_SQL),
+    "seasonal_trend_events": (seasonal_trend_events, SEASONAL_SQL),
+    "rolling_active_users": (rolling_active_users, ROLLING_ACTIVE_SQL),
+    "cuped_experiment_events": (cuped_experiment_events, CUPED_SQL),
+    "acf_daily_events": (acf_daily_events, ACF_SQL),
+    "event_transitions": (event_transitions, TRANSITIONS_SQL),
+    "cusum_changepoint_events": (cusum_changepoint_events, CUSUM_SQL),
+    "ewma_smoothed_daily": (ewma_smoothed_daily, EWMA_SQL),
+    "user_path_patterns": (user_path_patterns, PATH_PATTERNS_SQL),
+    "events_dow_hour_heatmap": (events_dow_hour_heatmap, DOW_HOUR_SQL),
+    "priority_mix_shift": (priority_mix_shift, MIX_SHIFT_SQL),
+    "max_concurrent_sessions": (max_concurrent_sessions, MAX_CONCURRENT_SQL),
+    "theilsen_daily_trend": (theilsen_daily_trend, THEILSEN_SQL),
+    "harmonic_weekly_fit": (harmonic_weekly_fit, HARMONIC_SQL),
+    "grubbs_daily_outlier": (grubbs_daily_outlier, GRUBBS_SQL),
+    "runs_test_daily": (runs_test_daily, RUNS_TEST_SQL),
+    "poisson_glm_daily": (poisson_glm_daily, POISSON_GLM_SQL),
+    "overdispersion_daily": (overdispersion_daily, OVERDISPERSION_SQL),
+    "funnel_latency_quantiles": (funnel_latency_quantiles,
+                                 FUNNEL_LATENCY_SQL),
+    "robust_outlier_days": (robust_outlier_days, ROBUST_OUTLIER_SQL),
+    "cohort_ltv": (cohort_ltv, COHORT_LTV_SQL),
+    "daily_bounce_rate": (daily_bounce_rate, BOUNCE_SQL),
+    "burstiness_by_type": (burstiness_by_type, BURSTINESS_SQL),
+    "nelson_aalen_hazard": (nelson_aalen_hazard, NELSON_AALEN_SQL),
+    "mann_kendall_daily": (mann_kendall_daily, MANN_KENDALL_SQL),
+}

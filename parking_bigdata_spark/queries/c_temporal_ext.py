@@ -1,5 +1,6 @@
 """Query registry — c_temporal_ext module: round-3 late additions
-(batches 14+), mechanically split out of c_temporal.py."""
+(batches 14+), split out of c_temporal.py. The ``QUERIES`` dict at
+the end pairs every builder here with its DuckDB oracle."""
 
 
 from __future__ import annotations
@@ -1630,3 +1631,42 @@ SELECT CAST(n AS BIGINT) AS n_days,
          AS t_hac
 FROM base CROSS JOIN cross_t
 """
+
+
+# --------------------------------------------------------------------------
+# Registry entries: key -> (builder, DuckDB oracle SQL). The package
+# __init__ merges every module's QUERIES into REGISTRY; a new query is
+# added here, next to its builder.
+# --------------------------------------------------------------------------
+
+QUERIES = {
+    "ar2_yule_walker_daily": (ar2_yule_walker_daily, AR2_SQL),
+    "ccf_count_value": (ccf_count_value, CCF_SQL),
+    "granger_count_to_value": (granger_count_to_value, GRANGER_SQL),
+    "pettitt_changepoint_daily": (pettitt_changepoint_daily, PETTITT_SQL),
+    "periodogram_daily": (periodogram_daily, PERIODOGRAM_SQL),
+    "interarrival_exp_ks": (interarrival_exp_ks, INTERARRIVAL_SQL),
+    "weekend_lift_daily": (weekend_lift_daily, WEEKEND_LIFT_SQL),
+    "session_lognormal_fit": (session_lognormal_fit, SESSION_LOGNORM_SQL),
+    "wavelet_energy_daily": (wavelet_energy_daily, WAVELET_SQL),
+    "pacf_daily": (pacf_daily, PACF_SQL),
+    "breusch_godfrey_daily": (breusch_godfrey_daily,
+                              BREUSCH_GODFREY_SQL),
+    "spectral_entropy_daily": (spectral_entropy_daily,
+                               SPECTRAL_ENTROPY_SQL),
+    "arch_lm_daily": (arch_lm_daily, ARCH_LM_SQL),
+    "psi_monthly_orders": (psi_monthly_orders, PSI_MONTHLY_SQL),
+    "records_trend_daily": (records_trend_daily, RECORDS_SQL),
+    "session_event_cooccurrence": (session_event_cooccurrence,
+                                   SESSION_COOC_SQL),
+    "hourly_entropy_by_type": (hourly_entropy_by_type,
+                               HOURLY_ENTROPY_SQL),
+    "purchase_cadence": (purchase_cadence, PURCHASE_CADENCE_SQL),
+    "kendalls_w_dow": (kendalls_w_dow, KENDALLS_W_SQL),
+    "conversion_by_session_depth": (conversion_by_session_depth,
+                                    CONVERSION_DEPTH_SQL),
+    "generalized_esd_daily": (generalized_esd_daily, ESD_SQL),
+    "retention_half_life": (retention_half_life, RETENTION_HL_SQL),
+    "wilson_ci_event_reach": (wilson_ci_event_reach, WILSON_CI_SQL),
+    "newey_west_trend": (newey_west_trend, NEWEY_WEST_SQL),
+}

@@ -12,6 +12,16 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _half_mem_total() -> str:
+    """Default driver heap: half of the host's MemTotal, so the JVM's
+    off-heap memory and the Python workers still fit beside it."""
+    with open("/proc/meminfo") as f:
+        for line in f:
+            if line.startswith("MemTotal:"):
+                return f"{int(line.split()[1]) // 2048}m"  # kB -> MB / 2
+    raise RuntimeError("MemTotal missing from /proc/meminfo")
+
+
 def get_spark(app_name: str = "parking_bigdata_spark",
               shuffle_partitions: int | None = None) -> SparkSession:
     """Build (or reuse) a SparkSession with scale-appropriate defaults.
@@ -20,8 +30,12 @@ def get_spark(app_name: str = "parking_bigdata_spark",
       broadcast decisions survive a 100x scale-up better than static plans.
     - Arrow enabled: any Pandas-UDF path moves data in columnar batches.
     - UTC session timezone: timestamp semantics match the DuckDB oracle.
+    - Host-sized defaults: ``local[N]`` over the CPUs this process may
+      run on and a driver heap of half of MemTotal, unless
+      ``SPARK_GRAFT_CPUS`` / ``SPARK_GRAFT_DRIVER_MEM`` say otherwise.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = (os.environ.get("SPARK_GRAFT_CPUS")
+            or str(len(os.sched_getaffinity(0))))
     if shuffle_partitions is None:
         shuffle_partitions = max(int(cpus), 8)
     builder = (
@@ -60,7 +74,8 @@ def get_spark(app_name: str = "parking_bigdata_spark",
         # INT96 (the legacy default) writes NO column statistics, killing
         # min/max row-group pruning on timestamp sort keys at scale
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _half_mem_total())
         .config("spark.ui.enabled", "false")
     )
     spark = builder.getOrCreate()

@@ -4,8 +4,6 @@ import os
 
 import pytest
 
-os.environ.setdefault("SPARK_GRAFT_CPUS", "4")
-
 SF_SMALL = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 SF_ORACLE = os.environ.get("SPARK_GRAFT_ORACLE_SF", "/root/testdata/sf0.001")
 

@@ -23,6 +23,10 @@ import pandas as pd
 import pytest
 
 from parking_bigdata_spark import queries as Q
+from parking_bigdata_spark.queries.a_scale_twins import (
+    outlier_fences_approx_detail, quantile_summary_approx_detail,
+    rfm_bounds_approx_detail, trimmed_mean_approx_price_detail,
+    winsorized_approx_price_stats_detail)
 
 
 def _assert_no_nan(rows):
@@ -479,29 +483,29 @@ def test_quantile_twins_all_tied(spark, degen_dir):
     holds), and nothing aborts. Also exercises the small-n probe
     floor (_probe_eps) — 3/n here is 60x the 4/accuracy cushion."""
     tm = {r["l_returnflag"]: r
-          for r in Q.trimmed_mean_approx_price_detail(
+          for r in trimmed_mean_approx_price_detail(
               spark, degen_dir).collect()}
     for flag, r in tm.items():
         assert r["trimmed_mean_approx"] == 100.0, flag
         assert r["c10_lo"] <= 100.0 <= r["c90_hi"], flag
         assert r["n_kept"] == r["n"], flag  # nothing outside the cuts
-    ws = Q.winsorized_approx_price_stats_detail(
+    ws = winsorized_approx_price_stats_detail(
         spark, degen_dir).collect()
     for r in ws:
         assert r["winsorized_mean_approx"] == 100.0
         assert r["n_clamped"] == 0
         assert r["winsorized_sd_approx"] == 0.0
-    of = Q.outlier_fences_approx_detail(spark, degen_dir).collect()
+    of = outlier_fences_approx_detail(spark, degen_dir).collect()
     for r in of:
         assert r["n_outliers"] == 0
         assert r["fence_lo_approx"] <= 500.0 <= r["fence_hi_approx"]
-    qs = Q.quantile_summary_approx_detail(spark, degen_dir).collect()
+    qs = quantile_summary_approx_detail(spark, degen_dir).collect()
     for r in qs:
         assert r["lo"] == r["hi"] == 1000.0
         for p in ("p25", "p50", "p75", "p95"):
             assert r[f"{p}_approx"] == 1000.0, p
     rb = {r["metric"]: r
-          for r in Q.rfm_bounds_approx_detail(
+          for r in rfm_bounds_approx_detail(
               spark, degen_dir).collect()}
     # mon is constant (1000.0/customer); rec constant (one date)
     assert rb["mon"]["q2_approx"] == 1000.0

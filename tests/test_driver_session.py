@@ -4,7 +4,8 @@ session confs they depend on."""
 
 from __future__ import annotations
 
-from parking_bigdata_spark import queries as Q
+from parking_bigdata_spark.queries.a_core import market_share_by_year
+from parking_bigdata_spark.queries.b_llm import events_windowed
 
 
 def test_queries_survive_foreign_session_confs(spark, sf_dir):
@@ -14,7 +15,7 @@ def test_queries_survive_foreign_session_confs(spark, sf_dir):
     foreign.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
     foreign.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
     # events scan requires the nanos conf; year() requires UTC
-    assert Q.events_windowed(foreign, sf_dir).count() > 0
+    assert events_windowed(foreign, sf_dir).count() > 0
     years = [r["order_year"] for r in
-             Q.market_share_by_year(foreign, sf_dir).collect()]
+             market_share_by_year(foreign, sf_dir).collect()]
     assert min(years) == 1995  # a non-UTC session would shift to 1994

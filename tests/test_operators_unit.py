@@ -9,9 +9,10 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from parking_bigdata_spark.io import read_clean_csv
+from parking_bigdata_spark.io import load_table, read_clean_csv
 from parking_bigdata_spark.operators import clean, dedup, features, ml, profile
 from parking_bigdata_spark.operators import similarity as sim
+from parking_bigdata_spark.queries.b_llm import sketch_hll_union
 
 
 def test_read_clean_csv_sentinels(spark, tmp_path):
@@ -190,7 +191,7 @@ def test_zscore_window_matches_apply_in_pandas(spark, sf_dir):
     grouped-map pandas formulation — documents that the Spark-first
     path is a drop-in for the classic applyInPandas normalize."""
     from parking_bigdata_spark.io import load_table
-    from parking_bigdata_spark.queries import zscore_by_segment
+    from parking_bigdata_spark.queries.a_core import zscore_by_segment
     import pandas as pd
 
     def normalize(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -370,12 +371,11 @@ def test_hll_sketch_union_accuracy(spark, sf_dir):
     # hll_within_5pct boolean next to the exact audit count — assert
     # the booleans hold and the audit counts match an independent
     # exact computation
-    from parking_bigdata_spark import queries as Q
     import pyspark.sql.functions as F
 
     out = {r["source"]: r
-           for r in Q.sketch_hll_union(spark, sf_dir).collect()}
-    docs = Q.load_table(spark, sf_dir, "documents")
+           for r in sketch_hll_union(spark, sf_dir).collect()}
+    docs = load_table(spark, sf_dir, "documents")
     fp = F.md5(F.regexp_replace(F.col("text"), r"\s+", " "))
     exact = {r["source"]: r["n"]
              for r in (docs.select("source", fp.alias("fp"))

@@ -70,3 +70,18 @@ def test_rows_only_queries_run(spark, sf_dir, name):
     df = ALL[name](spark, sf_dir)
     assert df.count() >= 0
     assert len(df.schema) > 0
+
+
+def test_registry_shape():
+    """All 363 keys are registered, each with an oracle, each by exactly
+    one module's QUERIES and under its builder's name: a key lost from
+    or registered twice across the modules would otherwise drop or
+    shadow its parity test without a failure."""
+    assert len(ALL) == 363
+    assert ORACLES.keys() == ALL.keys()
+    seen: set[str] = set()
+    for mod in Q.MODULES:
+        twice = seen & mod.QUERIES.keys()
+        assert not twice, (mod.__name__, sorted(twice))
+        seen |= mod.QUERIES.keys()
+    assert all(fn.__name__ == name for name, fn in ALL.items())

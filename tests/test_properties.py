@@ -9,6 +9,7 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from parking_bigdata_spark.operators import features, profile
+from parking_bigdata_spark.queries.a_stats import trimmed_mean_price_pandas
 
 SLOW = dict(deadline=None, max_examples=12,
             suppress_health_check=[HealthCheck.function_scoped_fixture,
@@ -177,7 +178,7 @@ def test_trimmed_mean_registered_query_has_no_python(spark, sf_dir):
     got = {r["l_returnflag"]: (r["trimmed_mean_price"], r["n"])
            for r in df.collect()}
     twin = {r["l_returnflag"]: (r["trimmed_mean_price"], r["n"])
-            for r in Q.trimmed_mean_price_pandas(spark, sf_dir).collect()}
+            for r in trimmed_mean_price_pandas(spark, sf_dir).collect()}
     assert got == twin
 
 

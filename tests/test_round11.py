@@ -65,6 +65,28 @@ def test_cosine_scorer_null_and_ragged_rows_score_null(spark):
     assert got[5] == pytest.approx(0.0)
 
 
+def test_cosine_scorer_per_row_fallback_casts_scalars(spark):
+    """The per-row fallback (taken when a length group's vectors do not
+    cast to float64) must convert its one-row reductions by indexing
+    the scalar out, not by float() on a shape-(1,) array, which numpy
+    deprecates (ADVICE r11 #1). The scorer's Python body runs here in
+    the driver, with that warning raised as an error."""
+    import warnings
+
+    import pandas as pd
+
+    from parking_bigdata_spark.operators.similarity import _cosine_score_udf
+    score = _cosine_score_udf(4).func
+    # a non-numeric element fails the group cast -> per-row path
+    qv = pd.Series([[1.0, "x"], [1.0, 0.0]])
+    cv = pd.Series([[1.0, 0.0], [0.6, 0.8]])
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", DeprecationWarning)
+        got = score(qv, cv)
+    assert got.isna().tolist() == [True, False]
+    assert got[1] == pytest.approx(0.6)
+
+
 def test_cosine_scorer_rounding_is_half_even(spark):
     """ADVICE r10 #1 pinned: the scorer rounds half-to-even on the
     scaled binary double (numpy semantics). cos([1,0...], [1,1...16
@@ -83,24 +105,6 @@ def test_cosine_scorer_rounding_is_half_even(spark):
     spark_round = spark.range(1).select(
         F.round(F.lit(0.25), 1).alias("r")).collect()[0]["r"]
     assert spark_round == pytest.approx(0.3)
-
-
-# ------------------------- dependency walker: constant-alias fallback
-
-def test_key_deps_follow_module_constant_aliases():
-    """ADVICE r09 #1 closed: a builder that reaches another package
-    module only through a module-level constant alias (the
-    `_AUDIT_ACC = stats.EXACT_QUANTILE_ACC` pattern in a_scale_twins)
-    must still carry that module as a dependency — the walker now
-    falls back to the defining module's full import closure for
-    non-function module-level values. Sharpness is preserved: a key
-    that references no such constant keeps its narrow dep set."""
-    from parking_bigdata_spark import queries as Q
-    deps = Q._key_deps()
-    assert "parking_bigdata_spark/operators/stats.py" in \
-        deps["mad_approx_price_by_flag"]
-    assert "parking_bigdata_spark/operators/stats.py" not in \
-        deps["distinct_order_status"]
 
 
 # ------------------------------ connected components: explode layout

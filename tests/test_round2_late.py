@@ -13,7 +13,25 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from parking_bigdata_spark import queries as Q
+from parking_bigdata_spark.queries.a_stats import (
+    huber_lineitem, kaplan_meier_retention, poisson_rate_ratio)
+from parking_bigdata_spark.queries.a_stats2 import (
+    calibration_order_status, catalog_profile, cochran_armitage_trend,
+    conformal_interval_coverage, diff_in_diff_revenue, gmm_order_value,
+    incremental_agg_refresh, isotonic_price_by_qty, k_anonymity_audit,
+    lad_lineitem, lorenz_curve_spend, pareto_frontier_parts,
+    roc_auc_order_status, target_encode_mktsegment, woe_iv_mktsegment)
+from parking_bigdata_spark.queries.b_llm import (
+    basket_triples, bfs_hops_brands, bm25_scoring, cms_event_counts,
+    duplicate_chunks, events_sessions, heaps_law_fit, item_cosine_similarity,
+    kl_divergence_by_source, lsa_singular_values, naive_bayes_langid,
+    triangle_count_brands, trigram_name_similarity, yule_k_by_source)
+from parking_bigdata_spark.queries.c_temporal import (
+    burstiness_by_type, cohort_ltv, daily_bounce_rate,
+    funnel_latency_quantiles, grubbs_daily_outlier, harmonic_weekly_fit,
+    mann_kendall_daily, nelson_aalen_hazard, overdispersion_daily,
+    poisson_glm_daily, robust_outlier_days, runs_test_daily,
+    theilsen_daily_trend)
 from parking_bigdata_spark.operators import ml, text as text_ops
 
 
@@ -25,7 +43,7 @@ def _daily(sf_dir: str) -> pd.DataFrame:
 
 
 def test_theilsen_matches_numpy(spark, sf_dir):
-    got = Q.theilsen_daily_trend(spark, sf_dir).toPandas().iloc[0]
+    got = theilsen_daily_trend(spark, sf_dir).toPandas().iloc[0]
     daily = _daily(sf_dir).sort_values("d")
     d, n = daily["d"].to_numpy(), daily["n"].to_numpy(float)
     slopes = [(n[j] - n[i]) / (d[j] - d[i])
@@ -39,7 +57,7 @@ def test_theilsen_matches_numpy(spark, sf_dir):
 
 
 def test_harmonic_fit_matches_numpy(spark, sf_dir):
-    got = (Q.harmonic_weekly_fit(spark, sf_dir).toPandas()
+    got = (harmonic_weekly_fit(spark, sf_dir).toPandas()
            .set_index("term")["estimate"])
     daily = _daily(sf_dir)
     t = daily["d"].to_numpy(float)
@@ -54,7 +72,7 @@ def test_harmonic_fit_matches_numpy(spark, sf_dir):
 
 
 def test_grubbs_matches_numpy(spark, sf_dir):
-    got = Q.grubbs_daily_outlier(spark, sf_dir).toPandas().iloc[0]
+    got = grubbs_daily_outlier(spark, sf_dir).toPandas().iloc[0]
     daily = _daily(sf_dir)
     n = daily["n"].to_numpy(float)
     dev = np.abs(n - n.mean())
@@ -65,7 +83,7 @@ def test_grubbs_matches_numpy(spark, sf_dir):
 
 
 def test_runs_test_matches_manual(spark, sf_dir):
-    got = Q.runs_test_daily(spark, sf_dir).toPandas().iloc[0]
+    got = runs_test_daily(spark, sf_dir).toPandas().iloc[0]
     daily = _daily(sf_dir).sort_values("d")
     n = daily["n"].to_numpy(float)
     med = float(np.median(n))
@@ -82,7 +100,7 @@ def test_runs_test_matches_manual(spark, sf_dir):
 
 
 def test_huber_matches_numpy_irls(spark, sf_dir):
-    got = (Q.huber_lineitem(spark, sf_dir).toPandas()
+    got = (huber_lineitem(spark, sf_dir).toPandas()
            .set_index("term")["estimate"])
     li = pd.read_parquet(f"{sf_dir}/lineitem.parquet",
                          columns=["l_quantity", "l_extendedprice"]).dropna()
@@ -135,7 +153,7 @@ def test_gopher_mean_word_len_whitespace_normalized(spark):
 
 
 def test_bm25_scores_positive_and_sorted(spark, sf_dir):
-    got = Q.bm25_scoring(spark, sf_dir).toPandas()
+    got = bm25_scoring(spark, sf_dir).toPandas()
     assert len(got) == 20
     assert (got["bm25"] > 0).all()
     assert list(got["bm25"]) == sorted(got["bm25"], reverse=True)
@@ -145,7 +163,7 @@ def test_naive_bayes_covers_holdout(spark, sf_dir):
     docs = pd.read_parquet(f"{sf_dir}/documents.parquet",
                            columns=["doc_id", "lang"])
     holdout = set(docs.loc[docs["doc_id"] % 5 == 0, "doc_id"])
-    got = Q.naive_bayes_langid(spark, sf_dir).toPandas()
+    got = naive_bayes_langid(spark, sf_dir).toPandas()
     assert set(got["doc_id"]) == holdout
     langs = set(docs["lang"])
     assert set(got["pred_lang"]) <= langs
@@ -155,14 +173,14 @@ def test_naive_bayes_covers_holdout(spark, sf_dir):
 
 
 def test_heaps_slope_in_unit_range(spark, sf_dir):
-    got = (Q.heaps_law_fit(spark, sf_dir).toPandas()
+    got = (heaps_law_fit(spark, sf_dir).toPandas()
            .set_index("term")["estimate"])
     # Heaps exponent beta must land in (0, 1) for any natural-ish corpus
     assert 0.0 < got["coef_ln_n"] < 1.0
 
 
 def test_poisson_rate_consistency(spark, sf_dir):
-    got = Q.poisson_rate_ratio(spark, sf_dir).toPandas().iloc[0]
+    got = poisson_rate_ratio(spark, sf_dir).toPandas().iloc[0]
     ev = pd.read_parquet(f"{sf_dir}/events.parquet",
                          columns=["ts", "event_type"])
     ev = ev[ev["ts"].notna() & ev["event_type"].isin(["purchase", "error"])]
@@ -196,7 +214,7 @@ def test_semdedup_pairs_are_exact_subset(spark, sf_dir):
 
 
 def test_cochran_armitage_matches_manual(spark, sf_dir):
-    got = Q.cochran_armitage_trend(spark, sf_dir).toPandas().iloc[0]
+    got = cochran_armitage_trend(spark, sf_dir).toPandas().iloc[0]
     o = pd.read_parquet(f"{sf_dir}/orders.parquet",
                         columns=["o_orderpriority", "o_orderstatus"])
     w = o["o_orderpriority"].str[0].astype(int).to_numpy()
@@ -210,7 +228,7 @@ def test_cochran_armitage_matches_manual(spark, sf_dir):
 
 
 def test_triangle_count_matches_pandas(spark, sf_dir):
-    got = Q.triangle_count_brands(spark, sf_dir).toPandas().iloc[0]
+    got = triangle_count_brands(spark, sf_dir).toPandas().iloc[0]
     li = pd.read_parquet(f"{sf_dir}/lineitem.parquet",
                          columns=["l_orderkey", "l_partkey"])
     pt = pd.read_parquet(f"{sf_dir}/part.parquet",
@@ -234,7 +252,7 @@ def test_triangle_count_matches_pandas(spark, sf_dir):
 
 
 def test_kl_divergence_nonnegative_and_consistent(spark, sf_dir):
-    got = Q.kl_divergence_by_source(spark, sf_dir).toPandas()
+    got = kl_divergence_by_source(spark, sf_dir).toPandas()
     assert (got["kl_divergence"] >= 0).all()
     docs = pd.read_parquet(f"{sf_dir}/documents.parquet",
                            columns=["source", "text"])
@@ -255,7 +273,7 @@ def test_kl_divergence_nonnegative_and_consistent(spark, sf_dir):
 
 
 def test_poisson_glm_matches_converged_mle(spark, sf_dir):
-    got = (Q.poisson_glm_daily(spark, sf_dir).toPandas()
+    got = (poisson_glm_daily(spark, sf_dir).toPandas()
            .set_index("term")["estimate"])
     daily = _daily(sf_dir)
     t = daily["d"].to_numpy(float)
@@ -279,7 +297,7 @@ def test_poisson_glm_matches_converged_mle(spark, sf_dir):
 
 
 def test_duplicate_chunks_have_multiple_docs(spark, sf_dir):
-    got = Q.duplicate_chunks(spark, sf_dir).toPandas()
+    got = duplicate_chunks(spark, sf_dir).toPandas()
     assert len(got) > 0
     assert (got["n_docs"] > 1).all()
     assert (got["n_total"] >= got["n_docs"]).all()
@@ -308,7 +326,7 @@ def test_new_fit_operators_handle_empty_input(spark):
 
 
 def test_pareto_frontier_brute_force(spark, sf_dir):
-    got = Q.pareto_frontier_parts(spark, sf_dir).toPandas()
+    got = pareto_frontier_parts(spark, sf_dir).toPandas()
     p = pd.read_parquet(f"{sf_dir}/part.parquet",
                         columns=["p_brand", "p_retailprice", "p_size"]) \
           .drop_duplicates()
@@ -323,7 +341,7 @@ def test_pareto_frontier_brute_force(spark, sf_dir):
 
 
 def test_item_cosine_matches_pandas(spark, sf_dir):
-    got = Q.item_cosine_similarity(spark, sf_dir).toPandas()
+    got = item_cosine_similarity(spark, sf_dir).toPandas()
     li = pd.read_parquet(f"{sf_dir}/lineitem.parquet",
                          columns=["l_orderkey", "l_partkey"])
     pt = pd.read_parquet(f"{sf_dir}/part.parquet",
@@ -340,7 +358,7 @@ def test_item_cosine_matches_pandas(spark, sf_dir):
 
 
 def test_incremental_agg_equals_direct(spark, sf_dir):
-    got = Q.incremental_agg_refresh(spark, sf_dir).toPandas()
+    got = incremental_agg_refresh(spark, sf_dir).toPandas()
     o = pd.read_parquet(f"{sf_dir}/orders.parquet",
                         columns=["o_orderdate", "o_totalprice"])
     direct = (o.assign(month=pd.to_datetime(o["o_orderdate"])
@@ -355,7 +373,7 @@ def test_incremental_agg_equals_direct(spark, sf_dir):
 
 
 def test_bfs_hops_match_networkx_free_bfs(spark, sf_dir):
-    got = Q.bfs_hops_brands(spark, sf_dir).toPandas()
+    got = bfs_hops_brands(spark, sf_dir).toPandas()
     li = pd.read_parquet(f"{sf_dir}/lineitem.parquet",
                          columns=["l_orderkey", "l_partkey"])
     pt = pd.read_parquet(f"{sf_dir}/part.parquet",
@@ -387,7 +405,7 @@ def test_bfs_hops_match_networkx_free_bfs(spark, sf_dir):
 
 
 def test_overdispersion_matches_numpy(spark, sf_dir):
-    got = Q.overdispersion_daily(spark, sf_dir).toPandas().iloc[0]
+    got = overdispersion_daily(spark, sf_dir).toPandas().iloc[0]
     n = _daily(sf_dir)["n"].to_numpy(float)
     assert got["mean_daily"] == pytest.approx(n.mean(), abs=1e-3)
     assert got["var_daily"] == pytest.approx(n.var(ddof=1), abs=1e-2)
@@ -396,7 +414,7 @@ def test_overdispersion_matches_numpy(spark, sf_dir):
 
 
 def test_lsa_spectrum_properties(spark, sf_dir):
-    got = Q.lsa_singular_values(spark, sf_dir).toPandas()
+    got = lsa_singular_values(spark, sf_dir).toPandas()
     assert len(got) == 10
     sv = got["singular_value"].to_numpy()
     assert (sv >= 0).all()
@@ -412,7 +430,7 @@ def test_lsa_spectrum_properties(spark, sf_dir):
 
 
 def test_isotonic_matches_numpy_pava(spark, sf_dir):
-    got = (Q.isotonic_price_by_qty(spark, sf_dir).toPandas()
+    got = (isotonic_price_by_qty(spark, sf_dir).toPandas()
            .sort_values("q").reset_index(drop=True))
     fits = got["isotonic_fit"].to_numpy()
     # monotone nondecreasing by construction
@@ -447,7 +465,7 @@ def test_isotonic_matches_numpy_pava(spark, sf_dir):
 
 
 def test_lad_matches_numpy_irls(spark, sf_dir):
-    got = (Q.lad_lineitem(spark, sf_dir).toPandas()
+    got = (lad_lineitem(spark, sf_dir).toPandas()
            .set_index("term")["estimate"])
     li = pd.read_parquet(f"{sf_dir}/lineitem.parquet",
                          columns=["l_quantity", "l_extendedprice"]).dropna()
@@ -468,7 +486,7 @@ def test_lad_matches_numpy_irls(spark, sf_dir):
 
 
 def test_roc_auc_matches_sklearn_free_rank_formula(spark, sf_dir):
-    got = Q.roc_auc_order_status(spark, sf_dir).toPandas().iloc[0]
+    got = roc_auc_order_status(spark, sf_dir).toPandas().iloc[0]
     o = pd.read_parquet(f"{sf_dir}/orders.parquet",
                         columns=["o_orderstatus", "o_totalprice"])
     pos = (o["o_orderstatus"] == "F").to_numpy(int)
@@ -483,7 +501,7 @@ def test_roc_auc_matches_sklearn_free_rank_formula(spark, sf_dir):
 
 
 def test_target_encoding_excludes_own_fold(spark, sf_dir):
-    got = Q.target_encode_mktsegment(spark, sf_dir).toPandas()
+    got = target_encode_mktsegment(spark, sf_dir).toPandas()
     c = pd.read_parquet(f"{sf_dir}/customer.parquet",
                         columns=["c_custkey", "c_mktsegment", "c_acctbal"])
     c = c[c["c_acctbal"].notna()]
@@ -501,7 +519,7 @@ def test_target_encoding_excludes_own_fold(spark, sf_dir):
 
 
 def test_funnel_latency_matches_pandas(spark, sf_dir):
-    got = Q.funnel_latency_quantiles(spark, sf_dir).toPandas().iloc[0]
+    got = funnel_latency_quantiles(spark, sf_dir).toPandas().iloc[0]
     ev = pd.read_parquet(f"{sf_dir}/events.parquet",
                          columns=["user_id", "ts", "event_type"])
     lats = []
@@ -524,12 +542,12 @@ def test_funnel_latency_matches_pandas(spark, sf_dir):
 
 
 def test_basket_triples_support_is_consistent(spark, sf_dir):
-    got = Q.basket_triples(spark, sf_dir).toPandas()
+    got = basket_triples(spark, sf_dir).toPandas()
     assert len(got) == 20
     assert (got["support"] > 0).all()
     assert list(got["support"]) == sorted(got["support"], reverse=True)
     # every triple's support cannot exceed any of its pair supports
-    pairs = Q.item_cosine_similarity(spark, sf_dir).toPandas()
+    pairs = item_cosine_similarity(spark, sf_dir).toPandas()
     pmap = {(r["brand_a"], r["brand_b"]): r["n_ab"]
             for _, r in pairs.iterrows()}
     for _, r in got.head(3).iterrows():
@@ -539,7 +557,7 @@ def test_basket_triples_support_is_consistent(spark, sf_dir):
 
 
 def test_trigram_similarity_reflexive_names_score_one(spark, sf_dir):
-    got = Q.trigram_name_similarity(spark, sf_dir).toPandas()
+    got = trigram_name_similarity(spark, sf_dir).toPandas()
     assert (got["gram_cosine"] >= 0.5).all()
     assert (got["gram_cosine"] <= 1.0).all()
     # representative matching: no pair of identical names can appear
@@ -554,7 +572,7 @@ def test_trigram_similarity_reflexive_names_score_one(spark, sf_dir):
 
 
 def test_robust_outliers_match_numpy(spark, sf_dir):
-    got = Q.robust_outlier_days(spark, sf_dir).toPandas()
+    got = robust_outlier_days(spark, sf_dir).toPandas()
     n = _daily(sf_dir).sort_values("d")["n"].to_numpy(float)
     med = np.median(n)
     mad = np.median(np.abs(n - med))
@@ -565,22 +583,22 @@ def test_robust_outliers_match_numpy(spark, sf_dir):
 
 
 def test_cohort_ltv_monotone_within_cohort(spark, sf_dir):
-    got = Q.cohort_ltv(spark, sf_dir).toPandas()
+    got = cohort_ltv(spark, sf_dir).toPandas()
     for _, g in got.groupby("cohort_week"):
         vals = g.sort_values("week_offset")["cum_ltv_per_user"].to_numpy()
         assert (np.diff(vals) >= -1e-9).all()  # cumulative, value >= 0
 
 
 def test_bounce_rate_bounds_and_totals(spark, sf_dir):
-    got = Q.daily_bounce_rate(spark, sf_dir).toPandas()
+    got = daily_bounce_rate(spark, sf_dir).toPandas()
     assert (got["bounce_rate"] >= 0).all() and (got["bounce_rate"] <= 1).all()
     assert (got["n_bounces"] <= got["n_sessions"]).all()
-    sess = Q.events_sessions(spark, sf_dir).toPandas()
+    sess = events_sessions(spark, sf_dir).toPandas()
     assert got["n_sessions"].sum() == sess["n_sessions"].sum()
 
 
 def test_yule_k_matches_manual(spark, sf_dir):
-    got = Q.yule_k_by_source(spark, sf_dir).toPandas().set_index("source")
+    got = yule_k_by_source(spark, sf_dir).toPandas().set_index("source")
     docs = pd.read_parquet(f"{sf_dir}/documents.parquet",
                            columns=["source", "text"])
     src = "src0"
@@ -599,7 +617,7 @@ def test_yule_k_matches_manual(spark, sf_dir):
 
 
 def test_burstiness_in_range(spark, sf_dir):
-    got = Q.burstiness_by_type(spark, sf_dir).toPandas()
+    got = burstiness_by_type(spark, sf_dir).toPandas()
     assert len(got) == 5
     assert (got["burstiness"] > -1).all() and (got["burstiness"] < 1).all()
     ev = pd.read_parquet(f"{sf_dir}/events.parquet",
@@ -614,7 +632,7 @@ def test_burstiness_in_range(spark, sf_dir):
 
 
 def test_catalog_profile_consistency(spark, sf_dir):
-    got = Q.catalog_profile(spark, sf_dir).toPandas()
+    got = catalog_profile(spark, sf_dir).toPandas()
     assert len(got) == 49
     assert (got["n_nulls"] >= 0).all()
     assert (got["n_distinct"] <= got["n_rows"]).all()
@@ -657,7 +675,7 @@ def test_poisson_glm_oracle_drops_null_rows(spark):
 
 
 def test_cms_overestimates_and_is_tight_here(spark, sf_dir):
-    got = Q.cms_event_counts(spark, sf_dir).toPandas()
+    got = cms_event_counts(spark, sf_dir).toPandas()
     assert len(got) == 5
     # the CMS guarantee: never underestimates
     assert (got["cms_estimate"] >= got["true_count"]).all()
@@ -668,7 +686,7 @@ def test_cms_overestimates_and_is_tight_here(spark, sf_dir):
 
 
 def test_k_anonymity_consistency(spark, sf_dir):
-    got = Q.k_anonymity_audit(spark, sf_dir).toPandas().iloc[0]
+    got = k_anonymity_audit(spark, sf_dir).toPandas().iloc[0]
     c = pd.read_parquet(f"{sf_dir}/customer.parquet",
                         columns=["c_nationkey", "c_mktsegment", "c_acctbal"])
     g = (c.assign(band=np.floor(c["c_acctbal"] / 1000))
@@ -683,8 +701,8 @@ def test_k_anonymity_consistency(spark, sf_dir):
 
 
 def test_nelson_aalen_vs_km_consistency(spark, sf_dir):
-    na = Q.nelson_aalen_hazard(spark, sf_dir).toPandas()
-    km = Q.kaplan_meier_retention(spark, sf_dir).toPandas()
+    na = nelson_aalen_hazard(spark, sf_dir).toPandas()
+    km = kaplan_meier_retention(spark, sf_dir).toPandas()
     # same life table: identical event times and at-risk counts
     assert list(na["duration_days"]) == list(km["duration_days"])
     assert list(na["n_at_risk"]) == list(km["n_at_risk"])
@@ -697,7 +715,7 @@ def test_nelson_aalen_vs_km_consistency(spark, sf_dir):
 
 
 def test_did_matches_pandas(spark, sf_dir):
-    got = Q.diff_in_diff_revenue(spark, sf_dir).toPandas().iloc[0]
+    got = diff_in_diff_revenue(spark, sf_dir).toPandas().iloc[0]
     o = pd.read_parquet(f"{sf_dir}/orders.parquet")
     o = o[o["o_orderpriority"].isin(["1-URGENT", "5-LOW"])
           & o["o_orderdate"].notna()]
@@ -709,7 +727,7 @@ def test_did_matches_pandas(spark, sf_dir):
 
 
 def test_woe_iv_sums_and_signs(spark, sf_dir):
-    got = Q.woe_iv_mktsegment(spark, sf_dir).toPandas()
+    got = woe_iv_mktsegment(spark, sf_dir).toPandas()
     assert len(got) == 5
     # IV contributions are nonnegative by construction ((ps-ns) and
     # ln(ps/ns) always share a sign)
@@ -725,7 +743,7 @@ def test_woe_iv_sums_and_signs(spark, sf_dir):
 
 
 def test_calibration_brier_matches_pandas(spark, sf_dir):
-    got = Q.calibration_order_status(spark, sf_dir).toPandas()
+    got = calibration_order_status(spark, sf_dir).toPandas()
     o = pd.read_parquet(f"{sf_dir}/orders.parquet",
                         columns=["o_totalprice", "o_orderstatus"])
     p = np.round(1 / (1 + np.exp(-(-2.0 + o["o_totalprice"] * 1e-5))), 6)
@@ -736,7 +754,7 @@ def test_calibration_brier_matches_pandas(spark, sf_dir):
 
 
 def test_conformal_coverage_near_nominal(spark, sf_dir):
-    got = Q.conformal_interval_coverage(spark, sf_dir).toPandas().iloc[0]
+    got = conformal_interval_coverage(spark, sf_dir).toPandas().iloc[0]
     # split-conformal guarantee: coverage within sampling noise of 0.9
     assert 0.8 <= got["coverage"] <= 1.0
     assert got["n_covered"] <= got["n_test"]
@@ -744,7 +762,7 @@ def test_conformal_coverage_near_nominal(spark, sf_dir):
 
 
 def test_gmm_matches_numpy_em(spark, sf_dir):
-    got = (Q.gmm_order_value(spark, sf_dir).toPandas()
+    got = (gmm_order_value(spark, sf_dir).toPandas()
            .set_index("component"))
     o = pd.read_parquet(f"{sf_dir}/orders.parquet",
                         columns=["o_totalprice"]).dropna()
@@ -793,7 +811,7 @@ def test_gmm_oracle_matches_operator_on_degenerate_input(spark):
 
 
 def test_lorenz_curve_properties(spark, sf_dir):
-    got = (Q.lorenz_curve_spend(spark, sf_dir).toPandas()
+    got = (lorenz_curve_spend(spark, sf_dir).toPandas()
            .sort_values("decile").reset_index(drop=True))
     assert list(got["decile"]) == list(range(1, 11))
     # Lorenz curve: nondecreasing, convex-ish shares, ends at 1
@@ -810,7 +828,7 @@ def test_lorenz_curve_properties(spark, sf_dir):
 
 
 def test_mann_kendall_matches_manual(spark, sf_dir):
-    got = Q.mann_kendall_daily(spark, sf_dir).toPandas().iloc[0]
+    got = mann_kendall_daily(spark, sf_dir).toPandas().iloc[0]
     daily = _daily(sf_dir).sort_values("d")
     n = daily["n"].to_numpy()
     k = len(n)
@@ -826,6 +844,6 @@ def test_mann_kendall_matches_manual(spark, sf_dir):
     assert got["var_s"] == pytest.approx(var, abs=1e-3)
     assert got["z_stat"] == pytest.approx(z, abs=1e-4)
     # consistency with the Theil-Sen slope's sign
-    ts = Q.theilsen_daily_trend(spark, sf_dir).toPandas().iloc[0]
+    ts = theilsen_daily_trend(spark, sf_dir).toPandas().iloc[0]
     if abs(got["z_stat"]) > 1.96:
         assert np.sign(ts["slope"]) == np.sign(got["s_stat"])

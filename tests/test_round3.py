@@ -7,7 +7,16 @@ from __future__ import annotations
 import pandas as pd
 import pytest
 
-from parking_bigdata_spark import queries as Q
+from parking_bigdata_spark.queries.a_stats import rf_score_holdout
+from parking_bigdata_spark.queries.a_stats2 import (
+    catalog_profile, catalog_profile_approx_detail, cooks_distance_outliers,
+    fisher_exact_2x2, kendall_tau_qty_discount, partial_corr_matrix,
+    pr_auc_order_status)
+from parking_bigdata_spark.queries.b_llm import (
+    cluster_keep_best, decontam_bloom, decontam_overlap,
+    dsir_importance_weights)
+from parking_bigdata_spark.queries.c_temporal import (
+    changepoint_binseg_daily, holt_linear_daily, interval_union_coverage)
 
 
 def _plan(df) -> str:
@@ -32,9 +41,9 @@ def test_catalog_profile_no_expand(spark, sf_dir):
 
 
 def test_catalog_profile_approx_within_hll_bounds(spark, sf_dir):
-    exact = (Q.catalog_profile(spark, sf_dir).toPandas()
+    exact = (catalog_profile(spark, sf_dir).toPandas()
              .set_index(["table_name", "column_name"]))
-    approx = (Q.catalog_profile_approx_detail(spark, sf_dir).toPandas()
+    approx = (catalog_profile_approx_detail(spark, sf_dir).toPandas()
               .set_index(["table_name", "column_name"]))
     assert len(approx) == len(exact) == 49
     j = exact.join(approx, rsuffix="_a")
@@ -116,7 +125,7 @@ def test_forest_partition_independent(spark, sf_dir):
 
 
 def test_rf_score_holdout_disjoint_and_shaped(spark, sf_dir):
-    got = Q.rf_score_holdout(spark, sf_dir).toPandas()
+    got = rf_score_holdout(spark, sf_dir).toPandas()
     assert set(got.columns) == {"l_orderkey", "l_linenumber", "actual",
                                 "predicted", "residual"}
     assert (got["l_orderkey"] % 5 == 0).all()  # holdout fold only
@@ -128,7 +137,7 @@ def test_rf_score_holdout_disjoint_and_shaped(spark, sf_dir):
 
 
 def test_fisher_exact_sanity(spark, sf_dir):
-    row = Q.fisher_exact_2x2(spark, sf_dir).collect()[0]
+    row = fisher_exact_2x2(spark, sf_dir).collect()[0]
     assert 0.0 <= row["p_two_sided"] <= 1.0
     assert row["n_11"] + row["n_12"] + row["n_21"] + row["n_22"] > 0
     # independence of balance sign and segment holds in the generator,
@@ -173,7 +182,7 @@ def test_kendall_tau_matches_bruteforce(spark):
     # end-to-end statistic bounded and consistent with the brute form
     import math as m
     assert abs((C - D) / m.sqrt((n0 - tx) * (n0 - ty)) - expect) < 1e-12
-    tau = (Q.kendall_tau_qty_discount(spark, "/root/testdata/sf0.001")
+    tau = (kendall_tau_qty_discount(spark, "/root/testdata/sf0.001")
            .collect()[0]["tau_b"])
     assert -1.0 <= tau <= 1.0
 
@@ -182,9 +191,9 @@ def test_bloom_decontam_supersets_exact(spark, sf_dir):
     # zero false negatives: every doc the exact gram join flags must be
     # flagged by the bloom probe with at least as many grams
     exact = {r["doc_id"]: r["n_shared_grams"]
-             for r in Q.decontam_overlap(spark, sf_dir).collect()}
+             for r in decontam_overlap(spark, sf_dir).collect()}
     bloom = {r["doc_id"]: r["n_flagged_grams"]
-             for r in Q.decontam_bloom(spark, sf_dir).collect()}
+             for r in decontam_bloom(spark, sf_dir).collect()}
     assert set(exact) <= set(bloom)
     for d, n in exact.items():
         assert bloom[d] >= n, (d, bloom[d], n)
@@ -209,14 +218,14 @@ def test_binseg_finds_planted_shift(spark):
         df.coalesce(1).write.parquet(os.path.join(td, "events.parquet"))
         for t in ("region", "nation"):  # unused, but loader resolves lazily
             pass
-        out = Q.changepoint_binseg_daily(spark, td).collect()[0]
+        out = changepoint_binseg_daily(spark, td).collect()[0]
     assert out["split_day"] == 24
     assert out["mean_left"] == 5.0 and out["mean_right"] == 40.0
 
 
 def test_pr_auc_matches_bruteforce(spark, sf_dir):
     import pandas as pd_
-    got = Q.pr_auc_order_status(spark, sf_dir).collect()[0]
+    got = pr_auc_order_status(spark, sf_dir).collect()[0]
     df = (spark.read.parquet(f"{sf_dir}/orders.parquet")
           .select("o_orderstatus", "o_totalprice").toPandas())
     df["pos"] = (df["o_orderstatus"] == "P").astype(int)
@@ -232,7 +241,7 @@ def test_pr_auc_matches_bruteforce(spark, sf_dir):
 
 def test_cooks_distance_matches_numpy(spark, sf_dir):
     import numpy as np
-    top = Q.cooks_distance_outliers(spark, sf_dir).toPandas()
+    top = cooks_distance_outliers(spark, sf_dir).toPandas()
     li = (spark.read.parquet(f"{sf_dir}/lineitem.parquet")
           .select("l_orderkey", "l_linenumber", "l_quantity",
                   "l_extendedprice").toPandas())
@@ -253,7 +262,7 @@ def test_cooks_distance_matches_numpy(spark, sf_dir):
 def test_dsir_weights_favor_target_like_docs(spark, sf_dir):
     # docs FROM the target slice should average a higher importance
     # weight than the corpus at large (they define p_target)
-    w = Q.dsir_importance_weights(spark, sf_dir).toPandas()
+    w = dsir_importance_weights(spark, sf_dir).toPandas()
     docs = (spark.read.parquet(f"{sf_dir}/documents.parquet")
             .select("doc_id", "source").toPandas())
     j = w.merge(docs, on="doc_id")
@@ -278,7 +287,7 @@ def test_interval_coverage_bruteforce_small(spark):
     import tempfile, os
     with tempfile.TemporaryDirectory() as td:
         df.coalesce(1).write.parquet(os.path.join(td, "events.parquet"))
-        out = Q.interval_union_coverage(spark, td).collect()[0]
+        out = interval_union_coverage(spark, td).collect()[0]
     # user1: [0,400) U [10000,10300) = 700; user2: 300
     assert out["n_users"] == 2
     assert out["total_covered_s"] == 1000
@@ -287,7 +296,7 @@ def test_interval_coverage_bruteforce_small(spark):
 
 
 def test_holt_matches_reference_recurrence(spark, sf_dir):
-    got = Q.holt_linear_daily(spark, sf_dir).collect()[0]
+    got = holt_linear_daily(spark, sf_dir).collect()[0]
     # recompute independently from the daily series
     from parking_bigdata_spark.io import load_table
     from pyspark.sql import functions as F
@@ -307,7 +316,7 @@ def test_holt_matches_reference_recurrence(spark, sf_dir):
 
 
 def test_cluster_keep_best_retention_invariants(spark, sf_dir):
-    kb = Q.cluster_keep_best(spark, sf_dir).toPandas()
+    kb = cluster_keep_best(spark, sf_dir).toPandas()
     docs = (spark.read.parquet(f"{sf_dir}/documents.parquet")
             .select("doc_id").toPandas())
     # full retention decision: cluster sizes sum to the corpus
@@ -320,6 +329,6 @@ def test_cluster_keep_best_retention_invariants(spark, sf_dir):
 
 
 def test_partial_corr_bounded_and_symmetric_free(spark, sf_dir):
-    pc = Q.partial_corr_matrix(spark, sf_dir).toPandas()
+    pc = partial_corr_matrix(spark, sf_dir).toPandas()
     assert len(pc) == 6  # 4 choose 2
     assert (pc["partial_corr"].abs() <= 1.0 + 1e-9).all()

@@ -9,7 +9,42 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from parking_bigdata_spark import queries as Q
+from parking_bigdata_spark.queries.a_core import rank_stability_nations
+from parking_bigdata_spark.queries.a_stats2 import (
+    bartlett_acctbal_by_segment, chow_test_by_flag, cohen_kappa_orders,
+    cronbach_alpha, higher_moments_by_flag, mahalanobis_outliers,
+    mcnemar_orders, ordinal_assoc_qty_discount, partial_corr_matrix,
+    theil_index_by_segment, wilcoxon_signed_rank)
+from parking_bigdata_spark.queries.a_stats_ext import (
+    ad_ksample_priority, anova_effect_sizes, brier_decomposition, cmh_orders,
+    cohens_h_priority, dagostino_k2_price, deming_regression,
+    dunn_posthoc_segments, epi_2x2_measures, gehan_wilcoxon_churn,
+    hellinger_order_value, hosmer_lemeshow_status, jonckheere_trend_qty,
+    lda_returnflag, leverage_audit, logrank_churn_ab, median_ci_order_value,
+    pivot_multi_metrics, quantile_reg_90, sign_test_price,
+    stratified_ht_estimate, weighted_kappa_orders, white_test_hetero)
+from parking_bigdata_spark.queries.b_llm import (
+    dedup_clusters, ngram_jaccard, quality_lift_table, vocab_overlap_by_source)
+from parking_bigdata_spark.queries.b_llm_ext import (
+    ann_truncation_recall, bigram_ppl_by_source, boilerplate_prefix_by_source,
+    char_entropy_by_source, charset_profile_by_source, contamination_profile,
+    cross_source_duplication, dedup_savings_by_source, dedup_threshold_curve,
+    dup_cluster_size_histogram, embedding_effective_rank, embedding_isotropy,
+    gram_novelty_by_source, label_cohesion_embeddings, langid_confusion,
+    padding_waste_by_bucket, source_diversity, source_js_matrix,
+    source_mixture_weights, token_packing_stats, vocab_coverage_topk)
+from parking_bigdata_spark.queries.c_temporal import (
+    friedman_dow_test, ljung_box_daily, negbin_mom_daily, peak_load_window,
+    seasonal_naive_error_daily)
+from parking_bigdata_spark.queries.c_temporal_ext import (
+    ar2_yule_walker_daily, arch_lm_daily, breusch_godfrey_daily,
+    ccf_count_value, conversion_by_session_depth, generalized_esd_daily,
+    granger_count_to_value, hourly_entropy_by_type, interarrival_exp_ks,
+    kendalls_w_dow, newey_west_trend, pacf_daily, periodogram_daily,
+    pettitt_changepoint_daily, psi_monthly_orders, purchase_cadence,
+    records_trend_daily, retention_half_life, session_event_cooccurrence,
+    session_lognormal_fit, spectral_entropy_daily, wavelet_energy_daily,
+    weekend_lift_daily, wilson_ci_event_reach)
 
 
 @pytest.fixture(scope="module")
@@ -29,7 +64,7 @@ def orders(sf_dir):
 
 def test_partial_corr_matches_numpy_inverse(spark, sf_dir, lineitem):
     got = {(r["col_x"], r["col_y"]): r["partial_corr"]
-           for r in Q.partial_corr_matrix(spark, sf_dir).collect()}
+           for r in partial_corr_matrix(spark, sf_dir).collect()}
     cols = ["l_quantity", "l_extendedprice", "l_discount", "l_tax"]
     R = np.corrcoef(lineitem[cols].to_numpy(float), rowvar=False)
     P = np.linalg.inv(R)
@@ -41,7 +76,7 @@ def test_partial_corr_matches_numpy_inverse(spark, sf_dir, lineitem):
 
 
 def test_mahalanobis_matches_numpy(spark, sf_dir, lineitem):
-    top = Q.mahalanobis_outliers(spark, sf_dir).toPandas()
+    top = mahalanobis_outliers(spark, sf_dir).toPandas()
     cols = ["l_quantity", "l_extendedprice", "l_discount"]
     X = lineitem[cols].to_numpy(float)
     mu = X.mean(axis=0)
@@ -55,7 +90,7 @@ def test_mahalanobis_matches_numpy(spark, sf_dir, lineitem):
 
 
 def test_chow_matches_direct_ols(spark, sf_dir, lineitem):
-    got = Q.chow_test_by_flag(spark, sf_dir).collect()[0]
+    got = chow_test_by_flag(spark, sf_dir).collect()[0]
 
     def ssr(df):
         x = df["l_quantity"].to_numpy(float)
@@ -74,7 +109,7 @@ def test_chow_matches_direct_ols(spark, sf_dir, lineitem):
 
 
 def test_cronbach_matches_pandas(spark, sf_dir, lineitem):
-    got = Q.cronbach_alpha(spark, sf_dir).collect()[0]
+    got = cronbach_alpha(spark, sf_dir).collect()[0]
     cols = ["l_quantity", "l_extendedprice", "l_discount", "l_tax"]
     item_vars = lineitem[cols].var(ddof=1)
     total_var = lineitem[cols].sum(axis=1).var(ddof=1)
@@ -92,16 +127,16 @@ def test_kappa_and_mcnemar_match_pandas(spark, sf_dir, orders):
     n = a + b + c + d
     po = (a + d) / n
     pe = ((a + b) * (a + c) + (c + d) * (b + d)) / n ** 2
-    kap = Q.cohen_kappa_orders(spark, sf_dir).collect()[0]
+    kap = cohen_kappa_orders(spark, sf_dir).collect()[0]
     assert abs(kap["kappa"] - (po - pe) / (1 - pe)) < 1e-5
-    mc = Q.mcnemar_orders(spark, sf_dir).collect()[0]
+    mc = mcnemar_orders(spark, sf_dir).collect()[0]
     assert mc["b"] == b and mc["c"] == c
     assert abs(mc["chi2_corrected"]
                - (abs(b - c) - 1) ** 2 / (b + c)) < 1e-3
 
 
 def test_bartlett_matches_direct(spark, sf_dir, customer):
-    got = Q.bartlett_acctbal_by_segment(spark, sf_dir).collect()[0]
+    got = bartlett_acctbal_by_segment(spark, sf_dir).collect()[0]
     g = customer.groupby("c_mktsegment")["c_acctbal"]
     ns = g.count().to_numpy(float)
     s2 = g.var(ddof=1).to_numpy(float)
@@ -114,7 +149,7 @@ def test_bartlett_matches_direct(spark, sf_dir, customer):
 
 def test_theil_matches_direct(spark, sf_dir, customer):
     got = {r["c_mktsegment"]: r["theil_index"]
-           for r in Q.theil_index_by_segment(spark, sf_dir).collect()}
+           for r in theil_index_by_segment(spark, sf_dir).collect()}
     pos = customer[customer["c_acctbal"] > 0]
     for seg, grp in pos.groupby("c_mktsegment"):
         x = grp["c_acctbal"].to_numpy(float)
@@ -125,7 +160,7 @@ def test_theil_matches_direct(spark, sf_dir, customer):
 
 def test_higher_moments_match_scipy_free(spark, sf_dir, lineitem):
     got = {r["l_returnflag"]: r for r in
-           Q.higher_moments_by_flag(spark, sf_dir).collect()}
+           higher_moments_by_flag(spark, sf_dir).collect()}
     for flag, grp in lineitem.groupby("l_returnflag"):
         x = grp["l_extendedprice"].to_numpy(float)
         m = x.mean()
@@ -138,7 +173,7 @@ def test_higher_moments_match_scipy_free(spark, sf_dir, lineitem):
 
 
 def test_quality_lift_table_invariants(spark, sf_dir):
-    lift = Q.quality_lift_table(spark, sf_dir).toPandas()
+    lift = quality_lift_table(spark, sf_dir).toPandas()
     docs = pd.read_parquet(f"{sf_dir}/documents.parquet")
     assert sorted(lift["decile"]) == list(range(1, 11))
     assert lift["n_docs"].sum() == len(docs)
@@ -152,7 +187,7 @@ def test_quality_lift_table_invariants(spark, sf_dir):
 
 def test_vocab_overlap_target_is_unity(spark, sf_dir):
     ov = {r["source"]: r for r in
-          Q.vocab_overlap_by_source(spark, sf_dir).collect()}
+          vocab_overlap_by_source(spark, sf_dir).collect()}
     assert ov["src0"]["vocab_jaccard"] == 1.0
     assert ov["src0"]["n_common"] == ov["src0"]["n_vocab"]
     for src, r in ov.items():
@@ -160,7 +195,7 @@ def test_vocab_overlap_target_is_unity(spark, sf_dir):
 
 
 def test_seasonal_naive_error_positive_and_bounded(spark, sf_dir):
-    r = Q.seasonal_naive_error_daily(spark, sf_dir).collect()[0]
+    r = seasonal_naive_error_daily(spark, sf_dir).collect()[0]
     assert r["n_scored_days"] > 10  # sf0.001 events span ~a month
     assert r["mae"] > 0 and r["rmse"] >= r["mae"]
 
@@ -168,7 +203,7 @@ def test_seasonal_naive_error_positive_and_bounded(spark, sf_dir):
 def test_peak_load_window_is_max_of_hops(spark, sf_dir):
     from parking_bigdata_spark.io import load_table
     from pyspark.sql import functions as F
-    peak = Q.peak_load_window(spark, sf_dir).collect()[0]
+    peak = peak_load_window(spark, sf_dir).collect()[0]
     ev = load_table(spark, sf_dir, "events").where(F.col("ts").isNotNull())
     mx = (ev.groupBy(F.window("ts", "1 hour", "15 minutes"))
             .count().agg(F.max("count")).collect()[0][0])
@@ -188,7 +223,7 @@ def test_wilcoxon_matches_pandas_rank_recompute(spark, sf_dir, lineitem):
     t = d.abs().value_counts().to_numpy()
     var = n * (n + 1) * (2 * n + 1) / 24.0 - float(((t**3) - t).sum()) / 48
     z = (wplus - n * (n + 1) / 4.0) / np.sqrt(var)
-    got = Q.wilcoxon_signed_rank(spark, sf_dir).collect()[0]
+    got = wilcoxon_signed_rank(spark, sf_dir).collect()[0]
     assert got["n_pairs"] == n
     assert abs(got["w_plus"] - wplus) < 0.01
     assert abs(got["z_stat"] - z) < 1e-5
@@ -212,7 +247,7 @@ def test_ordinal_assoc_matches_brute_force_cube(spark, sf_dir, lineitem):
     scy = cells.groupby("l_discount")["c"].sum().to_numpy().astype(float)
     n1 = ((srx**2).sum() - n) / 2
     n2 = ((scy**2).sum() - n) / 2
-    got = Q.ordinal_assoc_qty_discount(spark, sf_dir).collect()[0]
+    got = ordinal_assoc_qty_discount(spark, sf_dir).collect()[0]
     assert got["concordant"] == C and got["discordant"] == D
     assert abs(got["gk_gamma"] - (C - D) / (C + D)) < 1e-5
     assert abs(got["somers_d_yx"] - (C - D) / (n0 - n1)) < 1e-5
@@ -234,7 +269,7 @@ def test_ljung_box_matches_numpy_acf(spark, sf_dir):
     pos = {d: v for d, v in zip(idx, x)}
     q = 0.0
     got = {r["lag_k"]: r for r in
-           Q.ljung_box_daily(spark, sf_dir).collect()}
+           ljung_box_daily(spark, sf_dir).collect()}
     for k in range(1, 8):
         ck = sum((pos[d] - xbar) * (pos[d + k] - xbar)
                  for d in idx if d + k in pos)
@@ -245,7 +280,7 @@ def test_ljung_box_matches_numpy_acf(spark, sf_dir):
 
 
 def test_negbin_mom_recovers_moment_identities(spark, sf_dir):
-    got = Q.negbin_mom_daily(spark, sf_dir).collect()[0]
+    got = negbin_mom_daily(spark, sf_dir).collect()[0]
     ev = pd.read_parquet(f"{sf_dir}/events.parquet").dropna(subset=["ts"])
     daily = ev.assign(d=ev.ts.dt.normalize()).groupby("d").size()
     m, v = daily.mean(), daily.var(ddof=1)
@@ -276,7 +311,7 @@ def test_gram_novelty_matches_pandas_sets(spark, sf_dir):
         for g in grams:
             owners.setdefault(g, set()).add(did)
     got = {r["source"]: r for r in
-           Q.gram_novelty_by_source(spark, sf_dir).collect()}
+           gram_novelty_by_source(spark, sf_dir).collect()}
     by_src = {}
     for did, (src, grams) in per_doc.items():
         by_src.setdefault(src, set()).update(grams)
@@ -292,7 +327,7 @@ def test_boilerplate_prefix_matches_pandas(spark, sf_dir):
                               for t in docs.text])
     pre = pre[pre.prefix.str.split().str.len() >= 4]
     got = {r["source"]: r for r in
-           Q.boilerplate_prefix_by_source(spark, sf_dir).collect()}
+           boilerplate_prefix_by_source(spark, sf_dir).collect()}
     for src, g in pre.groupby("source"):
         counts = (g.groupby("prefix").size().reset_index(name="n")
                   .sort_values(["n", "prefix"], ascending=[False, True]))
@@ -306,7 +341,7 @@ def test_charset_profile_matches_recompute(spark, sf_dir):
     import re
     docs = pd.read_parquet(f"{sf_dir}/documents.parquet")
     got = {r["source"]: r for r in
-           Q.charset_profile_by_source(spark, sf_dir).collect()}
+           charset_profile_by_source(spark, sf_dir).collect()}
     src = docs.source.iloc[0]
     g = docs[docs.source == src]
     ws = np.mean([len(re.findall(r"[ \t\n\r]", t)) / len(t)
@@ -328,7 +363,7 @@ def test_token_packing_matches_integer_cumsum(spark, sf_dir):
     start, end = cum - n, cum
     nz = n > 0
     crossing = int((((end[nz] - 1) // 512) > (start[nz] // 512)).sum())
-    got = Q.token_packing_stats(spark, sf_dir).collect()[0]
+    got = token_packing_stats(spark, sf_dir).collect()[0]
     assert got["n_docs"] == int(nz.sum())
     assert got["total_tokens"] == int(n.sum())
     assert got["n_sequences"] == -(-int(n.sum()) // 512)
@@ -365,7 +400,7 @@ def test_dagostino_k2_matches_published_formulas(spark, sf_dir):
     z2 = ((1 - 2 / (9 * a))
           - np.cbrt((1 - 2 / a) / (1 + xk * np.sqrt(2 / (a - 4))))
           ) / np.sqrt(2 / (9 * a))
-    got = Q.dagostino_k2_price(spark, sf_dir).collect()[0]
+    got = dagostino_k2_price(spark, sf_dir).collect()[0]
     assert got["n"] == int(n)
     assert abs(got["skewness_g1"] - g1) < 1e-4
     assert abs(got["kurtosis_b2"] - b2) < 1e-4
@@ -383,7 +418,7 @@ def test_dunn_posthoc_matches_pandas_ranks(spark, sf_dir):
     mr = r.groupby(c.c_mktsegment).mean()
     ng = c.c_mktsegment.value_counts()
     got = {(x["seg_a"], x["seg_b"]): x for x in
-           Q.dunn_posthoc_segments(spark, sf_dir).collect()}
+           dunn_posthoc_segments(spark, sf_dir).collect()}
     segs = sorted(mr.index)
     assert len(got) == len(segs) * (len(segs) - 1) // 2
     for i, sa in enumerate(segs):
@@ -408,7 +443,7 @@ def test_jonckheere_matches_bruteforce_cube(spark, sf_dir):
             lt = np.searchsorted(vi, vj, side="left")
             le = np.searchsorted(vi, vj, side="right")
             jt += lt.sum() + 0.5 * (le - lt).sum()
-    got = Q.jonckheere_trend_qty(spark, sf_dir).collect()[0]
+    got = jonckheere_trend_qty(spark, sf_dir).collect()[0]
     assert got["n"] == len(li)
     assert abs(got["jt_stat"] - jt) < 0.51
     # mean under H0
@@ -450,7 +485,7 @@ def test_logrank_matches_pandas_life_table(spark, sf_dir):
         o1 += d1
         e1 += d * n1 / nat
         vv += d * (n1 / nat) * ((nat - n1) / nat) * (nat - d) / (nat - 1)
-    got = Q.logrank_churn_ab(spark, sf_dir).collect()[0]
+    got = logrank_churn_ab(spark, sf_dir).collect()[0]
     assert got["n_arm_a"] == int((lt.b == 1).sum())
     assert got["n_arm_b"] == int((lt.b == 0).sum())
     assert got["observed_a_churn"] == int(o1)
@@ -473,7 +508,7 @@ def test_ccf_matches_pandas_shifted_corr(spark, sf_dir):
                .agg(n=("event_id", "size"), v=("value", "mean"))
                .reset_index())
     got = {r["lag_k"]: r for r in
-           Q.ccf_count_value(spark, sf_dir).collect()}
+           ccf_count_value(spark, sf_dir).collect()}
     for k in (-2, 0, 3):
         m = daily.merge(daily.assign(d=daily.d - k)[["d", "v"]],
                         on="d", suffixes=("", "_lag"))
@@ -498,7 +533,7 @@ def test_granger_f_matches_numpy_ols(spark, sf_dir):
                            ** 2).sum())
     rss_r, rss_f = rss(Xr), rss(Xf)
     f = (rss_r - rss_f) / (rss_f / (n - 3))
-    got = Q.granger_count_to_value(spark, sf_dir).collect()[0]
+    got = granger_count_to_value(spark, sf_dir).collect()[0]
     assert got["n_obs"] == n
     assert abs(got["rss_restricted"] - rss_r) < max(1e-2, 1e-6 * rss_r)
     assert abs(got["rss_full"] - rss_f) < max(1e-2, 1e-6 * rss_f)
@@ -516,7 +551,7 @@ def test_pettitt_matches_bruteforce(spark, sf_dir):
     u = 2 * s - t * (nd + 1)
     k = np.abs(u).max()
     best_day = int(daily.d.iloc[np.argmax(np.abs(u))])
-    got = Q.pettitt_changepoint_daily(spark, sf_dir).collect()[0]
+    got = pettitt_changepoint_daily(spark, sf_dir).collect()[0]
     assert got["n_days"] == nd
     assert abs(got["k_stat"] - k) < 0.51
     assert got["changepoint_day"] == best_day
@@ -532,7 +567,7 @@ def test_periodogram_peaks_at_planted_period(spark, sf_dir):
     d = daily.d.to_numpy(dtype=float)
     xc = x - x.mean()
     got = {r["period"]: r["power_norm"] for r in
-           Q.periodogram_daily(spark, sf_dir).collect()}
+           periodogram_daily(spark, sf_dir).collect()}
     for p in (3, 7, 12):
         th = 2 * np.pi * d / p
         pw = (((xc * np.cos(th)).sum() ** 2 + (xc * np.sin(th)).sum() ** 2)
@@ -555,7 +590,7 @@ def test_interarrival_ks_matches_numpy_ecdf(spark, sf_dir):
     hi = np.arange(1, n + 1) / n
     lo = np.arange(0, n) / n
     ks = max(np.abs(hi - cdf).max(), np.abs(lo - cdf).max())
-    got = Q.interarrival_exp_ks(spark, sf_dir).collect()[0]
+    got = interarrival_exp_ks(spark, sf_dir).collect()[0]
     assert got["n_gaps"] == n
     assert abs(got["lambda_per_sec"] - lam) < 1e-9
     assert abs(got["ks_stat"] - ks) < 1e-3
@@ -573,7 +608,7 @@ def test_source_mixture_matches_numpy_temperature(spark, sf_dir):
     p = per / per.sum()
     w = p ** 0.7 / (p ** 0.7).sum()
     got = {r["source"]: r for r in
-           Q.source_mixture_weights(spark, sf_dir).collect()}
+           source_mixture_weights(spark, sf_dir).collect()}
     assert abs(sum(r["temp_share"] for r in got.values()) - 1.0) < 1e-3
     for src in per.index:
         assert got[src]["n_tokens"] == per[src]
@@ -593,7 +628,7 @@ def test_padding_waste_matches_numpy_buckets(spark, sf_dir):
     buckets = 2 ** np.clip(np.ceil(np.log2(np.maximum(n, 1))), 4, 13)
     buckets = np.maximum(buckets, 16).astype(int)
     got = {r["bucket_len"]: r for r in
-           Q.padding_waste_by_bucket(spark, sf_dir).collect()}
+           padding_waste_by_bucket(spark, sf_dir).collect()}
     for b in np.unique(buckets):
         mask = buckets == b
         assert got[b]["n_docs"] == int(mask.sum()), b
@@ -607,7 +642,7 @@ def test_source_diversity_matches_entropy(spark, sf_dir):
     docs = pd.read_parquet(f"{sf_dir}/documents.parquet")
     p = docs.source.value_counts(normalize=True).to_numpy()
     h = float(-(p * np.log(p)).sum())
-    got = Q.source_diversity(spark, sf_dir).collect()[0]
+    got = source_diversity(spark, sf_dir).collect()[0]
     assert got["n_sources"] == docs.source.nunique()
     assert abs(got["doc_entropy_nats"] - h) < 1e-5
     assert abs(got["doc_effective_sources"] - np.exp(h)) < 1e-3
@@ -637,7 +672,7 @@ def test_ann_truncation_recall_matches_numpy(spark, sf_dir):
 
     full = topk(64)
     got = {r["dim"]: r for r in
-           Q.ann_truncation_recall(spark, sf_dir).collect()}
+           ann_truncation_recall(spark, sf_dir).collect()}
     for dim in (8, 16, 32):
         t = topk(dim)
         rec = np.mean([len(t[q] & full[q]) / 5.0 for q in full])
@@ -670,7 +705,7 @@ def test_ad_ksample_matches_bruteforce(spark, sf_dir, orders):
         a2 += (1.0 / ni) * (ls[ok] * (N * Ma[ok] - ni * Ba[ok]) ** 2
                             / den[ok]).sum()
     a2 *= (N - 1) / N
-    got = Q.ad_ksample_priority(spark, sf_dir).collect()[0]
+    got = ad_ksample_priority(spark, sf_dir).collect()[0]
     assert got["n"] == N and got["k_groups"] == k
     assert abs(got["a2_akn"] - a2) < 1e-2
     assert got["mean_h0"] == k - 1
@@ -685,7 +720,7 @@ def test_white_lm_matches_numpy(spark, sf_dir, lineitem):
     Z = np.column_stack([np.ones_like(x), x, x * x])
     b = np.linalg.lstsq(Z, u, rcond=None)[0]
     r2 = 1 - ((u - Z @ b) ** 2).sum() / ((u - u.mean()) ** 2).sum()
-    got = Q.white_test_hetero(spark, sf_dir).collect()[0]
+    got = white_test_hetero(spark, sf_dir).collect()[0]
     assert got["n"] == len(x)
     assert abs(got["r2_aux"] - r2) < 1e-5
     assert abs(got["white_lm"] - len(x) * r2) < max(0.01, 1e-4 * len(x))
@@ -702,7 +737,7 @@ def test_lda_matches_numpy_solve(spark, sf_dir, lineitem):
     w = np.linalg.solve(Sw, d)
     sep = np.sqrt(w @ d)
     wn = w / np.linalg.norm(w)
-    got = Q.lda_returnflag(spark, sf_dir).collect()[0]
+    got = lda_returnflag(spark, sf_dir).collect()[0]
     assert got["n_a"] == len(a) and got["n_b"] == len(b)
     for c, v in zip(cols, wn):
         assert abs(got[f"w_{c}"] - v) < 1e-4, c
@@ -728,7 +763,7 @@ def test_ar2_matches_numpy_yule_walker(spark, sf_dir):
     r1, r2 = cs[1] / c0, cs[2] / c0
     phi1 = r1 * (1 - r2) / (1 - r1 ** 2)
     phi2 = (r2 - r1 ** 2) / (1 - r1 ** 2)
-    got = Q.ar2_yule_walker_daily(spark, sf_dir).collect()[0]
+    got = ar2_yule_walker_daily(spark, sf_dir).collect()[0]
     assert got["n_days"] == n
     assert abs(got["r1"] - r1) < 1e-5
     assert abs(got["r2"] - r2) < 1e-5
@@ -757,7 +792,7 @@ def test_bigram_ppl_matches_pandas_lm(spark, sf_dir):
                        for p in prs])
         per_src.setdefault(src, []).append(nll)
     got = {r["source"]: r for r in
-           Q.bigram_ppl_by_source(spark, sf_dir).collect()}
+           bigram_ppl_by_source(spark, sf_dir).collect()}
     for src, nlls in per_src.items():
         assert got[src]["n_docs"] == len(nlls), src
         assert abs(got[src]["avg_bigram_nll"] - np.mean(nlls)) < 1e-3
@@ -773,7 +808,7 @@ def test_embedding_isotropy_matches_n2_bruteforce(spark, sf_dir):
     n = len(Vh)
     S = Vh @ Vh.T
     mean_cos = (S.sum() - np.trace(S)) / (n * (n - 1))
-    got = Q.embedding_isotropy(spark, sf_dir).collect()[0]
+    got = embedding_isotropy(spark, sf_dir).collect()[0]
     assert got["n_vectors"] == n
     assert got["dim"] == V.shape[1]
     assert abs(got["mean_norm"] - nrm[nrm > 0].mean()) < 1e-5
@@ -791,7 +826,7 @@ def test_vocab_coverage_matches_sorted_cumsum(spark, sf_dir):
     counts = np.sort(np.array(list(c.values())))[::-1]
     total = counts.sum()
     got = {r["top_k"]: r for r in
-           Q.vocab_coverage_topk(spark, sf_dir).collect()}
+           vocab_coverage_topk(spark, sf_dir).collect()}
     for k in (100, 1000, 10000):
         want = counts[:k].sum() / total if k <= len(counts) else 1.0
         assert got[k]["vocab_size"] == len(counts)
@@ -804,7 +839,7 @@ def test_weekend_lift_matches_pandas(spark, sf_dir):
     daily = ev.groupby("d").size().reset_index(name="n")
     wk = daily[daily.d % 7 % 6 == 0]  # 0 or 6
     wd = daily[~(daily.d % 7).isin([0, 6])]
-    got = Q.weekend_lift_daily(spark, sf_dir).collect()[0]
+    got = weekend_lift_daily(spark, sf_dir).collect()[0]
     assert got["n_weekend_days"] == len(wk)
     assert got["n_weekday_days"] == len(wd)
     assert abs(got["lift"] - wk.n.mean() / wd.n.mean()) < 1e-3
@@ -818,7 +853,7 @@ def test_quantile_reg_reduces_check_loss(spark, sf_dir, lineitem):
     line on the τ=0.9 check loss (pinball), and its residuals must
     leave roughly 10% of mass above... at least far less than 50%."""
     got = {r["term"]: r["estimate"] for r in
-           Q.quantile_reg_90(spark, sf_dir).collect()}
+           quantile_reg_90(spark, sf_dir).collect()}
     x = lineitem.l_quantity.astype(float).to_numpy()
     y = lineitem.l_extendedprice.astype(float).to_numpy()
 
@@ -838,7 +873,7 @@ def test_quantile_reg_reduces_check_loss(spark, sf_dir, lineitem):
 
 def test_pivot_multi_matches_pandas(spark, sf_dir, orders):
     got = {r["o_orderpriority"]: r for r in
-           Q.pivot_multi_metrics(spark, sf_dir).collect()}
+           pivot_multi_metrics(spark, sf_dir).collect()}
     for pri, g in orders.groupby("o_orderpriority"):
         for s in ("F", "O", "P"):
             sub = g[g.o_orderstatus == s]
@@ -865,7 +900,7 @@ def test_cross_source_duplication_matches_pandas(spark, sf_dir):
             pair_texts[(a, b)] += 1
             pair_docs[(a, b)] += len(g)
     got = {(r["src_a"], r["src_b"]): r for r in
-           Q.cross_source_duplication(spark, sf_dir).collect()}
+           cross_source_duplication(spark, sf_dir).collect()}
     assert set(got) == set(pair_texts)
     for k in pair_texts:
         assert got[k]["n_shared_texts"] == pair_texts[k], k
@@ -876,7 +911,7 @@ def test_char_entropy_matches_pandas(spark, sf_dir):
     from collections import Counter
     docs = pd.read_parquet(f"{sf_dir}/documents.parquet")
     got = {r["source"]: r for r in
-           Q.char_entropy_by_source(spark, sf_dir).collect()}
+           char_entropy_by_source(spark, sf_dir).collect()}
     src = docs.source.iloc[0]
     hs, dc = [], []
     for t in docs[docs.source == src].text:
@@ -905,7 +940,7 @@ def test_session_lognormal_matches_pandas(spark, sf_dir):
             durs.append((w.max() - w.min()) / 1e6)
     durs = np.array(durs)
     pos = durs[durs > 0]
-    got = Q.session_lognormal_fit(spark, sf_dir).collect()[0]
+    got = session_lognormal_fit(spark, sf_dir).collect()[0]
     assert got["n_sessions"] == len(pos)
     assert got["n_single_event"] == int((durs <= 0).sum())
     assert abs(got["mu_log_s"] - np.log(pos).mean()) < 1e-4
@@ -926,7 +961,7 @@ def test_hosmer_lemeshow_matches_pandas_ntile(spark, sf_dir, orders):
     dec = np.repeat(np.arange(1, 11), sizes)
     o["decile"] = dec
     got = {r["decile"]: r for r in
-           Q.hosmer_lemeshow_status(spark, sf_dir).collect()}
+           hosmer_lemeshow_status(spark, sf_dir).collect()}
     chi2 = 0.0
     for d, g in o.groupby("decile"):
         obs, exp, nd = g.y.sum(), g.p.sum(), len(g)
@@ -944,7 +979,7 @@ def test_hellinger_matches_pandas(spark, sf_dir, orders):
     q = o[o.o_orderstatus == "O"].bin.value_counts(normalize=True)
     bins = sorted(set(f.index) | set(q.index))
     bc = sum(np.sqrt(f.get(b, 0) * q.get(b, 0)) for b in bins)
-    got = Q.hellinger_order_value(spark, sf_dir).collect()[0]
+    got = hellinger_order_value(spark, sf_dir).collect()[0]
     assert got["n_finished"] == (o.o_orderstatus == "F").sum()
     assert abs(got["hellinger"] - np.sqrt(1 - bc)) < 1e-4
     assert abs(got["bhattacharyya"] + np.log(bc)) < 1e-4
@@ -956,7 +991,7 @@ def test_wavelet_energy_matches_numpy(spark, sf_dir):
     daily = (ev.groupby("d").size().reset_index(name="n"))
     idx = dict(zip(daily.d, daily.n))
     got = {r["scale_days"]: r for r in
-           Q.wavelet_energy_daily(spark, sf_dir).collect()}
+           wavelet_energy_daily(spark, sf_dir).collect()}
     for s in (2, 4, 8):
         e, nb = 0.0, 0
         blocks = {}
@@ -978,7 +1013,7 @@ def test_dedup_savings_matches_pandas(spark, sf_dir):
     keep = docs.groupby(docs.text)["doc_id"].transform("min")
     docs = docs.assign(is_dup=(docs.doc_id != keep).astype(int))
     got = {r["source"]: r for r in
-           Q.dedup_savings_by_source(spark, sf_dir).collect()}
+           dedup_savings_by_source(spark, sf_dir).collect()}
     for src, g in docs.groupby("source"):
         assert got[src]["n_docs"] == len(g)
         assert got[src]["n_dup_docs"] == g.is_dup.sum(), src
@@ -1004,7 +1039,7 @@ def test_pacf_matches_statsmodels_free_recursion(spark, sf_dir):
     R3 = np.array([[1, r[1], r[2]], [r[1], 1, r[1]], [r[2], r[1], 1]])
     rhs = np.array([r[1], r[2], r[3]])
     p3 = np.linalg.solve(R3, rhs)[2]
-    got = Q.pacf_daily(spark, sf_dir).collect()[0]
+    got = pacf_daily(spark, sf_dir).collect()[0]
     assert got["n_days"] == n
     assert abs(got["pacf_1"] - r[1]) < 1e-5
     assert abs(got["pacf_2"]
@@ -1026,7 +1061,7 @@ def test_breusch_godfrey_matches_numpy(spark, sf_dir):
     Z = np.column_stack([np.ones_like(z1), z1, z2])
     bb = np.linalg.lstsq(Z, u, rcond=None)[0]
     r2 = 1 - ((u - Z @ bb) ** 2).sum() / ((u - u.mean()) ** 2).sum()
-    got = Q.breusch_godfrey_daily(spark, sf_dir).collect()[0]
+    got = breusch_godfrey_daily(spark, sf_dir).collect()[0]
     assert got["n_obs"] == len(u)
     assert abs(got["r2_aux"] - r2) < 1e-5
     assert abs(got["bg_lm"] - len(u) * r2) < 1e-2
@@ -1045,7 +1080,7 @@ def test_spectral_entropy_matches_numpy(spark, sf_dir):
         for p in range(2, 15)])
     q = pw / pw.sum()
     h = float(-(q * np.log(q)).sum())
-    got = Q.spectral_entropy_daily(spark, sf_dir).collect()[0]
+    got = spectral_entropy_daily(spark, sf_dir).collect()[0]
     assert got["n_frequencies"] == 13
     assert abs(got["entropy_nats"] - h) < 1e-4
     assert abs(got["spectral_entropy_norm"] - h / np.log(13)) < 1e-5
@@ -1068,7 +1103,7 @@ def test_contamination_profile_matches_pandas(spark, sf_dir):
         per_src.setdefault(r.source, []).append(
             len(g & ev) / len(g))
     got = {r["source"]: r for r in
-           Q.contamination_profile(spark, sf_dir).collect()}
+           contamination_profile(spark, sf_dir).collect()}
     for src, fr in per_src.items():
         assert got[src]["n_docs"] == len(fr), src
         assert abs(got[src]["avg_contam_frac"] - np.mean(fr)) < 1e-4
@@ -1085,7 +1120,7 @@ def test_deming_matches_numpy_closed_form(spark, sf_dir):
     sxy = np.cov(x, y, bias=True)[0, 1]
     beta = ((syy - sxx) + np.sqrt((syy - sxx) ** 2 + 4 * sxy ** 2)) \
         / (2 * sxy)
-    got = Q.deming_regression(spark, sf_dir).collect()[0]
+    got = deming_regression(spark, sf_dir).collect()[0]
     assert got["n_rows"] == len(x)
     assert abs(got["deming_slope"] - beta) < 1e-4
     assert abs(got["deming_intercept"]
@@ -1102,7 +1137,7 @@ def test_epi_2x2_matches_closed_forms(spark, sf_dir, customer):
     rr = (a / (a + b)) / (c / (c + d))
     orr = a * d / (b * c)
     rd = a / (a + b) - c / (c + d)
-    got = Q.epi_2x2_measures(spark, sf_dir).collect()[0]
+    got = epi_2x2_measures(spark, sf_dir).collect()[0]
     assert (got["n_exp_out"], got["n_exp_noout"],
             got["n_unexp_out"], got["n_unexp_noout"]) == (a, b, c, d)
     assert abs(got["risk_ratio"] - rr) < 1e-5
@@ -1125,14 +1160,14 @@ def test_arch_lm_matches_numpy(spark, sf_dir):
     rows = [(u[idx[v]], u[idx[v - 1]]) for v in dd if v - 1 in idx]
     cu, lu = map(np.array, zip(*rows))
     r = np.corrcoef(cu, lu)[0, 1]
-    got = Q.arch_lm_daily(spark, sf_dir).collect()[0]
+    got = arch_lm_daily(spark, sf_dir).collect()[0]
     assert got["n_obs"] == len(cu)
     assert abs(got["lag1_corr_sq_resid"] - r) < 1e-5
     assert abs(got["arch_lm"] - len(cu) * r * r) < 1e-2
 
 
 def test_langid_confusion_consistency(spark, sf_dir):
-    rows = Q.langid_confusion(spark, sf_dir).collect()
+    rows = langid_confusion(spark, sf_dir).collect()
     docs = pd.read_parquet(f"{sf_dir}/documents.parquet")
     # totals per true language must cover every doc exactly once
     per_true = {}
@@ -1159,7 +1194,7 @@ def test_weighted_kappa_matches_pandas(spark, sf_dir, orders):
     ri, cj = tab.sum(axis=1), tab.sum(axis=0)
     we = sum(((a - b) ** 2) * ri[a] * cj[b] / n
              for a in tab.index for b in tab.columns)
-    got = Q.weighted_kappa_orders(spark, sf_dir).collect()[0]
+    got = weighted_kappa_orders(spark, sf_dir).collect()[0]
     assert got["n_orders"] == n
     assert abs(got["weighted_observed"] - wo) < 0.6
     assert abs(got["weighted_expected"] - we) < 0.6
@@ -1178,7 +1213,7 @@ def test_psi_monthly_matches_pandas(spark, sf_dir, orders):
         shares[m] = {b: ((g.b == b).sum() + 0.5) / (len(g) + 5.0)
                      for b in bands}
     got = {r["month"]: r for r in
-           Q.psi_monthly_orders(spark, sf_dir).collect()}
+           psi_monthly_orders(spark, sf_dir).collect()}
     checked = 0
     for prev, cur in zip(months, months[1:]):
         if (cur - prev).n != 1:
@@ -1199,7 +1234,7 @@ def test_effective_rank_matches_numpy_eigen(spark, sf_dir):
     C = np.cov(V, rowvar=False, bias=True)
     lam = np.linalg.eigvalsh(C)
     pr = lam.sum() ** 2 / (lam ** 2).sum()
-    got = Q.embedding_effective_rank(spark, sf_dir).collect()[0]
+    got = embedding_effective_rank(spark, sf_dir).collect()[0]
     assert got["n_vectors"] == len(V)
     assert got["dim"] == V.shape[1]
     assert abs(got["trace_cov"] - np.trace(C)) < 1e-4
@@ -1242,7 +1277,7 @@ def test_gehan_matches_pandas_life_table(spark, sf_dir):
         we += nat * dd * n1 / nat
         vv += (nat ** 2) * dd * (n1 / nat) * ((nat - n1) / nat) \
             * (nat - dd) / (nat - 1)
-    got = Q.gehan_wilcoxon_churn(spark, sf_dir).collect()[0]
+    got = gehan_wilcoxon_churn(spark, sf_dir).collect()[0]
     assert abs(got["weighted_observed_a"] - wo) < 0.51
     assert abs(got["weighted_expected_a"] - we) < 1e-2
     if vv > 0:
@@ -1250,7 +1285,7 @@ def test_gehan_matches_pandas_life_table(spark, sf_dir):
 
 
 def test_brier_decomposition_identity(spark, sf_dir, orders):
-    got = Q.brier_decomposition(spark, sf_dir).collect()[0]
+    got = brier_decomposition(spark, sf_dir).collect()[0]
     p = np.round(1 / (1 + np.exp(-(-2.0 + orders.o_totalprice * 1e-5))), 6)
     y = (orders.o_orderstatus == "F").astype(int).to_numpy()
     b = np.minimum(np.floor(orders.o_totalprice / 50000), 9).astype(int)
@@ -1280,7 +1315,7 @@ def test_records_matches_pandas_cummax(spark, sf_dir):
     nr = int((x > prevmax).sum())
     nd = len(x)
     h = sum(1 / k for k in range(1, nd + 1))
-    got = Q.records_trend_daily(spark, sf_dir).collect()[0]
+    got = records_trend_daily(spark, sf_dir).collect()[0]
     assert got["n_days"] == nd
     assert got["n_records"] == nr
     assert abs(got["expected_records"] - h) < 1e-3
@@ -1300,7 +1335,7 @@ def test_source_js_matrix_matches_pandas(spark, sf_dir):
             arr[(int(h[0], 16) * 16 + int(h[1], 16)) % 64] += 1
     probs = {s: (a + 1) / (a.sum() + 64) for s, a in counts.items()}
     got = {(r["src_a"], r["src_b"]): r for r in
-           Q.source_js_matrix(spark, sf_dir).collect()}
+           source_js_matrix(spark, sf_dir).collect()}
     srcs = sorted(probs)
     assert len(got) == len(srcs) * (len(srcs) - 1) // 2
     for i, a in enumerate(srcs[:4]):
@@ -1322,7 +1357,7 @@ def test_label_cohesion_matches_bruteforce(spark, sf_dir):
     Vh = V / nrm[:, None]
     g = Vh.sum(axis=0)
     got = {r["label"]: r for r in
-           Q.label_cohesion_embeddings(spark, sf_dir).collect()}
+           label_cohesion_embeddings(spark, sf_dir).collect()}
     for lab in emb.label.unique():
         m = (emb.label == lab).to_numpy()
         X = Vh[m]
@@ -1346,7 +1381,7 @@ def test_sign_test_matches_pandas(spark, sf_dir, lineitem):
     n, npos = len(d), int((d > 0).sum())
     cc = 0.5 if npos > n / 2 else (-0.5 if npos < n / 2 else 0.0)
     z = (npos - n / 2 - cc) / np.sqrt(n / 4)
-    got = Q.sign_test_price(spark, sf_dir).collect()[0]
+    got = sign_test_price(spark, sf_dir).collect()[0]
     assert got["n_pairs"] == n and got["n_positive"] == npos
     assert abs(got["z_stat"] - z) < 1e-3
 
@@ -1365,7 +1400,7 @@ def test_cmh_matches_pandas(spark, sf_dir, orders):
         srn += a * d / n
         srd += b * c / n
     chi2 = (abs(sa - se) - 0.5) ** 2 / sv
-    got = Q.cmh_orders(spark, sf_dir).collect()[0]
+    got = cmh_orders(spark, sf_dir).collect()[0]
     assert got["k_strata"] == orders.o_orderpriority.nunique()
     assert abs(got["cmh_chi2"] - chi2) < 1e-3
     assert abs(got["mh_odds_ratio"] - srn / srd) < 1e-5
@@ -1392,7 +1427,7 @@ def test_session_cooccurrence_matches_pandas(spark, sf_dir):
         for a, b in combinations(sorted(ts_), 2):
             pairs[(a, b)] += 1
     got = {(r["type_a"], r["type_b"]): r for r in
-           Q.session_event_cooccurrence(spark, sf_dir).collect()}
+           session_event_cooccurrence(spark, sf_dir).collect()}
     assert set(got) == set(pairs)
     for k, v in pairs.items():
         assert got[k]["n_both"] == v, k
@@ -1413,7 +1448,7 @@ def test_rank_stability_matches_pandas(spark, sf_dir, lineitem, orders):
     rev = (df.groupby(["yr", "n_name"])["l_extendedprice"].sum()
              .reset_index())
     got = {r["year"]: r for r in
-           Q.rank_stability_nations(spark, sf_dir).collect()}
+           rank_stability_nations(spark, sf_dir).collect()}
     yrs = sorted(rev.yr.unique())
     for prev, cur in zip(yrs, yrs[1:]):
         if cur - prev != 1:
@@ -1438,8 +1473,8 @@ def test_rank_stability_matches_pandas(spark, sf_dir, lineitem, orders):
 
 def test_dedup_curve_monotone_and_consistent(spark, sf_dir):
     rows = {r["threshold"]: r for r in
-            Q.dedup_threshold_curve(spark, sf_dir).collect()}
-    pairs = Q.ngram_jaccard(spark, sf_dir).toPandas()
+            dedup_threshold_curve(spark, sf_dir).collect()}
+    pairs = ngram_jaccard(spark, sf_dir).toPandas()
     ts = sorted(rows)
     # monotone non-increasing in the threshold
     for a, b in zip(ts, ts[1:]):
@@ -1457,7 +1492,7 @@ def test_hourly_entropy_matches_pandas(spark, sf_dir):
     us = ev.ts.astype("datetime64[us]").astype("int64")
     ev["h"] = (us // (3600 * 1_000_000)) % 24
     got = {r["event_type"]: r for r in
-           Q.hourly_entropy_by_type(spark, sf_dir).collect()}
+           hourly_entropy_by_type(spark, sf_dir).collect()}
     for t, g in ev.groupby("event_type"):
         c = g.h.value_counts()
         p = c / c.sum()
@@ -1478,7 +1513,7 @@ def test_anova_effect_sizes_match_pandas(spark, sf_dir, customer):
     ssw = sst - ssb
     msb, msw = ssb / (k - 1), ssw / (nn - k)
     n0 = (nn - (g.count() ** 2).sum() / nn) / (k - 1)
-    got = Q.anova_effect_sizes(spark, sf_dir).collect()[0]
+    got = anova_effect_sizes(spark, sf_dir).collect()[0]
     assert got["k_groups"] == k and got["n"] == int(nn)
     assert abs(got["eta_squared"] - ssb / sst) < 1e-5
     assert abs(got["omega_squared"]
@@ -1488,8 +1523,8 @@ def test_anova_effect_sizes_match_pandas(spark, sf_dir, customer):
 
 
 def test_dup_cluster_histogram_consistent(spark, sf_dir):
-    hist = Q.dup_cluster_size_histogram(spark, sf_dir).toPandas()
-    comp = Q.dedup_clusters(spark, sf_dir).toPandas()
+    hist = dup_cluster_size_histogram(spark, sf_dir).toPandas()
+    comp = dedup_clusters(spark, sf_dir).toPandas()
     sizes = comp.groupby("lbl").size()
     want = sizes.value_counts().sort_index()
     docs = pd.read_parquet(f"{sf_dir}/documents.parquet")
@@ -1510,7 +1545,7 @@ def test_purchase_cadence_matches_pandas(spark, sf_dir):
             gaps.extend(np.diff(us) / 86400e6)
             users.add(uid)
     gaps = np.array(gaps)
-    got = Q.purchase_cadence(spark, sf_dir).collect()[0]
+    got = purchase_cadence(spark, sf_dir).collect()[0]
     assert got["n_repeat_purchasers"] == len(users)
     assert got["n_gaps"] == len(gaps)
     assert abs(got["median_gap_days"]
@@ -1525,7 +1560,7 @@ def test_ht_estimate_matches_pandas(spark, sf_dir, orders):
     rates = {"1-URGENT": 0.5, "2-HIGH": 0.25, "3-MEDIUM": 0.125,
              "4-NOT SPECIFIED": 0.125, "5-LOW": 0.25}
     got = {r["o_orderpriority"]: r for r in
-           Q.stratified_ht_estimate(spark, sf_dir).collect()}
+           stratified_ht_estimate(spark, sf_dir).collect()}
     for pri, g in orders.groupby("o_orderpriority"):
         pi = rates[pri]
         u = np.array([int(hashlib.md5(f"ht:{k}".encode())
@@ -1550,7 +1585,7 @@ def test_median_ci_matches_numpy_order_stats(spark, sf_dir, orders):
     lo = max(int(np.floor(n / 2 - z * np.sqrt(n) / 2)), 1)
     hi = min(int(np.ceil(1 + n / 2 + z * np.sqrt(n) / 2)), n)
     med = (v[(n + 1) // 2 - 1] + v[(n + 2) // 2 - 1]) / 2
-    got = Q.median_ci_order_value(spark, sf_dir).collect()[0]
+    got = median_ci_order_value(spark, sf_dir).collect()[0]
     assert got["n"] == n
     assert abs(got["median"] - med) < 1e-2
     assert got["rank_lo"] == lo and got["rank_hi"] == hi
@@ -1560,8 +1595,8 @@ def test_median_ci_matches_numpy_order_stats(spark, sf_dir, orders):
 
 
 def test_kendalls_w_consistent_with_friedman(spark, sf_dir):
-    w = Q.kendalls_w_dow(spark, sf_dir).collect()[0]
-    f = Q.friedman_dow_test(spark, sf_dir).collect()[0]
+    w = kendalls_w_dow(spark, sf_dir).collect()[0]
+    f = friedman_dow_test(spark, sf_dir).collect()[0]
     assert w["n_blocks"] == f["n_blocks"]
     assert abs(w["friedman_q"] - f["friedman_q"]) < 1e-3
     assert abs(w["kendalls_w"]
@@ -1588,7 +1623,7 @@ def test_conversion_by_depth_matches_pandas(spark, sf_dir):
             n, c = buckets.get(b, (0, 0))
             buckets[b] = (n + 1, c + conv)
     got = {r["depth_bucket"]: r for r in
-           Q.conversion_by_session_depth(spark, sf_dir).collect()}
+           conversion_by_session_depth(spark, sf_dir).collect()}
     assert set(got) == set(buckets)
     for b, (n, c) in buckets.items():
         assert got[b]["n_sessions"] == n, b
@@ -1600,7 +1635,7 @@ def test_generalized_esd_matches_iterative_numpy(spark, sf_dir):
     daily = ev.groupby("d").size().reset_index(name="n")
     d = daily.d.to_numpy().astype(int)
     x = daily.n.to_numpy().astype(float)
-    got = Q.generalized_esd_daily(spark, sf_dir).collect()
+    got = generalized_esd_daily(spark, sf_dir).collect()
     assert [r["round"] for r in got] == [1, 2, 3]
     for r in got:
         mu, sd = x.mean(), x.std(ddof=1)
@@ -1618,7 +1653,7 @@ def test_leverage_audit_identity(spark, sf_dir, lineitem):
     x = lineitem.l_quantity.astype(float).to_numpy()
     n = len(x)
     h = 1 / n + (x - x.mean()) ** 2 / (x.var() * n)
-    got = Q.leverage_audit(spark, sf_dir).collect()[0]
+    got = leverage_audit(spark, sf_dir).collect()[0]
     assert got["n"] == n
     assert got["n_high_leverage"] == int((h > 4 / n).sum())
     assert abs(got["max_leverage"] - h.max()) < 1e-8
@@ -1643,7 +1678,7 @@ def test_retention_half_life_matches_pandas(spark, sf_dir):
     pts = curve[curve.index >= 1]
     x = pts.index.to_numpy(dtype=float)
     y = np.log(pts.active / pts.b).to_numpy()
-    got = Q.retention_half_life(spark, sf_dir).collect()[0]
+    got = retention_half_life(spark, sf_dir).collect()[0]
     assert got["n_offsets"] == len(pts)
     if len(x) >= 2 and x.var() > 0:
         slope = np.cov(x, y, bias=True)[0, 1] / x.var()
@@ -1660,7 +1695,7 @@ def test_wilson_ci_matches_closed_form(spark, sf_dir):
     ev = ev[ev.ts.notna()]
     nu = ev.user_id.nunique()
     got = {r["event_type"]: r for r in
-           Q.wilson_ci_event_reach(spark, sf_dir).collect()}
+           wilson_ci_event_reach(spark, sf_dir).collect()}
     z = 1.959964
     for t, g in ev.groupby("event_type"):
         k = g.user_id.nunique()
@@ -1682,7 +1717,7 @@ def test_cohens_h_matches_closed_form(spark, sf_dir, orders):
     p1 = (u.o_orderstatus == "F").mean()
     p2 = (lo.o_orderstatus == "F").mean()
     h = 2 * np.arcsin(np.sqrt(p1)) - 2 * np.arcsin(np.sqrt(p2))
-    got = Q.cohens_h_priority(spark, sf_dir).collect()[0]
+    got = cohens_h_priority(spark, sf_dir).collect()[0]
     assert got["n_urgent"] == len(u) and got["n_low"] == len(lo)
     assert abs(got["p_urgent_finished"] - p1) < 1e-5
     assert abs(got["cohens_h"] - h) < 1e-5
@@ -1704,7 +1739,7 @@ def test_newey_west_matches_numpy(spark, sf_dir):
              for dd in d if dd - 1 in idx)
     se_w = np.sqrt(s0 / svv ** 2)
     se_nw = np.sqrt((s0 + s1) / svv ** 2)
-    got = Q.newey_west_trend(spark, sf_dir).collect()[0]
+    got = newey_west_trend(spark, sf_dir).collect()[0]
     assert got["n_days"] == len(d)
     assert abs(got["slope"] - b) < 1e-4
     assert abs(got["se_white"] - se_w) < 1e-4

@@ -15,7 +15,14 @@ from __future__ import annotations
 
 import pytest
 
-from parking_bigdata_spark import queries as Q
+from parking_bigdata_spark.queries.a_stats import (
+    ks_approx_order_value_priority, ks_order_value_priority,
+    rf_holdout_metrics, rf_score_holdout)
+from parking_bigdata_spark.queries.a_stats_ext import (
+    ad_ksample_approx_priority, ad_ksample_priority,
+    median_ci_approx_order_value_detail, median_ci_order_value)
+from parking_bigdata_spark.queries.b_llm import (
+    stream_hopping_windows_batch, stream_session_windows_batch)
 
 SFS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]
 
@@ -25,8 +32,8 @@ def test_ks_approx_brackets_exact(spark, sf):
     """The grid evaluations are exact ECDF values at the edges, so
     d_approx <= d_exact <= d_upper must hold EXACTLY (modulo the 4-dp
     output rounding)."""
-    exact = Q.ks_order_value_priority(spark, sf).collect()[0]
-    ap = Q.ks_approx_order_value_priority(spark, sf).collect()[0]
+    exact = ks_order_value_priority(spark, sf).collect()[0]
+    ap = ks_approx_order_value_priority(spark, sf).collect()[0]
     assert ap["n_urgent"] == exact["n_urgent"]
     assert ap["n_low"] == exact["n_low"]
     assert ap["ks_d_approx"] - 1e-4 <= exact["ks_d"] <= ap["ks_d_upper"] + 1e-4
@@ -38,8 +45,8 @@ def test_ks_approx_brackets_exact(spark, sf):
 def test_ad_ksample_approx_close_to_exact(spark, sf):
     """Binned A2akN converges to the exact statistic as the grid grows;
     at G=256 it must sit within 2% on the driver SFs (measured ~0.7%)."""
-    exact = Q.ad_ksample_priority(spark, sf).collect()[0]
-    ap = Q.ad_ksample_approx_priority(spark, sf).collect()[0]
+    exact = ad_ksample_priority(spark, sf).collect()[0]
+    ap = ad_ksample_approx_priority(spark, sf).collect()[0]
     assert ap["n"] == exact["n"] and ap["k_groups"] == exact["k_groups"]
     rel = abs(ap["a2_akn_approx"] - exact["a2_akn"]) / max(1.0,
                                                            abs(exact["a2_akn"]))
@@ -52,8 +59,8 @@ def test_median_ci_approx_within_exact_interval(spark, sf):
     half-width of the order-statistic CI, so the approx median must
     land inside the exact CI and the approx CI must contain the exact
     median; the rank targets themselves are identical."""
-    exact = Q.median_ci_order_value(spark, sf).collect()[0]
-    ap = Q.median_ci_approx_order_value_detail(spark, sf).collect()[0]
+    exact = median_ci_order_value(spark, sf).collect()[0]
+    ap = median_ci_approx_order_value_detail(spark, sf).collect()[0]
     assert ap["n"] == exact["n"]
     assert ap["rank_lo"] == exact["rank_lo"]
     assert ap["rank_hi"] == exact["rank_hi"]
@@ -70,7 +77,7 @@ def test_stream_batch_twins_match_native_batch_plans(spark, sf_dir):
     ev = load_table(spark, sf_dir, "events")
     # session windows vs a plain batch session_window aggregation
     twin = {tuple(r) for r in
-            Q.stream_session_windows_batch(spark, sf_dir).collect()}
+            stream_session_windows_batch(spark, sf_dir).collect()}
     native = {tuple(r) for r in
               (ev.groupBy(F.session_window("ts", "30 minutes").alias("w"),
                           "user_id")
@@ -82,7 +89,7 @@ def test_stream_batch_twins_match_native_batch_plans(spark, sf_dir):
                          "n_events", "sum_value")).collect()}
     assert twin == native and len(twin) > 0
     # hopping windows: every event lands in exactly 2 one-hour windows
-    hop = Q.stream_hopping_windows_batch(spark, sf_dir)
+    hop = stream_hopping_windows_batch(spark, sf_dir)
     total = hop.agg(F.sum("n_events")).collect()[0][0]
     assert total == 2 * ev.count()
 
@@ -109,43 +116,10 @@ def test_grouped_quantiles_approx_within_rank_tolerance(spark, sf_dir):
             assert abs(a - e) / max(1.0, abs(e)) < 0.02, (g, e, a)
 
 
-def test_bench_contention_scanner_detects_and_self_excludes():
-    """bench.py's load-honesty scan (VERDICT r03 #6): flags a foreign
-    'pytest'-named process by exact argv token, while the test's own
-    pytest process (and its ancestor chain) stays excluded."""
-    import importlib.util
-    import os
-    import subprocess
-    import time
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    spec = importlib.util.spec_from_file_location(
-        "benchmod", os.path.join(repo, "bench.py"))
-    m = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(m)
-    baseline = m._foreign_spark_drivers()
-    # we ARE a pytest process, yet must not flag ourselves
-    assert not any(f"pid {os.getpid()}:" in h for h in baseline)
-    decoy = subprocess.Popen(["bash", "-c", "exec -a pytest sleep 15"])
-    try:
-        deadline = time.time() + 5
-        hits = []
-        while time.time() < deadline:
-            hits = [h for h in m._foreign_spark_drivers()
-                    if f"pid {decoy.pid}:" in h]
-            if hits:
-                break
-            time.sleep(0.2)
-        assert hits, "decoy pytest process not detected"
-    finally:
-        decoy.terminate()
-        decoy.wait()
-
-
 def test_rf_holdout_metrics_match_scored_frame(spark, sf_dir):
     from pyspark.sql import functions as F
-    scored = Q.rf_score_holdout(spark, sf_dir)
-    m = Q.rf_holdout_metrics(spark, sf_dir).collect()[0]
+    scored = rf_score_holdout(spark, sf_dir)
+    m = rf_holdout_metrics(spark, sf_dir).collect()[0]
     assert m["n"] == scored.count()
     y, p = F.col("actual"), F.col("predicted")
     chk = scored.agg(

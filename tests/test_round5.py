@@ -8,7 +8,19 @@ from __future__ import annotations
 
 import pytest
 
-from parking_bigdata_spark import queries as Q
+from parking_bigdata_spark.queries.a_core import (
+    kruskal_acctbal_by_segment, spearman_qty_price)
+from parking_bigdata_spark.queries.a_scale_twins import (
+    gini_approx_acctbal_by_segment, kruskal_approx_acctbal_by_segment,
+    mad_approx_price_by_flag_detail, mannwhitney_approx_order_value,
+    roc_auc_approx_order_status, spearman_approx_qty_price)
+from parking_bigdata_spark.queries.a_stats import (
+    gini_acctbal_by_segment, mad_price_by_flag, mannwhitney_order_value)
+from parking_bigdata_spark.queries.a_stats2 import roc_auc_order_status
+from parking_bigdata_spark.queries.b_llm import duplicate_chunks
+from parking_bigdata_spark.queries.b_llm_ext import (
+    duplicate_chunks_bloom, gram_novelty_bloom_by_source,
+    gram_novelty_by_source)
 
 SFS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]
 
@@ -17,8 +29,8 @@ SFS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]
 def test_spearman_approx_close_to_exact(spark, sf):
     """Spearman of the 256-bucket discretized pair converges to the
     exact rho; measured |delta| <= 1e-4 at both driver SFs."""
-    exact = Q.spearman_qty_price(spark, sf).collect()[0]
-    ap = Q.spearman_approx_qty_price(spark, sf).collect()[0]
+    exact = spearman_qty_price(spark, sf).collect()[0]
+    ap = spearman_approx_qty_price(spark, sf).collect()[0]
     assert ap["n_rows"] == exact["n_rows"]
     assert abs(ap["spearman_rho_approx"] - exact["spearman_rho"]) < 0.005
 
@@ -29,8 +41,8 @@ def test_roc_auc_approx_brackets_exact(spark, sf):
     construction, so [auc_lo, auc_hi] is a PROOF bracket for the exact
     AUC (modulo the 4-dp output rounding) — and it must be useful,
     not vacuous."""
-    exact = Q.roc_auc_order_status(spark, sf).collect()[0]
-    ap = Q.roc_auc_approx_order_status(spark, sf).collect()[0]
+    exact = roc_auc_order_status(spark, sf).collect()[0]
+    ap = roc_auc_approx_order_status(spark, sf).collect()[0]
     assert ap["n_pos"] == exact["n_pos"]
     assert ap["n_neg"] == exact["n_neg"]
     assert ap["auc_lo"] - 1e-4 <= exact["auc"] <= ap["auc_hi"] + 1e-4
@@ -42,8 +54,8 @@ def test_roc_auc_approx_brackets_exact(spark, sf):
 def test_kruskal_approx_close_to_exact(spark, sf):
     """Binned tie-corrected H converges to the exact statistic;
     measured ~0.5% at the driver SFs, asserted within 2%."""
-    exact = Q.kruskal_acctbal_by_segment(spark, sf).collect()[0]
-    ap = Q.kruskal_approx_acctbal_by_segment(spark, sf).collect()[0]
+    exact = kruskal_acctbal_by_segment(spark, sf).collect()[0]
+    ap = kruskal_approx_acctbal_by_segment(spark, sf).collect()[0]
     assert ap["n"] == exact["n"] and ap["k"] == exact["k"]
     rel = abs(ap["h_stat_approx"] - exact["h_stat"]) / max(
         1.0, abs(exact["h_stat"]))
@@ -55,8 +67,8 @@ def test_mannwhitney_approx_brackets_exact(spark, sf):
     """U and AUC share the Hanley-McNeil identity, so [u_lo, u_hi]
     brackets the exact tie-averaged U the same way (exact U uses
     half-credit ties, which lie inside the within-bucket unknown)."""
-    exact = Q.mannwhitney_order_value(spark, sf).collect()[0]
-    ap = Q.mannwhitney_approx_order_value(spark, sf).collect()[0]
+    exact = mannwhitney_order_value(spark, sf).collect()[0]
+    ap = mannwhitney_approx_order_value(spark, sf).collect()[0]
     assert ap["n_urgent"] == exact["n_urgent"]
     assert ap["n_low"] == exact["n_low"]
     assert ap["u_lo"] - 1e-4 <= exact["u_stat"] <= ap["u_hi"] + 1e-4
@@ -69,9 +81,9 @@ def test_gini_approx_close_to_exact(spark, sf):
     per-segment Gini moves only by the within-bucket rank-value
     covariance; measured |delta| <= 1e-4 per segment."""
     exact = {r["c_mktsegment"]: r
-             for r in Q.gini_acctbal_by_segment(spark, sf).collect()}
+             for r in gini_acctbal_by_segment(spark, sf).collect()}
     ap = {r["c_mktsegment"]: r
-          for r in Q.gini_approx_acctbal_by_segment(spark, sf).collect()}
+          for r in gini_approx_acctbal_by_segment(spark, sf).collect()}
     assert set(ap) == set(exact)
     for seg, row in ap.items():
         assert row["n_customers"] == exact[seg]["n_customers"]
@@ -85,9 +97,9 @@ def test_mad_approx_close_to_exact(spark, sf):
     asserted within 1% — this bound is what earns the rows-only
     oracle (t-digest vs GK sketches differ engine-to-engine)."""
     exact = {r["l_returnflag"]: r
-             for r in Q.mad_price_by_flag(spark, sf).collect()}
+             for r in mad_price_by_flag(spark, sf).collect()}
     ap = {r["l_returnflag"]: r
-          for r in Q.mad_approx_price_by_flag_detail(spark, sf).collect()}
+          for r in mad_approx_price_by_flag_detail(spark, sf).collect()}
     assert set(ap) == set(exact)
     for flag, row in ap.items():
         e = exact[flag]
@@ -102,9 +114,9 @@ def test_cms_prefilter_twins_equal_exact(spark, sf):
     + exact candidate pass): both twins must equal their exact forms
     row-for-row."""
     for exact_fn, twin_fn, key in (
-            (Q.gram_novelty_by_source, Q.gram_novelty_bloom_by_source,
+            (gram_novelty_by_source, gram_novelty_bloom_by_source,
              "source"),
-            (Q.duplicate_chunks, Q.duplicate_chunks_bloom, "chunk_md5")):
+            (duplicate_chunks, duplicate_chunks_bloom, "chunk_md5")):
         exact = sorted(map(tuple, exact_fn(spark, sf).collect()))
         twin = sorted(map(tuple, twin_fn(spark, sf).collect()))
         assert twin == exact, key

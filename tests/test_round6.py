@@ -10,7 +10,20 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from parking_bigdata_spark import queries as Q
+from parking_bigdata_spark.queries.a_scale_twins import (
+    dunn_approx_segments, gini_approx_acctbal_by_segment,
+    kruskal_approx_acctbal_by_segment, mad_approx_price_by_flag_detail,
+    pr_auc_approx_order_status, roc_auc_approx_order_status,
+    spearman_approx_qty_price, wilcoxon_approx_signed_rank)
+from parking_bigdata_spark.queries.a_stats import mad_price_by_flag
+from parking_bigdata_spark.queries.a_stats2 import (
+    pr_auc_order_status, wilcoxon_signed_rank)
+from parking_bigdata_spark.queries.a_stats_ext import (
+    dunn_posthoc_segments, pcr_holdout)
+from parking_bigdata_spark.queries.b_llm import duplicate_chunks
+from parking_bigdata_spark.queries.b_llm_ext import (
+    duplicate_chunks_bloom, gram_novelty_bloom_by_source,
+    gram_novelty_by_source)
 from parking_bigdata_spark.io import load_table
 from parking_bigdata_spark.operators import stats
 
@@ -26,9 +39,9 @@ def test_mad_approx_brackets_contain_exact(spark, sf):
     deviation median around the emitted center). Brackets must also be
     tight enough to be useful, not vacuous."""
     exact = {r["l_returnflag"]: r
-             for r in Q.mad_price_by_flag(spark, sf).collect()}
+             for r in mad_price_by_flag(spark, sf).collect()}
     ap = {r["l_returnflag"]: r
-          for r in Q.mad_approx_price_by_flag_detail(spark, sf).collect()}
+          for r in mad_approx_price_by_flag_detail(spark, sf).collect()}
     assert set(ap) == set(exact)
 
     # exact deviation median AROUND THE EMITTED approx center
@@ -59,8 +72,8 @@ def test_pr_auc_approx_close_to_exact(spark, sf):
     """Average precision of the 256-bucket binned blocks converges to
     the exact tie-block AP; measured |delta| <= 2e-4 at the driver
     SFs, asserted within 2e-3."""
-    exact = Q.pr_auc_order_status(spark, sf).collect()[0]
-    ap = Q.pr_auc_approx_order_status(spark, sf).collect()[0]
+    exact = pr_auc_order_status(spark, sf).collect()[0]
+    ap = pr_auc_approx_order_status(spark, sf).collect()[0]
     assert ap["n_pos"] == exact["n_pos"]
     assert ap["n_neg"] == exact["n_neg"]
     assert abs(ap["average_precision_approx"]
@@ -73,9 +86,9 @@ def test_dunn_approx_close_to_exact(spark, sf):
     measured |delta z| <= 0.01 per pair at the driver SFs, asserted
     within 0.05 (the same decision at any sane alpha)."""
     exact = {(r["seg_a"], r["seg_b"]): r
-             for r in Q.dunn_posthoc_segments(spark, sf).collect()}
+             for r in dunn_posthoc_segments(spark, sf).collect()}
     ap = {(r["seg_a"], r["seg_b"]): r
-          for r in Q.dunn_approx_segments(spark, sf).collect()}
+          for r in dunn_approx_segments(spark, sf).collect()}
     assert set(ap) == set(exact)
     for pair, row in ap.items():
         e = exact[pair]
@@ -89,8 +102,8 @@ def test_wilcoxon_approx_brackets_exact(spark, sf):
     """[w_lo, w_hi] is a PROOF bracket for the exact W+ (tie-averaging
     within a bucket is rank-preserving smoothing — see the A136b
     docstring), and the tie-averaged midpoint tracks the exact z."""
-    exact = Q.wilcoxon_signed_rank(spark, sf).collect()[0]
-    ap = Q.wilcoxon_approx_signed_rank(spark, sf).collect()[0]
+    exact = wilcoxon_signed_rank(spark, sf).collect()[0]
+    ap = wilcoxon_approx_signed_rank(spark, sf).collect()[0]
     assert ap["n_pairs"] == exact["n_pairs"]
     assert ap["w_lo"] - 1e-2 <= exact["w_plus"] <= ap["w_hi"] + 1e-2
     assert abs(ap["z_approx"] - exact["z_stat"]) < 0.05
@@ -135,9 +148,9 @@ def test_cms_twins_still_equal_exact_after_resize(spark, sf):
     forms row-for-row (the round-5 equality test re-run against the
     new sizing)."""
     for exact_fn, twin_fn, key in (
-            (Q.gram_novelty_by_source, Q.gram_novelty_bloom_by_source,
+            (gram_novelty_by_source, gram_novelty_bloom_by_source,
              "source"),
-            (Q.duplicate_chunks, Q.duplicate_chunks_bloom, "chunk_md5")):
+            (duplicate_chunks, duplicate_chunks_bloom, "chunk_md5")):
         exact = sorted(map(tuple, exact_fn(spark, sf).collect()))
         twin = sorted(map(tuple, twin_fn(spark, sf).collect()))
         assert twin == exact, key
@@ -230,7 +243,7 @@ def test_pcr_holdout_matches_numpy(spark):
     in the eigenvectors makes the comparison well-posed)."""
     import numpy as np
     sf = "/root/testdata/sf0.001"
-    row = Q.pcr_holdout(spark, sf).collect()[0]
+    row = pcr_holdout(spark, sf).collect()[0]
 
     li = (load_table(spark, sf, "lineitem")
           .select("l_orderkey", "l_quantity", "l_discount", "l_tax",
@@ -356,7 +369,7 @@ def test_cms_recompute_path_equals_exact(spark, monkeypatch):
     from parking_bigdata_spark.queries import b_llm_ext
     monkeypatch.setattr(b_llm_ext, "_CMS_MATERIALIZE_MAX_ROWS", 0)
     sf = "/root/testdata/sf0.001"
-    exact = sorted(map(tuple, Q.gram_novelty_by_source(spark, sf).collect()))
+    exact = sorted(map(tuple, gram_novelty_by_source(spark, sf).collect()))
     twin = sorted(map(tuple,
                       b_llm_ext.gram_novelty_bloom_by_source(spark, sf)
                       .collect()))
@@ -382,16 +395,16 @@ def test_grid_twins_constant_column(spark, tmp_path):
     sf = str(tmp_path)
 
     g = {r["c_mktsegment"]: r
-         for r in Q.gini_approx_acctbal_by_segment(spark, sf).collect()}
+         for r in gini_approx_acctbal_by_segment(spark, sf).collect()}
     assert set(g) == {"BUILDING", "MACHINERY"}
     for seg, row in g.items():
         assert row["gini_approx"] == 0.0, (seg, row)
 
-    k = Q.kruskal_approx_acctbal_by_segment(spark, sf).collect()
+    k = kruskal_approx_acctbal_by_segment(spark, sf).collect()
     assert len(k) == 1 and k[0]["n"] == 100
     assert k[0]["h_stat_approx"] is None  # all-tied: undefined => NULL
 
-    d = Q.dunn_approx_segments(spark, sf).collect()
+    d = dunn_approx_segments(spark, sf).collect()
     assert len(d) == 1  # one segment pair
     assert d[0]["mean_rank_a_approx"] == d[0]["mean_rank_b_approx"]
     assert d[0]["z_approx"] is None  # all-tied: undefined => NULL
@@ -417,14 +430,14 @@ def test_grid_twins_single_class_and_constant_axis(spark, tmp_path):
     li.to_parquet(str(tmp_path / "lineitem.parquet"), index=False)
     sf = str(tmp_path)
 
-    pr = Q.pr_auc_approx_order_status(spark, sf).collect()[0]
+    pr = pr_auc_approx_order_status(spark, sf).collect()[0]
     assert pr["n_pos"] == 0
     assert pr["average_precision_approx"] is None
 
-    roc = Q.roc_auc_approx_order_status(spark, sf).collect()[0]
+    roc = roc_auc_approx_order_status(spark, sf).collect()[0]
     assert roc["n_pos"] == 0
     assert roc["auc_approx"] is None and roc["gini_approx"] is None
 
-    sp = Q.spearman_approx_qty_price(spark, sf).collect()[0]
+    sp = spearman_approx_qty_price(spark, sf).collect()[0]
     assert sp["n_rows"] == 40
     assert sp["spearman_rho_approx"] is None

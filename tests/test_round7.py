@@ -15,7 +15,17 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from parking_bigdata_spark import queries as Q
+from parking_bigdata_spark.queries.a_core import outlier_fences
+from parking_bigdata_spark.queries.a_scale_twins import (
+    funnel_latency_approx_quantiles_detail, mad_approx_price_by_flag_detail,
+    outlier_fences_approx_detail, quantile_summary_approx_detail,
+    rfm_bounds_approx_detail, trimmed_mean_approx_price_detail,
+    winsorized_approx_price_stats_detail)
+from parking_bigdata_spark.queries.a_stats import (
+    trimmed_mean_price, winsorized_price_stats)
+from parking_bigdata_spark.queries.b_llm import sketch_hll_union
+from parking_bigdata_spark.queries.c_temporal import (
+    funnel_latency_quantiles, quantile_summary)
 from parking_bigdata_spark.io import load_table
 from parking_bigdata_spark.operators import stats
 
@@ -32,9 +42,9 @@ def _one(df):
 @pytest.mark.parametrize("sf", SFS)
 def test_trimmed_mean_approx_brackets_and_drift(spark, sf):
     exact = {r["l_returnflag"]: r
-             for r in Q.trimmed_mean_price(spark, sf).collect()}
+             for r in trimmed_mean_price(spark, sf).collect()}
     ap = {r["l_returnflag"]: r
-          for r in Q.trimmed_mean_approx_price_detail(spark, sf).collect()}
+          for r in trimmed_mean_approx_price_detail(spark, sf).collect()}
     assert set(ap) == set(exact)
     li = load_table(spark, sf, "lineitem").select(
         "l_returnflag", F.col("l_extendedprice").cast("double").alias("v"))
@@ -57,9 +67,9 @@ def test_trimmed_mean_approx_brackets_and_drift(spark, sf):
 @pytest.mark.parametrize("sf", SFS)
 def test_winsorized_approx_brackets_and_drift(spark, sf):
     exact = {r["l_returnflag"]: r
-             for r in Q.winsorized_price_stats(spark, sf).collect()}
+             for r in winsorized_price_stats(spark, sf).collect()}
     ap = {r["l_returnflag"]: r
-          for r in Q.winsorized_approx_price_stats_detail(spark, sf).collect()}
+          for r in winsorized_approx_price_stats_detail(spark, sf).collect()}
     assert set(ap) == set(exact)
     for flag, row in ap.items():
         e = exact[flag]
@@ -79,9 +89,9 @@ def test_winsorized_approx_brackets_and_drift(spark, sf):
 @pytest.mark.parametrize("sf", SFS)
 def test_outlier_fences_approx_brackets_and_drift(spark, sf):
     exact = {r["c_mktsegment"]: r
-             for r in Q.outlier_fences(spark, sf).collect()}
+             for r in outlier_fences(spark, sf).collect()}
     ap = {r["c_mktsegment"]: r
-          for r in Q.outlier_fences_approx_detail(spark, sf).collect()}
+          for r in outlier_fences_approx_detail(spark, sf).collect()}
     assert set(ap) == set(exact)
     cust = load_table(spark, sf, "customer").select(
         "c_mktsegment", F.col("c_acctbal").cast("double").alias("v"))
@@ -109,9 +119,9 @@ def test_outlier_fences_approx_brackets_and_drift(spark, sf):
 @pytest.mark.parametrize("sf", SFS)
 def test_quantile_summary_approx_brackets(spark, sf):
     exact = {r["o_orderpriority"]: r
-             for r in Q.quantile_summary(spark, sf).collect()}
+             for r in quantile_summary(spark, sf).collect()}
     ap = {r["o_orderpriority"]: r
-          for r in Q.quantile_summary_approx_detail(spark, sf).collect()}
+          for r in quantile_summary_approx_detail(spark, sf).collect()}
     assert set(ap) == set(exact)
     for pri, row in ap.items():
         e = exact[pri]
@@ -149,7 +159,7 @@ def test_rfm_bounds_approx_brackets(spark, sf):
                  melted, "metric", "__v", [0.25, 0.5, 0.75],
                  ["q1", "q2", "q3"]).collect()}
     ap = {r["metric"]: r
-          for r in Q.rfm_bounds_approx_detail(spark, sf).collect()}
+          for r in rfm_bounds_approx_detail(spark, sf).collect()}
     assert set(ap) == {"rec", "freq", "mon"} == set(exact)
     for m, row in ap.items():
         for q in ("q1", "q2", "q3"):
@@ -158,8 +168,8 @@ def test_rfm_bounds_approx_brackets(spark, sf):
 
 @pytest.mark.parametrize("sf", SFS)
 def test_funnel_latency_approx_brackets(spark, sf):
-    e = _one(Q.funnel_latency_quantiles(spark, sf))
-    a = _one(Q.funnel_latency_approx_quantiles_detail(spark, sf))
+    e = _one(funnel_latency_quantiles(spark, sf))
+    a = _one(funnel_latency_approx_quantiles_detail(spark, sf))
     assert a["n_converted"] == e["n_converted"]
     assert a["p50_lo"] <= e["p50_s"] <= a["p50_hi"]
     assert a["p90_lo"] <= e["p90_s"] <= a["p90_hi"]
@@ -175,7 +185,7 @@ def test_hll_union_contract_holds(spark, sf):
     """The redesigned B31 output: exact audit counts, and every
     hll_within_5pct boolean TRUE (this is what the DuckDB oracle now
     hash-checks at the driver gate — assert it independently here)."""
-    rows = Q.sketch_hll_union(spark, sf).collect()
+    rows = sketch_hll_union(spark, sf).collect()
     srcs = [r["source"] for r in rows]
     assert "__all__" in srcs and len(srcs) == len(set(srcs))
     for r in rows:
@@ -205,11 +215,11 @@ def test_twin_probes_clamp_on_tiny_groups(spark, tmp_path):
         "l_suppkey": [1] * 5,
     }).to_parquet(d + "/lineitem.parquet", index=False)
     mad = {r["l_returnflag"]: r
-           for r in Q.mad_approx_price_by_flag_detail(spark, d).collect()}
+           for r in mad_approx_price_by_flag_detail(spark, d).collect()}
     assert set(mad) == {"A", "R"}
     # A's exact median is 20; brackets collapse to [min, max]
     assert mad["A"]["med_lo"] <= 20.0 <= mad["A"]["med_hi"]
     assert mad["R"]["med_lo"] <= 45.0 <= mad["R"]["med_hi"]
     tm = {r["l_returnflag"]: r
-          for r in Q.trimmed_mean_approx_price_detail(spark, d).collect()}
+          for r in trimmed_mean_approx_price_detail(spark, d).collect()}
     assert tm["A"]["c10_lo"] <= 10.0 and tm["A"]["c90_hi"] >= 30.0

@@ -17,6 +17,13 @@ from __future__ import annotations
 import pytest
 
 from parking_bigdata_spark import queries as Q
+from parking_bigdata_spark.queries.a_core import outlier_fences
+from parking_bigdata_spark.queries.a_stats import (
+    mad_price_by_flag, winsorized_price_stats)
+from parking_bigdata_spark.queries.a_stats2 import catalog_profile
+from parking_bigdata_spark.queries.a_stats_ext import median_ci_order_value
+from parking_bigdata_spark.queries.c_temporal import (
+    funnel_latency_quantiles, quantile_summary)
 
 SFS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]
 
@@ -50,7 +57,7 @@ def test_bound_booleans_all_true(spark, sf, name):
 @pytest.mark.parametrize("sf", SFS)
 def test_mad_audit_matches_exact(spark, sf):
     exact = {r["l_returnflag"]: r
-             for r in Q.mad_price_by_flag(spark, sf).collect()}
+             for r in mad_price_by_flag(spark, sf).collect()}
     aud = {r["l_returnflag"]: r
            for r in Q.queries()["mad_approx_price_by_flag"](
                spark, sf).collect()}
@@ -63,7 +70,7 @@ def test_mad_audit_matches_exact(spark, sf):
 @pytest.mark.parametrize("sf", SFS)
 def test_winsorized_audit_matches_exact(spark, sf):
     exact = {r["l_returnflag"]: r
-             for r in Q.winsorized_price_stats(spark, sf).collect()}
+             for r in winsorized_price_stats(spark, sf).collect()}
     aud = {r["l_returnflag"]: r
            for r in Q.queries()["winsorized_approx_price_stats"](
                spark, sf).collect()}
@@ -80,7 +87,7 @@ def test_winsorized_audit_matches_exact(spark, sf):
 @pytest.mark.parametrize("sf", SFS)
 def test_fences_audit_matches_exact(spark, sf):
     exact = {r["c_mktsegment"]: r
-             for r in Q.outlier_fences(spark, sf).collect()}
+             for r in outlier_fences(spark, sf).collect()}
     aud = {r["c_mktsegment"]: r
            for r in Q.queries()["outlier_fences_approx"](
                spark, sf).collect()}
@@ -95,7 +102,7 @@ def test_fences_audit_matches_exact(spark, sf):
 @pytest.mark.parametrize("sf", SFS)
 def test_quantile_summary_audit_matches_exact(spark, sf):
     exact = {r["o_orderpriority"]: r
-             for r in Q.quantile_summary(spark, sf).collect()}
+             for r in quantile_summary(spark, sf).collect()}
     aud = {r["o_orderpriority"]: r
            for r in Q.queries()["quantile_summary_approx"](
                spark, sf).collect()}
@@ -109,7 +116,7 @@ def test_quantile_summary_audit_matches_exact(spark, sf):
 
 @pytest.mark.parametrize("sf", SFS)
 def test_funnel_audit_matches_exact(spark, sf):
-    e = Q.funnel_latency_quantiles(spark, sf).collect()[0]
+    e = funnel_latency_quantiles(spark, sf).collect()[0]
     a = Q.queries()["funnel_latency_approx_quantiles"](
         spark, sf).collect()[0]
     assert a["n_converted"] == e["n_converted"]
@@ -119,7 +126,7 @@ def test_funnel_audit_matches_exact(spark, sf):
 
 @pytest.mark.parametrize("sf", SFS)
 def test_median_ci_audit_matches_exact(spark, sf):
-    e = Q.median_ci_order_value(spark, sf).collect()[0]
+    e = median_ci_order_value(spark, sf).collect()[0]
     a = Q.queries()["median_ci_approx_order_value"](
         spark, sf).collect()[0]
     for pair in (("n", "n"), ("rank_lo", "rank_lo"),
@@ -131,7 +138,7 @@ def test_median_ci_audit_matches_exact(spark, sf):
 @pytest.mark.parametrize("sf", SFS[:1])
 def test_catalog_profile_audit_matches_exact(spark, sf):
     exact = {(r["table_name"], r["column_name"]): r
-             for r in Q.catalog_profile(spark, sf).collect()}
+             for r in catalog_profile(spark, sf).collect()}
     aud = {(r["table_name"], r["column_name"]): r
            for r in Q.queries()["catalog_profile_approx"](
                spark, sf).collect()}
@@ -187,7 +194,7 @@ def test_funnel_zero_conversions_both_engines_empty(spark, tmp_path):
         "event_type": ["view", "click", "view", "view"],  # no purchase
         "value": [1.0, 2.0, 3.0, 4.0],
     }).to_parquet(d + "/events.parquet", index=False)
-    assert Q.funnel_latency_quantiles(spark, d).count() == 0
+    assert funnel_latency_quantiles(spark, d).count() == 0
     assert Q.queries()["funnel_latency_approx_quantiles"](
         spark, d).count() == 0
     con = duckdb.connect()

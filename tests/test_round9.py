@@ -1,80 +1,8 @@
 """Round-9 hardening tests (VERDICT r08 asks + ADVICE r08).
 
-Covers the reworked bench calibration contract (#3), the unified
-audit-switch twin builders (#4), and the diff-derived rotation
-machinery (#1) as they land.
+Covers the unified audit-switch twin builders (#4) and the null-price
+median-CI contracts.
 """
-
-import importlib.util
-import os
-
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-
-def _benchmod():
-    spec = importlib.util.spec_from_file_location(
-        "benchmod_r9", os.path.join(REPO, "bench.py"))
-    m = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(m)
-    return m
-
-
-_PREV = {
-    "sf": 0.1,
-    "value": 200.0,
-    "queries": {"a": 1.0, "b": 2.0},
-    "calibration": {"spark_hash_agg_sec": 1.0, "numpy_gemm_sec": 2.0},
-}
-
-
-def test_bench_normalize_uses_spark_probe_only():
-    """VERDICT r08 #3: the normalizer is the spark probe ratio, never
-    the mean of the two probes (which over-corrects when they
-    disagree — the observed r08 driver window)."""
-    m = _benchmod()
-    cal = {"spark_hash_agg_sec": 1.2, "numpy_gemm_sec": 2.0}
-    n = m._normalize(cal, _PREV, {"a": 1.5, "b": 2.5, "c": 9.0},
-                     13.0, 0.1)
-    assert n["normalizer"] == "spark_probe"
-    assert n["speed_ratio_vs_ref"] == 1.2
-    assert n["speed_ratio_spark_probe"] == 1.2
-    assert n["speed_ratio_numpy_probe"] == 1.0
-    assert n["normalized_wall"] == round(13.0 / 1.2, 3)
-    assert not n["probes_divergent"]
-    assert "normalized_wall_unreliable" not in n
-    # shared-query accounting unchanged
-    assert n["shared_n"] == 2
-    assert n["shared_wall_ref"] == 3.0
-    assert n["shared_wall_now"] == 4.0
-
-
-def test_bench_normalize_flags_divergent_probes():
-    """ADVICE r08: when the per-probe ratios diverge >1.5x the
-    normalized wall is explicitly marked unreliable instead of being
-    printed as a trustworthy correction."""
-    m = _benchmod()
-    cal = {"spark_hash_agg_sec": 1.6, "numpy_gemm_sec": 2.0}
-    n = m._normalize(cal, _PREV, {"a": 1.0}, 10.0, 0.1)
-    assert n["probes_divergent"] is True
-    assert n["normalized_wall_unreliable"] is True
-    # still normalized by the spark probe — the number exists, with
-    # the honesty marker attached
-    assert n["speed_ratio_vs_ref"] == 1.6
-    # borderline (exactly 1.5x apart) is NOT divergent
-    cal2 = {"spark_hash_agg_sec": 1.5, "numpy_gemm_sec": 2.0}
-    n2 = m._normalize(cal2, _PREV, {"a": 1.0}, 10.0, 0.1)
-    assert n2["probes_divergent"] is False
-
-
-def test_bench_normalize_guards():
-    """Same-SF guard and missing-calibration guard return None (no
-    apples-to-oranges normalization in the output)."""
-    m = _benchmod()
-    cal = {"spark_hash_agg_sec": 1.0, "numpy_gemm_sec": 2.0}
-    assert m._normalize(cal, _PREV, {"a": 1.0}, 10.0, 0.01) is None
-    assert m._normalize({}, _PREV, {"a": 1.0}, 10.0, 0.1) is None
-    prev_nocal = dict(_PREV, calibration={})
-    assert m._normalize(cal, prev_nocal, {"a": 1.0}, 10.0, 0.1) is None
 
 
 # ---------------------------------------------------------------------------
@@ -160,91 +88,6 @@ def test_audit_switch_registry_unchanged():
 
 
 # ---------------------------------------------------------------------------
-# VERDICT r08 #1: diff-derived rotation re-fronting. The hand lists
-# are frozen history; staleness is computed from the builder's
-# transitive dependency set vs git diffs since each row's round.
-# ---------------------------------------------------------------------------
-
-def test_key_deps_follow_helpers_to_operator_modules():
-    """mad_price_by_flag reaches operators/stats.py through
-    stats.grouped_median; a key that never touches stats must not
-    carry that dependency (function-level sharpness)."""
-    from parking_bigdata_spark import queries as Q
-    deps = Q._key_deps()
-    assert "parking_bigdata_spark/operators/stats.py" in \
-        deps["mad_price_by_flag"]
-    assert "parking_bigdata_spark/queries/a_stats.py" in \
-        deps["mad_price_by_flag"]
-    assert "parking_bigdata_spark/operators/stats.py" not in \
-        deps["distinct_order_status"]
-    # every key depends at least on its own defining file
-    for k, d in deps.items():
-        assert any(p.startswith("parking_bigdata_spark/queries/")
-                   for p in d), k
-
-
-def test_touching_stats_refronts_quantile_family():
-    """The verdict's acceptance check: a helper-only edit to
-    operators/stats.py (no query file touched) must invalidate every
-    quantile-family key's old driver rows and re-front them."""
-    from parking_bigdata_spark import queries as Q
-    injected = {n: frozenset({"parking_bigdata_spark/operators/stats.py"})
-                for n in range(1, 20)}
-    valid, stale, never = Q._verification_status(injected)
-    family = ["mad_price_by_flag", "trimmed_mean_price",
-              "quantile_summary", "funnel_latency_quantiles",
-              "outlier_fences", "rfm_customer_segments",
-              "winsorized_price_stats", "conformal_interval_coverage",
-              "qq_deciles_priority", "length_filter_by_lang",
-              "median_ci_order_value"]
-    for k in family:
-        assert k in stale, k
-    # and the rotation puts every stale key ahead of every valid one
-    rot = list(Q._rotated(Q.REGISTRY, injected))
-    pos = {n: i for i, n in enumerate(rot)}
-    if valid:
-        worst_stale = max(pos[n] for n in stale)
-        best_valid = min(pos[n] for n in valid)
-        assert worst_stale < best_valid
-    # a key that never touches stats keeps its driver row
-    assert "distinct_order_status" in valid
-
-
-def test_unchanged_tree_keeps_rows_valid():
-    """With NO dependency changes since any round, every key with a
-    green row stays valid — the diff term only ever invalidates."""
-    from parking_bigdata_spark import queries as Q
-    injected = {n: frozenset() for n in range(1, 20)}
-    valid, stale, never = Q._verification_status(injected)
-    assert not never  # 8 rounds drained the backlog
-    # the only stale keys are legacy hand-list entries whose rows
-    # predate the recorded change — nothing new goes stale
-    for k in stale:
-        assert k in Q._CHANGED_IN_ROUND, k
-
-
-def test_seeded_backlog_rotation_is_deterministic_per_round():
-    """VERDICT r08 #5: verified-backlog order is the sha256-seeded
-    permutation for the CURRENT round — deterministic within a round
-    (same seed -> same order) and different across rounds."""
-    import hashlib
-    from parking_bigdata_spark import queries as Q
-    injected = {n: frozenset() for n in range(1, 20)}
-    rot1 = list(Q._rotated(Q.REGISTRY, injected))
-    rot2 = list(Q._rotated(Q.REGISTRY, injected))
-    assert rot1 == rot2
-    valid, _, _ = Q._verification_status(injected)
-    back = [n for n in rot1 if n in valid]
-    seed = f"r{Q._current_round()}"
-    expect = sorted(back, key=lambda n: hashlib.sha256(
-        f"{seed}:{n}".encode()).hexdigest())
-    assert back == expect
-    other = sorted(back, key=lambda n: hashlib.sha256(
-        f"r999:{n}".encode()).hexdigest())
-    assert back != other  # a different round reorders the sample
-
-
-# ---------------------------------------------------------------------------
 # Code-review r09 findings — regression pins.
 # ---------------------------------------------------------------------------
 
@@ -313,47 +156,6 @@ def test_median_ci_partial_null_prices_both_engines(spark, tmp_path):
     assert tw["approx_median_in_ci"] is True
 
 
-def test_recorded_failure_outvotes_older_green_row(tmp_path,
-                                                   monkeypatch):
-    """Code-review r09: a key with a green r05 row and a RED r08 row
-    (hash_match false) must be stale even with no dependency change —
-    the recorded failure is the strongest invalidation signal."""
-    import json
-    from parking_bigdata_spark import queries as Q2
-    key = "distinct_order_status"
-    d = str(tmp_path)
-    with open(f"{d}/CORRECTNESS_r05.json", "w") as f:
-        json.dump({key: {"hash_match": True}}, f)
-    with open(f"{d}/CORRECTNESS_r08.json", "w") as f:
-        json.dump({key: {"hash_match": False}}, f)
-    monkeypatch.setattr(Q2, "_REPO_DIR", d)
-    # deps computed under the fake repo dir are junk — let monkeypatch
-    # restore the real cache on teardown so later tests never see them
-    monkeypatch.setattr(Q2, "_KEY_DEPS_CACHE", None)
-    injected = {n: frozenset() for n in range(1, 20)}
-    valid, stale, never = Q2._verification_status(injected)
-    assert key in stale
-    # and a green row RECORDED AFTER the failure re-validates
-    with open(f"{d}/CORRECTNESS_r09.json", "w") as f:
-        json.dump({key: {"hash_match": True}}, f)
-    valid, stale, never = Q2._verification_status(injected)
-    assert key in valid
-
-
-def test_rotation_is_lazy_and_memoized():
-    """Code-review r09: REGISTRY stays the raw registration dict at
-    import; rotation (git + AST cost) runs on first queries() /
-    oracle_sql() call and is cached."""
-    from parking_bigdata_spark import queries as Q2
-    Q2.queries()  # force the first (possibly only) rotation
-    assert Q2._ROTATED_CACHE is not None
-    assert Q2.queries().keys() == Q2._registry_rotated().keys()
-    # oracle_sql() preserves queries()' rotation order over the keys
-    # that HAVE an oracle (a future rows-only key must not break this)
-    qs, osql = list(Q2.queries()), list(Q2.oracle_sql())
-    assert osql == [k for k in qs if k in set(osql)]
-
-
 def test_audit_acc_is_the_stats_constant():
     """Code-review r09: one constant governs the exact machinery's
     accuracy — the audit alias must BE stats.EXACT_QUANTILE_ACC, and
@@ -368,59 +170,6 @@ def test_audit_acc_is_the_stats_constant():
 # ---------------------------------------------------------------------------
 # Second code-review pass r09 — regression pins.
 # ---------------------------------------------------------------------------
-
-def test_red_only_key_is_stale_not_never(tmp_path, monkeypatch):
-    """A key whose ONLY driver row is a recorded failure must surface
-    as STALE (top re-front priority), not as merely-new."""
-    import json
-    from parking_bigdata_spark import queries as Q2
-    key = "distinct_order_status"
-    d = str(tmp_path)
-    with open(f"{d}/CORRECTNESS_r08.json", "w") as f:
-        json.dump({key: {"hash_match": False}}, f)
-    monkeypatch.setattr(Q2, "_REPO_DIR", d)
-    monkeypatch.setattr(Q2, "_KEY_DEPS_CACHE", None)
-    injected = {n: frozenset() for n in range(1, 20)}
-    valid, stale, never = Q2._verification_status(injected)
-    assert key in stale and key not in never
-
-
-def test_bench_normalize_without_numpy_probe():
-    """The spark probe is the sole normalizer: a run (or reference)
-    missing the numpy GEMM must still produce the normalized block,
-    with the numpy ratio absent and no divergence verdict."""
-    m = _benchmod()
-    cal = {"spark_hash_agg_sec": 1.2}
-    n = m._normalize(cal, _PREV, {"a": 1.0}, 10.0, 0.1)
-    assert n is not None and n["speed_ratio_vs_ref"] == 1.2
-    assert n["speed_ratio_numpy_probe"] is None
-    assert n["probes_divergent"] is False
-    prev_nonp = dict(_PREV, calibration={"spark_hash_agg_sec": 1.0})
-    n2 = m._normalize({"spark_hash_agg_sec": 1.2, "numpy_gemm_sec": 9.0},
-                      prev_nonp, {"a": 1.0}, 10.0, 0.1)
-    assert n2 is not None and n2["speed_ratio_numpy_probe"] is None
-
-
-def test_bench_normalize_flags_high_probe_spread():
-    """A >1.5x intra-run probe spread (host speed changed MID-bench)
-    marks the normalized wall unreliable even when the two probes
-    agree — the min is a single least-contended moment."""
-    m = _benchmod()
-    cal = {"spark_hash_agg_sec": 1.0, "numpy_gemm_sec": 2.0,
-           "spark_probe_spread": 2.9}
-    n = m._normalize(cal, _PREV, {"a": 1.0}, 10.0, 0.1)
-    assert n["probe_spread_high"] is True
-    assert n["normalized_wall_unreliable"] is True
-    assert n["probes_divergent"] is False
-    # the reference's spread counts too
-    prev_sp = dict(_PREV, calibration=dict(_PREV["calibration"],
-                                           spark_probe_spread=2.0))
-    n2 = m._normalize({"spark_hash_agg_sec": 1.0,
-                       "numpy_gemm_sec": 2.0,
-                       "spark_probe_spread": 1.1},
-                      prev_sp, {"a": 1.0}, 10.0, 0.1)
-    assert n2["probe_spread_high"] is True
-
 
 def test_exact_quantile_acc_knob_is_defensive():
     """A malformed or non-positive SPARK_GRAFT_EXACT_QUANTILE_ACC must

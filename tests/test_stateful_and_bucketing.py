@@ -4,14 +4,15 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from parking_bigdata_spark import queries as Q
+from parking_bigdata_spark.queries.a_core import sketch_distinct_parts
+from parking_bigdata_spark.queries.b_llm import events_sessions
 from parking_bigdata_spark.io import load_table, write_bucketed_table
 from parking_bigdata_spark.streaming import sessions as ss
 
 
 def test_stateful_sessionize_matches_batch(spark, sf_dir):
     batch = {(r["user_id"]): (r["n_sessions"], r["n_events"])
-             for r in Q.events_sessions(spark, sf_dir).collect()}
+             for r in events_sessions(spark, sf_dir).collect()}
     got = {(r["user_id"]): (r["n_sessions"], r["n_events"])
            for r in ss.run_sessionize_batchlike(spark, sf_dir,
                                                 "t_sessions_state").collect()}
@@ -94,7 +95,7 @@ def test_sketch_distinct_within_tolerance(spark, sf_dir):
              li.groupBy("l_returnflag")
                .agg(F.countDistinct("l_partkey").alias("e")).collect()}
     approx = {r["l_returnflag"]: r["approx_parts"] for r in
-              Q.sketch_distinct_parts(spark, sf_dir).collect()}
+              sketch_distinct_parts(spark, sf_dir).collect()}
     for k, e in exact.items():
         assert abs(approx[k] - e) / e < 0.05
 

@@ -7,13 +7,15 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from parking_bigdata_spark import queries as Q
+from parking_bigdata_spark.queries.b_llm import (
+    events_sessions, events_windowed, stream_interval_join_batch)
+from parking_bigdata_spark.queries.c_temporal import events_hopping_windows
 from parking_bigdata_spark.streaming import events as stream_ev
 
 
 def test_streaming_windowed_matches_batch(spark, sf_dir):
     batch = {(r["wstart"], r["event_type"]): (r["n_events"], r["sum_value"])
-             for r in Q.events_windowed(spark, sf_dir).collect()}
+             for r in events_windowed(spark, sf_dir).collect()}
     streamed = stream_ev.run_windowed_counts_batchlike(
         spark, sf_dir, "t_stream_win")
     got = {(r["wstart"], r["event_type"]): (r["n_events"], r["sum_value"])
@@ -80,7 +82,7 @@ def test_streaming_hopping_matches_batch(spark, sf_dir):
     from pyspark.sql import functions as F
 
     batch = {(r["win_start"], r["event_type"]): r["n"]
-             for r in Q.events_hopping_windows(spark, sf_dir).collect()}
+             for r in events_hopping_windows(spark, sf_dir).collect()}
     stream = stream_ev.windowed_counts(
         stream_ev.read_events_stream(spark, sf_dir),
         window="1 day", slide="12 hours")
@@ -122,7 +124,7 @@ def test_foreach_batch_sink_idempotent_layout(spark, sf_dir, tmp_path):
             W.partitionBy("wstart", "event_type").orderBy(F.col("batch").desc())))
         .where(F.col("rk") == 1))
     batch = {(r["wstart"], r["event_type"]): (r["n_events"], r["sum_value"])
-             for r in Q.events_windowed(spark, sf_dir).collect()}
+             for r in events_windowed(spark, sf_dir).collect()}
     got = {(r["wstart"], r["event_type"]): (r["n_events"], r["sum_value"])
            for r in latest.collect()}
     assert got == batch
@@ -139,7 +141,7 @@ def test_stream_stream_join_matches_batch(spark, sf_dir):
 
     # the comparison side IS the registered oracle-checked query
     # (stream_interval_join_batch), so stream == batch == DuckDB
-    want = Q.stream_interval_join_batch(spark, sf_dir)
+    want = stream_interval_join_batch(spark, sf_dir)
     key = lambda r: (r["view_id"], r["purchase_id"])
     assert sorted(map(key, got.collect())) == sorted(map(key, want.collect()))
     assert got.count() > 0
@@ -196,7 +198,6 @@ def test_session_window_stream_matches_custom_sessionizer(spark, sf_dir):
     """Native F.session_window (engine-managed merging state) must
     agree with the batch gap-sessionizer on sessions-per-user and
     events-per-user, and with a batch session_window plan row-for-row."""
-    from parking_bigdata_spark import queries as Q
     from parking_bigdata_spark.io import load_table
     from parking_bigdata_spark.streaming.events import (
         run_session_window_batchlike, session_window_counts)
@@ -207,7 +208,7 @@ def test_session_window_stream_matches_custom_sessionizer(spark, sf_dir):
         n_sess, n_ev = per_user.get(r["user_id"], (0, 0))
         per_user[r["user_id"]] = (n_sess + 1, n_ev + r["n_events"])
     batch = {r["user_id"]: (r["n_sessions"], r["n_events"])
-             for r in Q.events_sessions(spark, sf_dir).collect()}
+             for r in events_sessions(spark, sf_dir).collect()}
     assert per_user == batch
 
     # the same session_window expression runs as a plain batch groupBy
