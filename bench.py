@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import json
 import os
+import subprocess
 import sys
 import time
 
@@ -366,6 +367,19 @@ def main() -> None:
     total = round(sum(timings.values()), 3)
     sf_tag = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     sf_val = float(sf_tag) if sf_tag.replace(".", "").isdigit() else sf_tag
+    # what was measured, so a record is compared only with records of
+    # the same context: the session's cores, the host's, and the tree
+    try:
+        git_sha = subprocess.run(
+            ["git", "rev-parse", "HEAD"], cwd=os.path.dirname(
+                os.path.abspath(__file__)),
+            capture_output=True, text=True, check=True).stdout.strip()
+    except (OSError, subprocess.CalledProcessError):
+        git_sha = None
+    context = {"reps": REPS,
+               "cpus": spark.sparkContext.defaultParallelism,
+               "nproc": os.cpu_count(),
+               "git_sha": git_sha or None}
     # Full per-query detail goes to stderr and a sidecar file; the ONE
     # stdout JSON line stays compact (the driver captures a bounded tail
     # of stdout — an 83-entry dict pushed "value" out of the r01 capture
@@ -382,7 +396,7 @@ def main() -> None:
         "queries": {k: timings[k] for k in HEADLINE},
         "sf": sf_val,
         "order_seed": order_seed,
-        "reps": REPS,
+        **context,
     }
     if first_rep:
         # single-rep walls of the re-run (>SLOW_REP_SEC) queries, kept
@@ -408,7 +422,7 @@ def main() -> None:
         "n_queries": len(timings),
         "sf": sf_val,
         "order_seed": order_seed,
-        "reps": REPS,
+        **context,
     }
     print(json.dumps(compact, separators=(",", ":")))
 

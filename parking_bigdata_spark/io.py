@@ -9,8 +9,12 @@ sentinel-null cleaning pass that stays entirely inside Catalyst codegen
 
 from __future__ import annotations
 
+import os
+import stat
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region", "nation", "customer", "supplier", "part",
@@ -22,11 +26,57 @@ TABLES = (
 DEFAULT_SENTINELS = ("", "-", "NA", "N/A", "null")
 
 
+#: Session confs that change what parquet schema inference returns,
+#: beyond the three ``load_table`` sets itself; their values are part of
+#: every memo key, so a session that sets them differently infers anew.
+_INFER_CONFS = ("spark.sql.parquet.binaryAsString",
+                "spark.sql.parquet.int96AsTimestamp",
+                "spark.sql.parquet.mergeSchema")
+
+#: path -> (fingerprint, inferred schema): the only state ``load_table``
+#: keeps. One small StructType per distinct local path; never any data.
+#: Entries are replaced whole, so concurrent loads need no lock: a load
+#: that stores an outdated fingerprint only makes the next load infer.
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _fingerprint(path: str) -> tuple | None:
+    """``(relative path, inode, size, mtime_ns)`` of every file under
+    ``path`` (the file itself when it is one, else a recursive walk that
+    follows links as Spark's listing does), sorted. A table rewritten in
+    place or replaced by ``os.replace`` therefore gets a new fingerprint.
+    ``None`` when the path has no local ``os.stat`` (URIs, remote
+    stores, a missing path) or a file under it vanishes mid-walk."""
+    try:
+        st = os.stat(path)
+        if not stat.S_ISDIR(st.st_mode):
+            return (("", st.st_ino, st.st_size, st.st_mtime_ns),)
+        files = []
+        for root, _dirs, names in os.walk(path, followlinks=True):
+            for name in names:
+                f = os.path.join(root, name)
+                st = os.stat(f)
+                files.append((os.path.relpath(f, path), st.st_ino,
+                              st.st_size, st.st_mtime_ns))
+        return tuple(sorted(files))
+    except OSError:
+        return None
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one driver-generated parquet table.
 
-    Plain ``spark.read.parquet`` so Catalyst gets full pushdown/pruning;
-    never cache here — callers decide lifetimes.
+    Plain parquet scans so Catalyst gets full pushdown/pruning. The
+    only thing cached here is the table's SCHEMA, never data — callers
+    decide data lifetimes. ``spark.read.parquet`` without a schema runs
+    a whole Spark job (``ParquetUtils.inferSchema``) just to read a
+    footer; instead, the schema Spark inferred for a path the first
+    time is reused with ``spark.read.schema(...)``, which only lists
+    files on the driver and runs no job. The memo key is a fingerprint
+    of every file under the path (relative path, inode, size, mtime in
+    ns) plus the session confs in ``_INFER_CONFS``, so a rewritten or
+    replaced table is inferred again. Paths with no local ``os.stat``
+    (URIs, remote stores) are inferred on every call.
 
     ``events.ts`` is stored as parquet TIMESTAMP(NANOS); with
     ``spark.sql.legacy.parquet.nanosAsLong`` it scans as a long that we
@@ -47,8 +97,20 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # reject. With the UTC session timezone above, reading it as plain
     # TIMESTAMP yields identical instants to the naive-timestamp oracle.
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    df = spark.read.parquet(f"{sf_dir.rstrip('/')}/{name}.parquet")
-    for field in df.schema.fields:
+    path = f"{sf_dir.rstrip('/')}/{name}.parquet"
+    fp = _fingerprint(path)
+    if fp is not None:
+        fp += tuple(spark.conf.get(c, None) for c in _INFER_CONFS)
+    hit = _SCHEMAS.get(path)
+    if hit is not None and hit[0] == fp:
+        schema = hit[1]
+        df = spark.read.schema(schema).parquet(path)
+    else:
+        df = spark.read.parquet(path)
+        schema = df.schema
+        if fp is not None:
+            _SCHEMAS[path] = (fp, schema)
+    for field in schema.fields:
         if field.name == "ts" and field.dataType.simpleString() == "bigint":
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     # DELIBERATELY no automatic re-layout of single-row-group inputs,

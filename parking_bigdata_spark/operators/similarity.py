@@ -76,10 +76,11 @@ def _cosine_score_udf(round_to: int):
         q_arr = qv.to_numpy()
         c_arr = cv.to_numpy()
         # FAST PATH — the r10 vectorized shape, zero per-row Python:
-        # np.stack + astype raise exactly on the degenerate inputs
-        # (None vectors -> ragged ValueError; NULL elements -> object
-        # dtype whose astype(float64) TypeErrors), so clean batches
-        # never pay for the guard below
+        # np.stack raises on None vectors and ragged lengths, astype on
+        # non-numeric elements, so clean batches never pay for the
+        # guard below. NULL elements do not raise: they arrive as NaN
+        # (or as None, which astype(float64) casts to NaN) and score
+        # NULL through _dense_scores' NaN -> NA
         try:
             Q = np.stack(q_arr)
             C = np.stack(c_arr)
@@ -106,10 +107,13 @@ def _cosine_score_udf(round_to: int):
                 Q = np.stack(q_arr[m]).astype(np.float64)
                 C = np.stack(c_arr[m]).astype(np.float64)
             except (TypeError, ValueError):
-                # NULL elements inside a vector (object-dtype stack):
-                # score exactly the affected rows NULL, like the old
-                # expression, via a per-row slow path — only ever taken
-                # on corrupt data, never by real embedding batches
+                # NON-NUMERIC elements inside a vector (an object-dtype
+                # stack that astype(float64) rejects): score exactly the
+                # affected rows NULL via a per-row slow path. NULL
+                # elements never get here — NumPy casts them to NaN, so
+                # they take the stack above and score NULL through NaN;
+                # an Arrow array<double> column delivers no non-numeric
+                # element, so real embedding batches never take this path
                 for i in m:
                     try:
                         q1 = np.asarray(q_arr[i], dtype=np.float64)

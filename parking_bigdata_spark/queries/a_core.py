@@ -87,15 +87,26 @@ def _basket_pair_counts(ob: DataFrame) -> DataFrame:
 
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
-    disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    charge = disc_price * (1 + F.col("l_tax"))
+    # The four sums run over exact DECIMAL(15,2) operands (two-decimal
+    # money and quantities), so their 4-decimal rounding cannot depend
+    # on the order in which an engine adds the rows: float sums of the
+    # same rows differ between Spark and DuckDB in the last decimal on
+    # some inputs. Cast back to DOUBLE keeps the output schema.
+    def dec(c):
+        return F.col(c).cast("decimal(15,2)")
+
+    def rsum(e):
+        return F.round(F.sum(e), 4).cast("double")
+
+    disc_price = dec("l_extendedprice") * (1 - dec("l_discount"))
+    charge = disc_price * (1 + dec("l_tax"))
     return (
         li.where(F.col("l_shipdate") <= F.lit("2001-09-02").cast("timestamp"))
           .groupBy("l_returnflag", "l_linestatus")
-          .agg(F.round(F.sum("l_quantity"), 4).alias("sum_qty"),
-               F.round(F.sum("l_extendedprice"), 4).alias("sum_base_price"),
-               F.round(F.sum(disc_price), 4).alias("sum_disc_price"),
-               F.round(F.sum(charge), 4).alias("sum_charge"),
+          .agg(rsum(dec("l_quantity")).alias("sum_qty"),
+               rsum(dec("l_extendedprice")).alias("sum_base_price"),
+               rsum(disc_price).alias("sum_disc_price"),
+               rsum(charge).alias("sum_charge"),
                F.round(F.avg("l_quantity"), 4).alias("avg_qty"),
                F.round(F.avg("l_extendedprice"), 4).alias("avg_price"),
                F.round(F.avg("l_discount"), 4).alias("avg_disc"),
@@ -104,10 +115,14 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 Q1_SQL = """
 SELECT l_returnflag, l_linestatus,
-       round(sum(l_quantity), 4)                                            AS sum_qty,
-       round(sum(l_extendedprice), 4)                                       AS sum_base_price,
-       round(sum(l_extendedprice * (1 - l_discount)), 4)                    AS sum_disc_price,
-       round(sum(l_extendedprice * (1 - l_discount) * (1 + l_tax)), 4)      AS sum_charge,
+       CAST(round(sum(CAST(l_quantity AS DECIMAL(15,2))), 4) AS DOUBLE)      AS sum_qty,
+       CAST(round(sum(CAST(l_extendedprice AS DECIMAL(15,2))), 4) AS DOUBLE) AS sum_base_price,
+       CAST(round(sum(CAST(l_extendedprice AS DECIMAL(15,2))
+                      * (1 - CAST(l_discount AS DECIMAL(15,2)))), 4) AS DOUBLE)
+                                                                            AS sum_disc_price,
+       CAST(round(sum(CAST(l_extendedprice AS DECIMAL(15,2))
+                      * (1 - CAST(l_discount AS DECIMAL(15,2)))
+                      * (1 + CAST(l_tax AS DECIMAL(15,2)))), 4) AS DOUBLE)  AS sum_charge,
        round(avg(l_quantity), 4)                                            AS avg_qty,
        round(avg(l_extendedprice), 4)                                       AS avg_price,
        round(avg(l_discount), 4)                                            AS avg_disc,

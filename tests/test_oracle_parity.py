@@ -85,3 +85,28 @@ def test_registry_shape():
         assert not twice, (mod.__name__, sorted(twice))
         seen |= mod.QUERIES.keys()
     assert all(fn.__name__ == name for name, fn in ALL.items())
+
+
+def test_q1_sums_match_oracle_where_float_order_differs(spark, tmp_path):
+    """perfbench's generated sf0.1 ``lineitem`` of seed 15 puts a float
+    sum of ``sum_disc_price`` on a 4-decimal half-tick: summed as
+    doubles, Spark read 4876665430.7845 and DuckDB 4876665430.7844. The
+    decimal sums of q1 are exact in both engines."""
+    import importlib.util
+    import os
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    spec = importlib.util.spec_from_file_location(
+        "perfbench_datagen", os.path.join(root, "perfbench", "datagen.py"))
+    datagen = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(datagen)
+    import pyarrow.parquet as pq
+    pq.write_table(datagen.tables(15, 0.1)["lineitem"],
+                   tmp_path / "lineitem.parquet")
+    con = duckdb.connect()
+    con.execute("CREATE VIEW lineitem AS SELECT * FROM "
+                f"'{tmp_path}/lineitem.parquet'")
+    got = ALL["q1_pricing_summary"](spark, str(tmp_path)).toPandas()
+    _assert_frames_match("q1_pricing_summary", got,
+                         con.execute(ORACLES["q1_pricing_summary"]).df())
+    assert 4876665430.7845 in got["sum_disc_price"].tolist()
