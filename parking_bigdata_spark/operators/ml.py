@@ -22,6 +22,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from parking_bigdata_spark.io import local_df
 from parking_bigdata_spark.operators.stats import noise_floor
 
 
@@ -108,7 +109,7 @@ def ols_fit_df(df: DataFrame, xs: list[str], y: str,
     fit = ols_fit(df, xs, y)
     rows = [("intercept", round(fit["intercept"], round_to))]
     rows += [(f"coef_{c}", round(fit[f"coef_{c}"], round_to)) for c in xs]
-    return spark.createDataFrame(rows, "term string, estimate double")
+    return local_df(spark, rows, "term string, estimate double")
 
 
 def ridge_fit_df(df: DataFrame, xs: list[str], y: str, lam: float = 1.0,
@@ -131,7 +132,7 @@ def ridge_fit_df(df: DataFrame, xs: list[str], y: str, lam: float = 1.0,
     rows = [("intercept", round(float(beta[0]), round_to))]
     rows += [(f"coef_{c}", round(float(b), round_to))
              for c, b in zip(xs, beta[1:])]
-    return spark.createDataFrame(rows, "term string, estimate double")
+    return local_df(spark, rows, "term string, estimate double")
 
 
 def eval_metrics(df: DataFrame, y_true: str, y_pred, round_to: int = 4) -> DataFrame:
@@ -231,7 +232,8 @@ def pca_explained_variance(df: DataFrame, cols: list[str],
     total = float(vals.sum())
     rows = [(i + 1, round(float(v), round_to), round(float(v / total), round_to))
             for i, v in enumerate(vals)]
-    return spark.createDataFrame(
+    return local_df(
+        spark,
         rows, "component int, eigenvalue double, explained_ratio double")
 
 
@@ -315,7 +317,7 @@ def lasso_fit_df(df: DataFrame, xs: list[str], y: str, lam: float = 0.1,
     fit = lasso_fit(df, xs, y, lam)
     rows = [("intercept", round(fit["intercept"], round_to))]
     rows += [(f"coef_{c}", round(fit[f"coef_{c}"], round_to)) for c in xs]
-    return spark.createDataFrame(rows, "term string, estimate double")
+    return local_df(spark, rows, "term string, estimate double")
 
 
 def stepwise_aic(df: DataFrame, xs: list[str], y: str) -> DataFrame:
@@ -377,8 +379,8 @@ def stepwise_aic(df: DataFrame, xs: list[str], y: str) -> DataFrame:
     history.append((f"selected:{selected}",
                     round(a_sel, 4) if a_sel is not None else None,
                     len(current)))
-    return spark.createDataFrame(
-        history, "step string, aic double, n_features int")
+    return local_df(
+        spark, history, "step string, aic double, n_features int")
 
 
 def random_forest_importance(df: DataFrame, xs: list[str], y: str,
@@ -405,7 +407,8 @@ def random_forest_importance(df: DataFrame, xs: list[str], y: str,
         featureSubsetStrategy=feature_subset,
     ).fit(vec.transform(data))
     imps = model.featureImportances.toArray()
-    return spark.createDataFrame(
+    return local_df(
+        spark,
         [(c, round(float(v), round_to)) for c, v in zip(xs, imps)],
         "feature string, importance double")
 
@@ -432,7 +435,7 @@ def vif_scores(df: DataFrame, cols: list[str], round_to: int = 4) -> DataFrame:
         r2 = 1.0 - sse / sst
         vif = 1.0 / (1.0 - r2) if r2 < 1.0 else float("inf")
         out.append((c, round(float(r2), round_to), round(float(vif), round_to)))
-    return spark.createDataFrame(out, "feature string, r2 double, vif double")
+    return local_df(spark, out, "feature string, r2 double, vif double")
 
 
 def logreg_irls(df: DataFrame, xs: list[str], y: str,
@@ -495,7 +498,7 @@ def logreg_irls(df: DataFrame, xs: list[str], y: str,
     rows = [("intercept", round(float(beta[0]), round_to))]
     rows += [(f"coef_{c}", round(float(b), round_to))
              for c, b in zip(xs, beta[1:])]
-    return spark.createDataFrame(rows, "term string, estimate double")
+    return local_df(spark, rows, "term string, estimate double")
 
 
 def kmeans_lloyd(df: DataFrame, vec_col: str = "embedding",
@@ -576,8 +579,8 @@ def kmeans_lloyd(df: DataFrame, vec_col: str = "embedding",
             counts[r["cell"]] = r["s"]
     rows = [(int(c), int(n), round(float(s), round_to))
             for c, n, s in zip(range(k), counts, sse)]
-    return spark.createDataFrame(rows,
-                                 "cluster int, n_points long, inertia double")
+    return local_df(spark, rows,
+                    "cluster int, n_points long, inertia double")
 
 
 def kfold_cv_simple_linreg(df: DataFrame, x: str, y: str,
@@ -672,7 +675,8 @@ def gbt_importance(df: DataFrame, xs: list[str], y: str,
         maxDepth=max_depth, seed=seed, stepSize=0.1,
     ).fit(vec.transform(data))
     imps = model.featureImportances.toArray()
-    return spark.createDataFrame(
+    return local_df(
+        spark,
         [(c, round(float(v), round_to)) for c, v in zip(xs, imps)],
         "feature string, importance double")
 
@@ -690,7 +694,8 @@ def _irls_line(df: DataFrame, x: str, y: str, make_weight,
     d = df.where(F.col(x).isNotNull() & F.col(y).isNotNull()).persist()
     if d.limit(2).count() < 2:  # a line needs two points
         d.unpersist()
-        return spark.createDataFrame(
+        return local_df(
+            spark,
             [("intercept", None), (f"coef_{x}", None)],
             "term string, estimate double")
     b0 = b1 = None
@@ -705,14 +710,16 @@ def _irls_line(df: DataFrame, x: str, y: str, make_weight,
         denom = row.sw * row.swxx - row.swx * row.swx
         if denom == 0.0:  # constant-x input: match the oracle's NULL
             d.unpersist()  # propagation instead of ZeroDivisionError
-            return spark.createDataFrame(
+            return local_df(
+                spark,
                 [("intercept", None), (f"coef_{x}", None)],
                 "term string, estimate double")
         slope = (row.sw * row.swxy - row.swx * row.swy) / denom
         b1 = round(slope, 6)
         b0 = round((row.swy - b1 * row.swx) / row.sw, 6)
     d.unpersist()
-    return spark.createDataFrame(
+    return local_df(
+        spark,
         [("intercept", round(b0, round_to)),
          (f"coef_{x}", round(b1, round_to))],
         "term string, estimate double")
@@ -774,7 +781,7 @@ def poisson_glm_df(df: DataFrame, xs: list[str], y: str, n_iter: int = 3,
     ybar = d.agg(F.avg(y).alias("m")).collect()[0]["m"]
     if ybar is None or ybar <= 0:  # empty input or degenerate counts
         rows = [("intercept", None)] + [(f"coef_{c}", None) for c in xs]
-        return spark.createDataFrame(rows, "term string, estimate double")
+        return local_df(spark, rows, "term string, estimate double")
     beta = [round(float(np.log(ybar)), 6)] + [0.0] * (k - 1)
     for _ in range(n_iter):
         eta = F.lit(beta[0])
@@ -802,12 +809,12 @@ def poisson_glm_df(df: DataFrame, xs: list[str], y: str, n_iter: int = 3,
             # divides by a zero determinant and yields NULL — mirror it
             rows = ([("intercept", None)]
                     + [(f"coef_{c}", None) for c in xs])
-            return spark.createDataFrame(
-                rows, "term string, estimate double")
+            return local_df(
+                spark, rows, "term string, estimate double")
     rows = [("intercept", round(beta[0], round_to))]
     rows += [(f"coef_{c}", round(b, round_to))
              for c, b in zip(xs, beta[1:])]
-    return spark.createDataFrame(rows, "term string, estimate double")
+    return local_df(spark, rows, "term string, estimate double")
 
 
 def lsa_singular_values(df: DataFrame, text_col: str = "text",
@@ -871,8 +878,8 @@ def lsa_singular_values(df: DataFrame, text_col: str = "text",
     rows = [(i + 1, round(float(s), round_to),
              round(float(s) / tot, round_to))
             for i, s in enumerate(sv[:top_k])]
-    return spark.createDataFrame(
-        rows, "rank int, singular_value double, explained_ratio double")
+    return local_df(
+        spark, rows, "rank int, singular_value double, explained_ratio double")
 
 
 def gmm_em_1d(df: DataFrame, x: str, n_iter: int = 3,
@@ -897,7 +904,8 @@ def gmm_em_1d(df: DataFrame, x: str, n_iter: int = 3,
     if not base.n or base.s is None or base.s == 0:
         d.unpersist()
         rows = [(k, None, None, None) for k in (1, 2)]
-        return spark.createDataFrame(
+        return local_df(
+            spark,
             rows, "component int, weight double, mean double, std double")
     p1 = 0.5
     mu1, mu2 = round(base.m - base.s, 6), round(base.m + base.s, 6)
@@ -926,7 +934,8 @@ def gmm_em_1d(df: DataFrame, x: str, n_iter: int = 3,
             # CTE would propagate NULL; mirror it instead of raising
             d.unpersist()
             rows = [(k, None, None, None) for k in (1, 2)]
-            return spark.createDataFrame(
+            return local_df(
+                spark,
                 rows,
                 "component int, weight double, mean double, std double")
         p1 = round(row.sr / row.n, 6)
@@ -941,8 +950,8 @@ def gmm_em_1d(df: DataFrame, x: str, n_iter: int = 3,
              round(s1, round_to)),
             (2, round(1.0 - p1, round_to), round(mu2, round_to),
              round(s2, round_to))]
-    return spark.createDataFrame(
-        rows, "component int, weight double, mean double, std double")
+    return local_df(
+        spark, rows, "component int, weight double, mean double, std double")
 
 
 def lda_two_class_df(df: DataFrame, xs: list[str], label: str,
@@ -981,7 +990,8 @@ def lda_two_class_df(df: DataFrame, xs: list[str], label: str,
     # undefined) mirrors the oracle's NULL propagation — same contract
     # as _irls_line / poisson_glm_df / gmm_em_1d
     if not na or not nb or (na + nb) <= 2:
-        return spark.createDataFrame(
+        return local_df(
+            spark,
             [(float(na or 0), float(nb or 0), *([None] * (k + 1)))], schema)
     import numpy as np
     Sw = np.zeros((k, k))
@@ -998,11 +1008,12 @@ def lda_two_class_df(df: DataFrame, xs: list[str], label: str,
     except np.linalg.LinAlgError:
         # singular within-class scatter (constant/collinear features):
         # NULL-valued direction, counts still reported
-        return spark.createDataFrame(
-            [(float(na), float(nb), *([None] * (k + 1)))], schema)
+        return local_df(
+            spark, [(float(na), float(nb), *([None] * (k + 1)))], schema)
     sep = float(np.sqrt(w @ dvec))
     wn = w / np.linalg.norm(w)
-    return spark.createDataFrame(
+    return local_df(
+        spark,
         [(float(na), float(nb),
           *[round(float(v), round_to) for v in wn],
           round(sep, 4))], schema)

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from parking_bigdata_spark.io import local_df
+
 
 def describe_table(df: DataFrame, cols: list[str], round_to: int = 4,
                    quartiles: bool = False) -> DataFrame:
@@ -160,5 +162,5 @@ def validate(df: DataFrame, rules: list[tuple[str, "F.Column"]],
                - df.select(*keys).distinct().count())
         out.append(("unique_" + "_".join(keys), dup, int(row["__n"])))
     spark = df.sparkSession
-    return spark.createDataFrame(
-        out, "rule string, n_violations long, n_rows long")
+    return local_df(
+        spark, out, "rule string, n_violations long, n_rows long")

@@ -14,6 +14,8 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from parking_bigdata_spark.io import local_df
+
 
 def _as_double(col) -> F.Column:
     return F.transform(col, lambda x: x.cast("double"))
@@ -184,7 +186,7 @@ def cosine_topk(df: DataFrame, query_df: DataFrame, k: int = 5,
     out_schema = (f"query_id {id_type}, cand_id {id_type}, "
                   "score double")
     if len(qpdf) == 0:
-        return spark.createDataFrame([], out_schema + ", rank int")
+        return local_df(spark, [], out_schema + ", rank int")
     Qm = np.stack(qpdf["qv"].to_numpy())
     # zero-norm queries are excluded (cosine undefined — _unit_nonzero)
     Qm, qok = _unit_nonzero(Qm)
@@ -256,8 +258,8 @@ def embedding_near_dup_pairs(df: DataFrame, threshold: float = 0.4,
     id_type = dict(df.dtypes)[id_col]
     pdf = src.toPandas()
     if len(pdf) == 0:
-        return spark.createDataFrame(
-            [], f"id_a {id_type}, id_b {id_type}, cosine double")
+        return local_df(
+            spark, [], f"id_a {id_type}, id_b {id_type}, cosine double")
     B = np.stack(pdf["__v"].to_numpy())
     # zero-norm rows excluded (cosine undefined — _unit_nonzero)
     B, bok = _unit_nonzero(B)
@@ -488,7 +490,8 @@ def ivf_topk(df: DataFrame, query_df: DataFrame, k: int = 5,
     from pyspark.sql import Window
     centroids = ivf_fit_centroids(df, n_cells, seed, vec_col)
     spark = df.sparkSession
-    cents = spark.createDataFrame(
+    cents = local_df(
+        spark,
         [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
         "cell int, centroid array<double>")
     corpus = ivf_assign(df, centroids, id_col, vec_col)
@@ -632,7 +635,8 @@ def semdedup(df: DataFrame, n_cells: int = 16, threshold: float = 0.4,
     import pandas as pd
     id_type = dict(df.dtypes)[id_col]
     if df.limit(2).count() < 2:  # nothing to deduplicate against
-        return df.sparkSession.createDataFrame(
+        return local_df(
+            df.sparkSession,
             [], f"{id_col} {id_type}, keep_id {id_type}, cosine double")
     C = ivf_fit_centroids(df, n_cells=n_cells, seed=seed, vec_col=vec_col)
     assigned = ivf_assign(df.select(id_col, vec_col), C,

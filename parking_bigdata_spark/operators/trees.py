@@ -56,6 +56,8 @@ from fractions import Fraction
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from parking_bigdata_spark.io import local_df
+
 # Poisson(1) inverse CDF on a 1e6 integer grid: P(X<=k)·1e6, exact
 # thresholds so every engine run derives identical weights.
 _POISSON_CDF_1E6 = [367879, 735759, 919699, 981012, 996340, 999406,
@@ -480,8 +482,8 @@ def fit_gbt(df: DataFrame, xs: list[str], y: str, *, n_trees: int = 5,
 
 
 def importance_df(model: ForestModel, spark) -> DataFrame:
-    return spark.createDataFrame(
-        model.importances(), "feature string, importance double")
+    return local_df(
+        spark, model.importances(), "feature string, importance double")
 
 
 def score_df(model: ForestModel, df: DataFrame, key_cols: list[str],

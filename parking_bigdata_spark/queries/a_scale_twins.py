@@ -38,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..io import load_table
+from ..io import load_table, local_df
 from ..operators import stats
 
 #: One grid constant for the whole family — 256 edges hold every
@@ -86,7 +86,7 @@ def spearman_approx_qty_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     mm = d.agg(F.min("x").alias("xmn"), F.max("x").alias("xmx"),
                F.min("y").alias("ymn"), F.max("y").alias("ymx"))
     # 1-row frame feeding the bin join — materialize once
-    mm = spark.createDataFrame(mm.collect(), schema=mm.schema)
+    mm = local_df(spark, mm.collect(), mm.schema)
     j = d.crossJoin(F.broadcast(mm))
     bx = _bucket_expr(F.col("x"), F.col("xmn"), F.col("xmx"), G)
     by = _bucket_expr(F.col("y"), F.col("ymn"), F.col("ymx"), G)
@@ -188,7 +188,7 @@ def _roc_grid(d: DataFrame, G: int) -> DataFrame:
     (tests/test_round6.py randomized containment tests)."""
     spark = d.sparkSession
     mm = d.agg(F.min("v").alias("mn"), F.max("v").alias("mx"))
-    mm = spark.createDataFrame(mm.collect(), schema=mm.schema)
+    mm = local_df(spark, mm.collect(), mm.schema)
     j = d.crossJoin(F.broadcast(mm))
     b = _bucket_expr(F.col("v"), F.col("mn"), F.col("mx"), G)
     cells = (j.groupBy(b.alias("__gbkt"))
@@ -281,7 +281,7 @@ def kruskal_approx_acctbal_by_segment(spark: SparkSession,
                     F.col("c_acctbal").cast("double").alias("v"))
             .where(F.col("v").isNotNull()))
     mm = cust.agg(F.min("v").alias("mn"), F.max("v").alias("mx"))
-    mm = spark.createDataFrame(mm.collect(), schema=mm.schema)
+    mm = local_df(spark, mm.collect(), mm.schema)
     j = cust.crossJoin(F.broadcast(mm))
     b = _bucket_expr(F.col("v"), F.col("mn"), F.col("mx"), G)
     cells = (j.groupBy("c_mktsegment", b.alias("__gbkt"))
@@ -368,7 +368,7 @@ def _mw_grid(d: DataFrame, G: int, n1_alias: str = "n1",
     on coarse grids (tests/test_round6.py)."""
     spark = d.sparkSession
     mm = d.agg(F.min("v").alias("mn"), F.max("v").alias("mx"))
-    mm = spark.createDataFrame(mm.collect(), schema=mm.schema)
+    mm = local_df(spark, mm.collect(), mm.schema)
     j = d.crossJoin(F.broadcast(mm))
     b = _bucket_expr(F.col("v"), F.col("mn"), F.col("mx"), G)
     cells = (j.groupBy(b.alias("__gbkt"))
@@ -474,7 +474,7 @@ def gini_approx_acctbal_by_segment(spark: SparkSession,
                     F.col("c_acctbal").cast("double").alias("v"))
             .where(F.col("v") > 0))
     mm = cust.agg(F.min("v").alias("mn"), F.max("v").alias("mx"))
-    mm = spark.createDataFrame(mm.collect(), schema=mm.schema)
+    mm = local_df(spark, mm.collect(), mm.schema)
     j = cust.crossJoin(F.broadcast(mm))
     b = _bucket_expr(F.col("v"), F.col("mn"), F.col("mx"), G)
     cells = (j.groupBy("c_mktsegment", b.alias("__gbkt"))
@@ -609,7 +609,7 @@ def pr_auc_approx_order_status(spark: SparkSession,
     d = o.select((F.col("o_orderstatus") == "P").cast("long").alias("pos"),
                  F.col("o_totalprice").cast("double").alias("v"))
     mm = d.agg(F.min("v").alias("mn"), F.max("v").alias("mx"))
-    mm = spark.createDataFrame(mm.collect(), schema=mm.schema)
+    mm = local_df(spark, mm.collect(), mm.schema)
     j = d.crossJoin(F.broadcast(mm))
     b = _bucket_expr(F.col("v"), F.col("mn"), F.col("mx"), G)
     cells = (j.groupBy(b.alias("__gbkt"))
@@ -678,7 +678,7 @@ def dunn_approx_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer").select(
         "c_mktsegment", F.col("c_acctbal").cast("double").alias("v"))
     mm = cust.agg(F.min("v").alias("mn"), F.max("v").alias("mx"))
-    mm = spark.createDataFrame(mm.collect(), schema=mm.schema)
+    mm = local_df(spark, mm.collect(), mm.schema)
     j = cust.crossJoin(F.broadcast(mm))
     b = _bucket_expr(F.col("v"), F.col("mn"), F.col("mx"), G)
     cells = (j.groupBy("c_mktsegment", b.alias("__gbkt"))
@@ -782,7 +782,7 @@ def _wilcoxon_grid(pairs: DataFrame, G: int) -> DataFrame:
     to exact)."""
     spark = pairs.sparkSession
     mm = pairs.agg(F.min("ad").alias("mn"), F.max("ad").alias("mx"))
-    mm = spark.createDataFrame(mm.collect(), schema=mm.schema)
+    mm = local_df(spark, mm.collect(), mm.schema)
     j = pairs.crossJoin(F.broadcast(mm))
     b = _bucket_expr(F.col("ad"), F.col("mn"), F.col("mx"), G)
     cells = (j.groupBy(b.alias("__gbkt"))
@@ -1104,7 +1104,8 @@ def quantile_summary_approx_detail(spark: SparkSession,
                         F.count("v").alias("n")).collect())
     nmin = min((r["n"] for r in mm_rows), default=0)
     eps = _probe_eps(proj, "o_orderpriority", nmin=nmin)
-    mm = spark.createDataFrame(
+    mm = local_df(
+        spark,
         [(r["o_orderpriority"], r["lo"], r["hi"]) for r in mm_rows],
         "o_orderpriority string, lo double, hi double")
     q = stats.grouped_quantiles_approx(

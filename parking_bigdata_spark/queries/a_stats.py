@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import oracles
-from ..io import clean_sentinel_numeric, load_table
+from ..io import clean_sentinel_numeric, load_table, local_df
 from ..operators import clean, features, ml, profile, stats, temporal
 from ..operators import dedup as dedup_ops
 from ..operators import trees as trees_ops
@@ -1030,7 +1030,7 @@ def _ks_grid(d: DataFrame, G: int, n1_alias: str = "n1",
                F.sum("i1").alias("t1"),
                F.sum(1 - F.col("i1")).alias("t2"))
     # 1-row frame feeding two consumers — materialize once
-    mm = spark.createDataFrame(mm.collect(), schema=mm.schema)
+    mm = local_df(spark, mm.collect(), mm.schema)
     j = d.crossJoin(F.broadcast(mm))
     raw = F.floor((F.col("v") - F.col("mn"))
                   / (F.col("mx") - F.col("mn")) * G)

@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import oracles
-from ..io import clean_sentinel_numeric, load_table
+from ..io import clean_sentinel_numeric, load_table, local_df
 from ..operators import clean, features, ml, profile, stats, temporal
 from ..operators import dedup as dedup_ops
 from ..operators import trees as trees_ops
@@ -474,7 +474,7 @@ def _catalog_pool_rows(spark: SparkSession, sf_dir: str, batch_fn,
         per_batch = list(pool.map(
             lambda tb: batch_fn(dfs[tb[0]], tb[0], tb[1]), jobs))
     rows = [row for batch in per_batch for row in batch]
-    return spark.createDataFrame(rows, schema)
+    return local_df(spark, rows, schema)
 
 
 def _catalog_profile_rows(spark: SparkSession, sf_dir: str,
@@ -1063,7 +1063,8 @@ def fisher_exact_2x2(spark: SparkSession, sf_dir: str) -> DataFrame:
                                         min(r1, c1) + 1)
             if (lp := logp(k)) <= lp_obs + 1e-7)
     odds = (a * d) / (b * cc) if b * cc else float("inf")
-    return spark.createDataFrame(
+    return local_df(
+        spark,
         [(a, b, cc, d, round(odds, 4), round(min(p, 1.0), 6))],
         "n_11 long, n_12 long, n_21 long, n_22 long, "
         "odds_ratio double, p_two_sided double")
@@ -1522,8 +1523,8 @@ def partial_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
             out.append((cols[i], cols[j], pc))
     # final rounding via Spark's HALF_UP round (Python round is
     # banker's — would drift from the oracle on exact halves)
-    return (spark.createDataFrame(
-        out, "col_x string, col_y string, pc double")
+    return (local_df(
+        spark, out, "col_x string, col_y string, pc double")
         .select("col_x", "col_y",
                 F.round("pc", 4).alias("partial_corr")))
 
@@ -1957,7 +1958,7 @@ def qq_deciles_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
              float(hi[f"d{i}"]) if hi is not None else None,
              float(lo[f"d{i}"]) if lo is not None else None)
             for i in range(1, 10)]
-    return (spark.createDataFrame(rows, "decile int, h double, l double")
+    return (local_df(spark, rows, "decile int, h double, l double")
             .select("decile",
                     F.round("h", 4).alias("urgent_value"),
                     F.round("l", 4).alias("low_value"),
@@ -2144,7 +2145,8 @@ def gamma_mom_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     else:
         k = mll = None
         theta = (float(r["v"]) / float(r["m"])) if n else None
-    return (spark.createDataFrame(
+    return (local_df(
+        spark,
         [(n, k, theta, mll)],
         "n long, shape_k double, scale_theta double, mean_loglik double")
         .select("n", F.round("shape_k", 6).alias("shape_k"),

@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import oracles
-from ..io import load_table
+from ..io import load_table, local_df
 from ..operators import ml, stats
 from .a_core import _expected_sql
 
@@ -585,7 +585,7 @@ def ad_ksample_approx_priority(spark: SparkSession,
                  F.col("o_totalprice").cast("double").alias("v"))
     mm = d.agg(F.min("v").alias("mn"), F.max("v").alias("mx"))
     # 1-row frame feeding the bin join — materialize once
-    mm = spark.createDataFrame(mm.collect(), schema=mm.schema)
+    mm = local_df(spark, mm.collect(), mm.schema)
     j = d.crossJoin(F.broadcast(mm))
     raw = F.floor((F.col("v") - F.col("mn"))
                   / (F.col("mx") - F.col("mn")) * G)
@@ -1766,8 +1766,8 @@ def median_ci_order_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not n:
         # empty / all-NULL input: the hardened NULL-row contract the
         # approx twin already follows (n=0, NULL statistics)
-        return spark.createDataFrame(
-            [(0, None, None, None, None, None)], schema)
+        return local_df(
+            spark, [(0, None, None, None, None, None)], schema)
     z = 1.959964
     lo = int(math.floor(n / 2.0 - z * math.sqrt(n) / 2.0))
     hi = int(math.ceil(1 + n / 2.0 + z * math.sqrt(n) / 2.0))
@@ -1785,7 +1785,8 @@ def median_ci_order_value(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min(F.when(F.col("cum_t") >= med_k2, F.col("v"))).alias("m2"),
     ).collect()[0]
     row_lo, row_hi, m1, m2 = r4["lo"], r4["hi"], r4["m1"], r4["m2"]
-    return spark.createDataFrame(
+    return local_df(
+        spark,
         [(int(n), round((m1 + m2) / 2.0, 4), int(lo), int(hi),
           round(row_lo, 4), round(row_hi, 4))], schema)
 
@@ -1850,15 +1851,16 @@ def median_ci_approx_order_value_detail(spark: SparkSession,
         # empty-input hardening: degrade to a one-row all-NULL frame
         # (same NULL-propagation contract as the exact A159 and
         # lda_two_class_df) instead of dividing by n below
-        return spark.createDataFrame(
-            [(0, None, None, None, None, None, acc)], schema)
+        return local_df(
+            spark, [(0, None, None, None, None, None, acc)], schema)
     z = 1.959964
     lo = max(int(math.floor(n / 2.0 - z * math.sqrt(n) / 2.0)), 1)
     hi = min(int(math.ceil(1 + n / 2.0 + z * math.sqrt(n) / 2.0)), n)
     fracs = [lo / n, 0.5, hi / n]
     row = d.agg(F.percentile_approx("v", fracs, acc).alias("q")) \
            .collect()[0]["q"]
-    return spark.createDataFrame(
+    return local_df(
+        spark,
         [(int(n), round(row[1], 4), int(lo), int(hi),
           round(row[0], 4), round(row[2], 4), acc)], schema)
 
@@ -1887,14 +1889,16 @@ def median_ci_approx_order_value(spark: SparkSession, sf_dir: str, *,
     # exact median_ci_order_value raises on n=0 (math.floor(None/2)),
     # so gate on the detail's hardened n — same NULL-row contract
     if not ap["n"]:
-        return spark.createDataFrame(
+        return local_df(
+            spark,
             [(0, None, None, None, None, None, None, None,
               ap["accuracy"])], schema)
     ex = median_ci_order_value(spark, sf_dir).collect()[0]
     in_ci = bool(ex["ci_lo"] <= ap["median_approx"] <= ex["ci_hi"])
     brackets = bool(ap["ci_lo_approx"] <= ex["median"]
                     <= ap["ci_hi_approx"])
-    return spark.createDataFrame(
+    return local_df(
+        spark,
         [(int(ex["n"]), int(ex["rank_lo"]), int(ex["rank_hi"]),
           float(ex["median"]), float(ex["ci_lo"]), float(ex["ci_hi"]),
           in_ci, brackets, int(ap["accuracy"]))], schema)

@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..io import load_table
+from ..io import load_table, local_df
 from ..operators import dedup as dedup_ops
 from ..operators import stats
 from ..operators import text as text_ops
@@ -1117,7 +1117,8 @@ def embedding_effective_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # participation ratio is undefined => NULL, never a driver-side
     # ZeroDivisionError
     pr = round(tr * tr / fro2, 4) if fro2 > 0 else None
-    return spark.createDataFrame(
+    return local_df(
+        spark,
         [(int(n), d, round(tr, 6), round(fro2, 6), pr)],
         "n_vectors long, dim int, trace_cov double, "
         "frobenius_sq double, effective_rank_pr double")

@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import oracles
-from ..io import clean_sentinel_numeric, load_table
+from ..io import clean_sentinel_numeric, load_table, local_df
 from ..operators import clean, features, ml, profile, stats, temporal
 from ..operators import dedup as dedup_ops
 from ..operators import trees as trees_ops
@@ -996,11 +996,12 @@ def user_path_patterns(spark: SparkSession, sf_dir: str) -> DataFrame:
                        F.array_sort(F.collect_list(
                            F.struct("ts", "event_id", "event_type"))),
                        lambda x: x["event_type"]), ",").alias("path")))
-    pats = spark.createDataFrame(
+    pats = local_df(
+        spark,
         [("signup_then_purchase", "signup.*purchase"),
          ("purchase_then_error", "purchase.*error"),
          ("view_click_purchase", "view.*click.*purchase")],
-        ["pattern_name", "pat"])
+        "pattern_name string, pat string")
     return (paths.crossJoin(F.broadcast(pats))
             .groupBy("pattern_name")
             .agg(F.count(F.lit(1)).alias("n_users"),
@@ -1879,7 +1880,8 @@ def holt_linear_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     a, g = _HOLT_ALPHA, _HOLT_GAMMA
     if len(ys) < 2:  # trend needs two observations; mirror the
         # oracle's empty recursive-CTE result
-        return spark.createDataFrame(
+        return local_df(
+            spark,
             [], "n_days int, level double, trend double, "
                 "forecast_7d double")
     lvl, trd = ys[0], ys[1] - ys[0]
@@ -1888,7 +1890,8 @@ def holt_linear_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         lvl = a * y + (1 - a) * (lvl + trd)
         trd = g * (lvl - prev) + (1 - g) * trd
     fc7 = lvl + 7 * trd
-    return (spark.createDataFrame(
+    return (local_df(
+        spark,
         [(len(ys), lvl, trd, fc7)],
         "n_days int, level double, trend double, forecast_7d double")
         .select("n_days", F.round("level", 4).alias("level"),
@@ -2300,7 +2303,8 @@ def negbin_mom_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
                  for x_, t_ in ((int(r["x"]), int(r["t"])) for r in runs))
         row = (n, round(m, 4), round(v, 4), round(r_sz, 6), round(p, 6),
                round(ll / n, 6))
-    return spark.createDataFrame(
+    return local_df(
+        spark,
         [row], "n_days long, mean double, variance double, size_r double, "
                "prob_p double, mean_loglik double")
 

@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..io import load_table
+from ..io import load_table, local_df
 from ..operators import stats
 from .c_temporal import _daily_counts
 
@@ -998,7 +998,8 @@ def records_trend_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     var = h - h2
     z = (nr - h) / (var ** 0.5) if var > 0 else None
     spark_ = spark
-    return spark_.createDataFrame(
+    return local_df(
+        spark_,
         [(int(nd), int(nr), round(h, 4),
           round(z, 4) if z is not None else None)],
         "n_days long, n_records long, expected_records double, "
@@ -1384,8 +1385,8 @@ def generalized_esd_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
                      round(float(top["__z"]), 4)
                      if top["__z"] is not None else None))
         cur = cur.where(F.col("d") != int(top["d"]))
-    return spark.createDataFrame(
-        rows, "round int, day_index long, count long, r_stat double")
+    return local_df(
+        spark, rows, "round int, day_index long, count long, r_stat double")
 
 ESD_SQL = """
 WITH daily AS (

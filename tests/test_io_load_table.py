@@ -6,7 +6,6 @@ behaves exactly as a fresh ``spark.read.parquet``."""
 from __future__ import annotations
 
 import os
-import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -17,25 +16,13 @@ from pyspark.sql.types import TimestampType
 from parking_bigdata_spark import io
 
 
-def _jobs(spark, fn):
-    """(result of fn(), number of Spark jobs it ran)."""
-    sc = spark.sparkContext
-    group = f"load_table_test_{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc._jsc.clearJobGroup()
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_second_load_of_unchanged_table_runs_no_job(spark, sf_dir, tmp_path):
+def test_second_load_of_unchanged_table_runs_no_job(spark, count_jobs, sf_dir,
+                                                    tmp_path):
     pq.write_table(pq.read_table(f"{sf_dir}/orders.parquet"),
                    tmp_path / "orders.parquet")
-    first, n_first = _jobs(spark, lambda: io.load_table(
+    first, n_first = count_jobs(lambda: io.load_table(
         spark, str(tmp_path), "orders"))
-    second, n_second = _jobs(spark, lambda: io.load_table(
+    second, n_second = count_jobs(lambda: io.load_table(
         spark, str(tmp_path), "orders"))
     assert n_first >= 1      # the first load infers
     assert n_second == 0
@@ -44,9 +31,10 @@ def test_second_load_of_unchanged_table_runs_no_job(spark, sf_dir, tmp_path):
 
 
 @pytest.mark.parametrize("name", io.TABLES)
-def test_memoized_schema_equals_inferred_schema(spark, sf_dir, name):
+def test_memoized_schema_equals_inferred_schema(spark, count_jobs, sf_dir,
+                                                name):
     io.load_table(spark, sf_dir, name)
-    df, n_jobs = _jobs(spark, lambda: io.load_table(spark, sf_dir, name))
+    df, n_jobs = count_jobs(lambda: io.load_table(spark, sf_dir, name))
     assert n_jobs == 0
     # inferred under the confs load_table has just set
     raw = spark.read.parquet(f"{sf_dir}/{name}.parquet").schema
@@ -62,7 +50,8 @@ def test_memoized_schema_equals_inferred_schema(spark, sf_dir, name):
         assert df.schema == raw
 
 
-def test_nanosecond_events_ts_converts_on_a_memo_hit(spark, tmp_path):
+def test_nanosecond_events_ts_converts_on_a_memo_hit(spark, count_jobs,
+                                                     tmp_path):
     """TIMESTAMP(NANOS) ``ts`` is stored in the memo as the bigint Spark
     infers for it; a hit reads it with that schema and still converts."""
     ns = [1_700_000_000_123_456_789, 1_700_000_001_000_000_999]
@@ -70,7 +59,7 @@ def test_nanosecond_events_ts_converts_on_a_memo_hit(spark, tmp_path):
                              "ts": pa.array(ns, pa.timestamp("ns"))}),
                    tmp_path / "events.parquet")
     first = io.load_table(spark, str(tmp_path), "events")
-    second, n_jobs = _jobs(spark, lambda: io.load_table(
+    second, n_jobs = count_jobs(lambda: io.load_table(
         spark, str(tmp_path), "events"))
     assert n_jobs == 0
     assert second.schema["ts"].dataType == TimestampType()
@@ -115,12 +104,12 @@ def test_schema_affecting_conf_is_part_of_the_key(spark, tmp_path):
     assert df.schema["b"].dataType.simpleString() == "string"
 
 
-def test_uri_path_infers_on_every_call(spark, sf_dir, tmp_path):
+def test_uri_path_infers_on_every_call(spark, count_jobs, sf_dir, tmp_path):
     pq.write_table(pq.read_table(f"{sf_dir}/region.parquet"),
                    tmp_path / "region.parquet")
     uri = f"file://{tmp_path}"
     for _ in range(2):
-        df, n_jobs = _jobs(spark, lambda: io.load_table(spark, uri, "region"))
+        df, n_jobs = count_jobs(lambda: io.load_table(spark, uri, "region"))
         assert n_jobs >= 1
         assert df.count() == 5
     assert f"{uri}/region.parquet" not in io._SCHEMAS

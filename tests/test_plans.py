@@ -101,9 +101,27 @@ def test_rolling_and_cumsum_single_shuffle(spark, sf_dir):
         assert plan.count("Exchange") == 1, name
 
 
+def _scans_python_rdd(df) -> bool:
+    """Whether an RDD scan in ``df``'s plan (subqueries included) reads
+    an RDD of Python objects: the list form of ``createDataFrame``,
+    whose execution is a job through ``pyspark.daemon`` and forked
+    Python workers. An RDD scan of an eager (local) checkpoint is
+    fine: its lineage ends at the checkpoint, with no ``PythonRDD``."""
+    root = df._jdf.queryExecution().analyzed()
+    subs = root.subqueriesAll()
+    for plan in [root] + [subs.apply(i) for i in range(subs.size())]:
+        leaves = plan.collectLeaves()
+        for i in range(leaves.size()):
+            leaf = leaves.apply(i)
+            if (leaf.nodeName() == "LogicalRDD"
+                    and "PythonRDD" in leaf.rdd().toDebugString()):
+                return True
+    return False
+
+
 def test_plan_hygiene_all_queries(spark, sf_dir):
     """One pass over EVERY registry query's physical plan asserting the
-    two global hygiene rules:
+    three global hygiene rules:
 
     1. no row-at-a-time Python UDFs (Arrow mapInPandas is the only
        sanctioned Python path);
@@ -113,6 +131,10 @@ def test_plan_hygiene_all_queries(spark, sf_dir):
        tie_avg_ranks/range_cumsum construction) and (b) aggregated
        calendar series (weekly/daily keys — bounded by the calendar,
        not the data).
+    3. no scan of a Python-object RDD (``Scan ExistingRDD`` over a
+       ``PythonRDD``): driver-side rows become frames through
+       ``io.local_df`` as a ``LocalTableScan``, which starts no Python
+       worker.
     """
     import re
     # "decile": cumulative windows over a post-aggregation decile table
@@ -122,8 +144,12 @@ def test_plan_hygiene_all_queries(spark, sf_dir):
     # rows by construction — A18gb/A142b)
     allowed_global_order_cols = {"__pid", "wk", "d", "decile", "lag_k",
                                  "__gbkt"}
+    python_rdd = []
     for name in Q.queries():
-        plan = _plan(spark, sf_dir, name)
+        df = Q.queries()[name](spark, sf_dir)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        if _scans_python_rdd(df):
+            python_rdd.append(name)
         assert "BatchEvalPython" not in plan, f"{name} uses a Python UDF"
         for m in re.finditer(r"windowspecdefinition\(([^)]*)\)", plan):
             first = m.group(1).split(",")[0].strip()
@@ -131,6 +157,7 @@ def test_plan_hygiene_all_queries(spark, sf_dir):
                 col = re.split(r"[# ]", first)[0]
                 assert col in allowed_global_order_cols, (
                     f"{name}: data-sized global window over {first!r}")
+    assert python_rdd == [], f"Python-RDD scans in {python_rdd}"
 
 
 def test_sole_late_single_fact_shuffle(spark, sf_dir):
