@@ -8,6 +8,7 @@ parallelism). Nothing here is local-mode-specific except the master URL.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -22,6 +23,32 @@ def _half_mem_total() -> str:
     raise RuntimeError("MemTotal missing from /proc/meminfo")
 
 
+def _mem_bytes(mem: str) -> int:
+    """A memory string as ``spark.driver.memory`` reads it (``2g``,
+    ``7976m``, ``512mb``; a bare number is MiB) in bytes."""
+    m = re.fullmatch(r"(\d+)([kmgt]b?|b)?", mem.strip().lower())
+    if m is None:
+        raise ValueError(f"unreadable memory size {mem!r}")
+    return int(m[1]) << {"b": 0, "k": 10, "m": 20, "g": 30,
+                         "t": 40}[(m[2] or "m")[0]]
+
+
+def _page_size(driver_mem: str) -> str:
+    """Tungsten page size: the power of two at or above 1/8192 of the
+    driver heap (256 KB at 2 GB), so a task's 8192-entry page table
+    still addresses the whole heap.
+
+    Spark's default (execution memory / cores / 16, at least 1 MB:
+    16 MB at a 2 GB heap, 64 MB at 8 GB) is too coarse for the
+    pandas-UDF stages: every scalar ``pandas_udf`` task takes one whole
+    page as its input-row queue (``HybridRowQueue``), and Spark's
+    Python worker monitor thread, which polls every 2 s, keeps the
+    finished task's queue reachable for up to 2 s more. At 16 MB pages
+    that held 2 x 16 MB of heap after ``ann_ivf``'s scoring stage, and
+    when it was freed varied from run to run by up to those 2 s."""
+    return f"{1 << (_mem_bytes(driver_mem) // 8192 - 1).bit_length()}b"
+
+
 def get_spark(app_name: str = "parking_bigdata_spark",
               shuffle_partitions: int | None = None) -> SparkSession:
     """Build (or reuse) a SparkSession with scale-appropriate defaults.
@@ -32,10 +59,12 @@ def get_spark(app_name: str = "parking_bigdata_spark",
     - UTC session timezone: timestamp semantics match the DuckDB oracle.
     - Host-sized defaults: ``local[N]`` over the CPUs this process may
       run on and a driver heap of half of MemTotal, unless
-      ``SPARK_GRAFT_CPUS`` / ``SPARK_GRAFT_DRIVER_MEM`` say otherwise.
+      ``SPARK_GRAFT_CPUS`` / ``SPARK_GRAFT_DRIVER_MEM`` say otherwise,
+      and Tungsten pages of 1/8192 of that heap (``_page_size``).
     """
     cpus = (os.environ.get("SPARK_GRAFT_CPUS")
             or str(len(os.sched_getaffinity(0))))
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _half_mem_total()
     if shuffle_partitions is None:
         shuffle_partitions = max(int(cpus), 8)
     builder = (
@@ -74,8 +103,8 @@ def get_spark(app_name: str = "parking_bigdata_spark",
         # INT96 (the legacy default) writes NO column statistics, killing
         # min/max row-group pruning on timestamp sort keys at scale
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-        .config("spark.driver.memory",
-                os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _half_mem_total())
+        .config("spark.driver.memory", driver_mem)
+        .config("spark.buffer.pageSize", _page_size(driver_mem))
         .config("spark.ui.enabled", "false")
     )
     spark = builder.getOrCreate()
